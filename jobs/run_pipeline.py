@@ -39,7 +39,7 @@ def build_args():
     p.add_argument("--out", required=True, help="output directory (sinks + aggregates)")
     p.add_argument("--manifest", default=None, help="lineage manifest path (enables resume)")
     p.add_argument("--by-day", action="store_true", help="process per warc_ts day with lineage")
-    p.add_argument("--grok-backend", default="arrow", choices=["arrow", "pandas", "expr", "auto"])
+    p.add_argument("--grok-backend", default="arrow", choices=["arrow", "expr", "auto"])
     p.add_argument("--spec", default=None,
                    help="JSON pipeline spec (logstash_spark.spec) overriding the built-in pipeline")
     p.add_argument("--conf", default=None,

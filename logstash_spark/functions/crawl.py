@@ -5,10 +5,10 @@ cleaning or training, URLs are checked against each host's robots.txt.
 Semantics follow the public RFC 9309 (Robots Exclusion Protocol):
 
 - records group under one or more ``User-agent`` lines; the group for
-  the MOST SPECIFIC matching agent applies (r5: full RFC 9309 §2.2.1
-  ranking — a named token matches when it is a case-insensitive prefix
-  of the crawler's product token, the longest match wins, ``*`` only
-  when no named group matches);
+  the MOST SPECIFIC matching agent applies (RFC 9309-compatible,
+  Google-parser longest-prefix specificity — a named token matches when
+  it is a case-insensitive prefix of the crawler's product token, the
+  longest match wins, ``*`` only when no named group matches);
 - ``Allow``/``Disallow`` values are path prefixes; ``*`` matches any
   character sequence; an empty ``Disallow:`` permits everything (the
   rule is skipped);

@@ -369,7 +369,9 @@ def build_mp4(*, brand: str = "isom", timescale: int = 1000,
     traks = b""
 
     def trak(handler: bytes, fourcc: str, w: int = 0, h: int = 0) -> bytes:
-        tkhd = full(b"tkhd", 0, b"\x00" * 76
+        # ISO 14496-12 v0 tkhd: width/height at payload offset 72, after
+        # times, ids, layer/volume and the 36-byte matrix (an 80-byte payload)
+        tkhd = full(b"tkhd", 0, b"\x00" * 72
                     + struct.pack(">II", w << 16, h << 16))
         hdlr = full(b"hdlr", 0, b"\x00" * 4 + handler + b"\x00" * 13)
         entry = box(fourcc.encode("ascii"), b"\x00" * 8)

@@ -16,14 +16,16 @@ Spark design (NOT the reference's per-event Ruby regex loop):
 1. The pattern tree is expanded ONCE at plan-build time into a single flat
    regex with numbered groups (named groups are tracked positionally so the
    same compiled text works in Python `re`, Java regex, and RE2/DuckDB).
-2. Two physical backends:
+2. Two physical backends (``backend='auto'`` picks by capture count):
    - ``expr``  — pure JVM: one ``regexp_extract`` per capture group inside
      whole-stage codegen. Zero Python in the hot path; Catalyst CSE shares
      the match work. Best when capture count is small.
-   - ``pandas`` — one Arrow-batched ``pandas_udf`` doing a single
-     ``Series.str.extract`` pass (C-level vectorized), returning a struct.
-     Best for wide patterns (COMBINEDAPACHELOG: 11 captures = 1 pass
-     instead of 11 regex scans). Never row-at-a-time Python.
+   - ``arrow`` — one Arrow-batched UDF running RE2 (``pyarrow.compute``)
+     over the whole batch, returning a struct. Best for wide patterns
+     (COMBINEDAPACHELOG: 12 captures = 1 pass instead of 12 regex scans).
+     When ``compile_grok`` can prove it safe, the pass extracts with a
+     reduced *capture skeleton* and verifies it (``arrow_extract``).
+     Never row-at-a-time Python.
 At 100 TB both backends scale linearly with input partitions; there is no
 shuffle in a grok stage.
 """
@@ -31,6 +33,7 @@ shuffle in a grok stage.
 from __future__ import annotations
 
 import re
+import warnings
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -54,19 +57,26 @@ class CompiledGrok:
     RE2 / pyarrow ``extract_regex``); ``captures`` maps field name ->
     (1-based group index, type). Non-capture groups are ``(?:...)`` so group
     numbering is stable across engines.
+
+    ``skeleton`` is ``named_regex`` with some captures reduced to a
+    delimiter class, and ``checks`` holds ``(group index, anchored original
+    sub-pattern, reduced to '+')`` per reduced capture (see
+    ``_capture_skeleton``); ``skeleton`` is None when nothing reduces.
     """
 
     source: str
     regex: str
     named_regex: str = ""
     captures: list[tuple[str, int, str]] = field(default_factory=list)
+    skeleton: str | None = None
+    checks: tuple[tuple[int, str, bool], ...] = ()
 
     def python_re(self) -> "re.Pattern[str]":
         # re.ASCII: Python's \w/\b/\d/\s are UNICODE by default, but the
         # JVM expr backend, RE2 (arrow backend + the DuckDB oracles) and
         # Ruby's Oniguruma (the reference) all treat them as ASCII — a '¹'
-        # matched \w only on the pandas backend (hypothesis-found
-        # three-backend divergence)
+        # matched \w only under Unicode classes (hypothesis-found
+        # cross-engine divergence)
         return re.compile(self.regex, re.ASCII)
 
 
@@ -83,6 +93,7 @@ def compile_grok(pattern: str, extra_patterns: dict[str, str] | None = None) -> 
         lib.update(extra_patterns)
 
     captures: list[tuple[str, int, str]] = []
+    bodies: dict[int, str] = {}  # group index -> expanded sub-pattern text
     group_counter = [0]
 
     def raw(segment: str) -> str:
@@ -114,7 +125,8 @@ def compile_grok(pattern: str, extra_patterns: dict[str, str] | None = None) -> 
                 group_counter[0] += 1
                 idx = group_counter[0]
                 captures.append((fieldname, idx, typ or "string"))
-                out.append(f"(?P<c{idx}>" + expand(lib[name], depth + 1) + ")")
+                bodies[idx] = expand(lib[name], depth + 1)
+                out.append(f"(?P<c{idx}>{bodies[idx]})")
             else:
                 out.append("(?:" + expand(lib[name], depth + 1) + ")")
             pos = m.end()
@@ -123,7 +135,9 @@ def compile_grok(pattern: str, extra_patterns: dict[str, str] | None = None) -> 
 
     named = expand(pattern, 0)
     regex = re.sub(r"\(\?P<c\d+>", "(", named)
-    return CompiledGrok(source=pattern, regex=regex, named_regex=named, captures=captures)
+    skeleton, checks = _capture_skeleton(named, bodies)
+    return CompiledGrok(source=pattern, regex=regex, named_regex=named, captures=captures,
+                        skeleton=skeleton, checks=checks)
 
 
 def capture_groups(cg: CompiledGrok) -> dict[str, list[tuple[int, str]]]:
@@ -139,6 +153,172 @@ def capture_groups(cg: CompiledGrok) -> dict[str, list[tuple[int, str]]]:
 _PLAIN_GROUP = re.compile(r"(?<!\\)\((?!\?)")
 # (?<name>...) but NOT lookbehinds (?<= / (?<!
 _INLINE_NAMED = re.compile(r"(?<!\\)\(\?<(?![=!])([A-Za-z][\w@.\[\]]*)>")
+
+
+# ---------------------------------------------------------------------------
+# capture skeleton
+# ---------------------------------------------------------------------------
+
+try:
+    from re import _constants as _sc, _parser as _sp
+except ImportError:  # Python < 3.11
+    import sre_constants as _sc
+    import sre_parse as _sp
+
+
+class _Unsafe(Exception):
+    """The pattern holds a construct the skeleton analysis does not model."""
+
+
+# Membership of a printable-ASCII char in each class; \s is only ' ' there,
+# and every engine (Python re, RE2, Java) agrees on ASCII \d and \w.
+_CATEGORY = {
+    _sc.CATEGORY_DIGIT: str.isdigit,
+    _sc.CATEGORY_NOT_DIGIT: lambda c: not c.isdigit(),
+    _sc.CATEGORY_SPACE: lambda c: c == " ",
+    _sc.CATEGORY_NOT_SPACE: lambda c: c != " ",
+    _sc.CATEGORY_WORD: lambda c: c.isalnum() or c == "_",
+    _sc.CATEGORY_NOT_WORD: lambda c: not (c.isalnum() or c == "_"),
+}
+
+
+def _capture_skeleton(
+    named: str, bodies: dict[int, str]
+) -> tuple[str | None, tuple[tuple[int, str, bool], ...]]:
+    """Reduce the captures a following literal delimits to ``[^d]+``.
+
+    Rule: a capture ``(?P<cN>A)`` reduces when every path that leaves it
+    next matches the literal ``d`` (a printable ASCII char), ``A`` can never
+    produce ``d`` (judged from its ``sre_parse`` tree), ``A`` holds no
+    capture, no assertion and no word boundary at its edges, and the
+    capture sits in no loop that can run twice. Its body becomes
+    ``[^d]+`` (``[^d]*`` if ``A`` can be empty); the rest of the regex is
+    kept verbatim, alternation order included. Anything the analysis does
+    not model (flags, lookaround, back-references, syntax Python parses
+    differently from RE2) leaves the pattern unreduced.
+
+    Soundness (the skeleton S vs the full regex R, leftmost-first):
+    since ``A`` cannot produce ``d`` and ``d`` must come next, ``A`` can
+    only end at the first ``d`` after its start -- and so must ``[^d]+``.
+    Every choice outside the reduced captures is therefore explored in the
+    same order by R and S, and at each capture the span is the same; S
+    accepts a path whenever R does (``[^d]+`` accepts a superset of ``A``
+    there), and R accepts it exactly when each reduced span it went
+    through is in ``A``. So S rejects every row R rejects, and if S's first
+    accepted path has every reduced span matching ``^(?:A)$`` (the
+    ``checks``; a DFA-only match), it is R's first accepted path: same
+    start, same captures. Rows whose check fails are re-extracted with R.
+    """
+    if "{," in named:  # RE2 reads `x{,n}` as literal text, Python as a repeat
+        return None, ()
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")  # e.g. nested-set POSIX classes
+            tree = _sp.parse(named)
+        st = tree.state
+        if st.flags & ~_sc.SRE_FLAG_UNICODE or st.groupdict != {
+            f"c{i}": i for i in range(1, st.groups)
+        }:
+            return None, ()
+        follow: dict[int, int | None] = {}
+        _followers(tree.data, None, False, follow)
+    except (re.error, Warning, _Unsafe):
+        return None, ()
+
+    skeleton, checks = named, []
+    for idx, body in bodies.items():
+        d = follow.get(idx)
+        if d is None or not 0x20 <= d < 0x7F:
+            continue
+        sub = _sp.parse(body)
+        if not _excludes(sub.data, chr(d), 0, 0):
+            continue
+        plus = sub.getwidth()[0] > 0
+        skeleton = skeleton.replace(
+            f"(?P<c{idx}>{body})", f"(?P<c{idx}>[^\\x{d:02x}]{'+' if plus else '*'})", 1
+        )
+        checks.append((idx, f"^(?:{body})$", plus))
+    return (skeleton, tuple(checks)) if checks else (None, ())
+
+
+def _first_literal(rest: list, cont: int | None) -> int | None:
+    """The literal every path through ``rest`` (then ``cont``) matches first."""
+    if not rest:
+        return cont
+    op, av = rest[0]
+    if op is _sc.LITERAL:
+        return av
+    if op is _sc.SUBPATTERN:
+        return _first_literal([*av[3], *rest[1:]], cont)
+    return None
+
+
+def _followers(items: list, cont: int | None, loop: bool, out: dict) -> None:
+    """Map each capture group to the literal that must follow it (None if
+    unknown, or if the capture sits in a loop that may run twice)."""
+    for i, (op, av) in enumerate(items):
+        nxt = _first_literal(items[i + 1 :], cont)
+        if op is _sc.SUBPATTERN:
+            group, add_flags, del_flags, sub = av
+            if add_flags or del_flags:
+                raise _Unsafe
+            if group is not None:
+                out[group] = None if loop else nxt
+            _followers(sub, nxt, loop, out)
+        elif op is _sc.BRANCH:
+            for alt in av[1]:
+                _followers(alt, nxt, loop, out)
+        elif op in (_sc.MAX_REPEAT, _sc.MIN_REPEAT):
+            _lo, hi, sub = av
+            _followers(sub, nxt if hi == 1 else None, loop or hi > 1, out)
+        elif op not in (_sc.LITERAL, _sc.NOT_LITERAL, _sc.IN, _sc.ANY, _sc.AT):
+            raise _Unsafe
+
+
+def _excludes(items: list, d: str, pre: int, post: int) -> bool:
+    """True iff ``items`` can never consume ``d`` and ``^(?:items)$`` judges
+    a span exactly as the surrounding text would: no capture, assertion or
+    anchor, and word boundaries only with >= 1 char on both sides inside
+    the span (``pre``/``post``: chars consumed before/after ``items``)."""
+    widths = [_sp.SubPattern(_sp.State(), [it]).getwidth()[0] for it in items]
+    for i, (op, av) in enumerate(items):
+        before, after = pre + sum(widths[:i]), post + sum(widths[i + 1 :])
+        if op is _sc.LITERAL:
+            ok = chr(av) != d
+        elif op is _sc.NOT_LITERAL:
+            ok = chr(av) == d
+        elif op is _sc.IN:
+            ok = not _in_class(av, d)
+        elif op is _sc.AT:
+            ok = av in (_sc.AT_BOUNDARY, _sc.AT_NON_BOUNDARY) and before > 0 and after > 0
+        elif op is _sc.SUBPATTERN:
+            ok = av[0] is None and _excludes(av[3], d, before, after)
+        elif op is _sc.BRANCH:
+            ok = all(_excludes(alt, d, before, after) for alt in av[1])
+        elif op in (_sc.MAX_REPEAT, _sc.MIN_REPEAT):
+            ok = av[1] == 0 or _excludes(av[2], d, before, after)
+        else:  # ANY and everything unmodelled
+            ok = False
+        if not ok:
+            return False
+    return True
+
+
+def _in_class(items: list, d: str) -> bool:
+    """May the ``[...]`` class ``items`` match ``d``? Unknown -> True."""
+    hit, negate = False, False
+    for op, av in items:
+        if op is _sc.NEGATE:
+            negate = True
+        elif op is _sc.LITERAL:
+            hit = hit or chr(av) == d
+        elif op is _sc.RANGE:
+            hit = hit or av[0] <= ord(d) <= av[1]
+        elif op is _sc.CATEGORY and av in _CATEGORY:
+            hit = hit or _CATEGORY[av](d)
+        else:
+            return True
+    return hit != negate
 
 
 def _cast_type(typ: str) -> str:
@@ -191,71 +371,50 @@ def grok_expr_columns(cg: CompiledGrok, source: Column) -> dict[str, Column]:
     return cols
 
 
-def grok_pandas_udf(cg: CompiledGrok):
-    """Arrow backend: single-pass ``Series.str.extract`` into a struct.
+def arrow_extract(cg: CompiledGrok, arr):
+    """``pc.extract_regex(arr, cg.named_regex)``, computed through the
+    capture skeleton when ``compile_grok`` derived one: one RE2 extract
+    with the skeleton, one DFA-only ``^(?:A)$`` match per reduced capture
+    on its field, and the full extract only on the rows where a check
+    failed, scattered back. Same captures and match flags on every row
+    (argument in ``_capture_skeleton``).
 
-    Returns a pandas_udf producing ``struct<captures..., _grok_matched>``.
-    """
-    out_type = grok_struct_type(cg).add("_grok_matched", T.BooleanType())
-    # re.ASCII: match the JVM/RE2/Oniguruma ASCII \w/\d/\s semantics
-    # (str.extract's internal compile defaulted to Unicode classes,
-    # diverging from the other two backends on non-ASCII word chars)
-    pat = re.compile(cg.regex, re.ASCII)
-    caps = list(cg.captures)
+    A/B (measured, 4-core shared Xeon host; COMBINEDAPACHELOG over
+    perfbench generator rows, 70% apache lines): on one core, 150k rows,
+    5 reps, the full extract took 2.74-2.83 s; the skeleton extract
+    0.76-0.80 s plus 0.10 s for the 8 checks (this function: 0.85-0.89 s).
+    perfbench flagship_agg at local[4], 12 alternating pairs: 66.3k ->
+    89.4k docs/s median (+35%, 12/12 pairs; parent IQR 7.9k); grok's
+    summed Python time 4.6-5.8 s -> 3.3-3.4 s per pass over 3 traced
+    pairs."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    # ext columns are positional 0..n-1 in capture-occurrence order
-    pos_of = {idx: j for j, (_n, idx, _t) in enumerate(caps)}
-    groups = capture_groups(cg)
-
-    @pandas_udf(out_type)
-    def _grok(s: pd.Series) -> pd.DataFrame:
-        # extract with the numbered-group pattern; we emitted captures as
-        # the only real groups, so ext columns == capture order.
-        ext = s.str.extract(pat, expand=True)
-        out = pd.DataFrame(index=s.index)
-
-        def clean(j: int, typ: str) -> pd.Series:
-            col = ext.iloc[:, j]
-            col = col.where(col.notna() & (col != ""), None)
-            if typ == "int":
-                col = pd.to_numeric(col, errors="coerce").astype("Int64")
-            elif typ == "float":
-                col = pd.to_numeric(col, errors="coerce")
-            return col
-
-        for name, occ in groups.items():
-            if len(occ) == 1:
-                out[name] = clean(pos_of[occ[0][0]], occ[0][1])
-            else:
-                subs = [clean(pos_of[i], t) for i, t in occ]
-                out[name] = [
-                    ([v for v in row if v is not None and v is not pd.NA] or None)
-                    for row in zip(*subs)
-                ]
-        # matched: any capture present is proof of a match (free — ext is
-        # already computed); rows with NO captures might still match when
-        # every capture sits in optional groups, so only THOSE re-check
-        # with a real regex search (avoids a second full-series regex pass
-        # and pandas' match-groups warning on the common path)
-        any_cap = ext.notna().any(axis=1) if len(caps) else pd.Series(False, index=s.index)
-        recheck = (~any_cap) & s.notna()
-        if recheck.any():
-            rxp = pat
-            any_cap = any_cap.copy()
-            any_cap[recheck] = s[recheck].map(
-                lambda x: isinstance(x, str) and rxp.search(x) is not None
-            )
-        out["_grok_matched"] = any_cap
-        return out
-
-    return _grok
+    if cg.skeleton is None:
+        return pc.extract_regex(arr, cg.named_regex)
+    ext = pc.extract_regex(arr, cg.skeleton)  # null row = no match
+    matched = verified = ext.is_valid()
+    for idx, check, plus in cg.checks:
+        col = ext.field(f"c{idx}")
+        ok = pc.match_substring_regex(col, check)
+        if plus:  # '' from `[^d]+` means the capture did not take part
+            ok = pc.or_(ok, pc.equal(col, ""))
+        verified = pc.and_(verified, pc.fill_null(ok, False))
+    bad = pc.xor(matched, verified)  # matched, but a check failed
+    if not pc.any(bad).as_py():
+        return ext
+    redo = pc.extract_regex(arr.filter(bad), cg.named_regex)
+    fields = [pc.replace_with_mask(ext.field(i), bad, redo.field(i))
+              for i in range(ext.type.num_fields)]
+    valid = pc.replace_with_mask(matched, bad, redo.is_valid())
+    return pa.StructArray.from_arrays(fields, fields=list(ext.type), mask=pc.invert(valid))
 
 
 def grok_arrow_udf(cg: CompiledGrok):
-    """RE2 backend: pyarrow ``extract_regex`` — single vectorized C++ pass
-    over the Arrow batch, no per-row Python and no pandas object loop. This
-    is the fastest path for wide patterns (COMBINEDAPACHELOG: one RE2 scan
-    extracts all 11 captures).
+    """RE2 backend: pyarrow ``extract_regex`` (via ``arrow_extract``) —
+    vectorized C++ passes over the Arrow batch, no per-row Python and no
+    pandas object loop. This is the fastest path for wide patterns
+    (COMBINEDAPACHELOG: one RE2 scan extracts all 12 captures).
 
     Measured alternative (rejected): a ``mapInArrow`` formulation avoids
     the Arrow->pandas series hop and is ~30% faster on a frame holding ONLY
@@ -267,15 +426,12 @@ def grok_arrow_udf(cg: CompiledGrok):
     import pyarrow.compute as pc
 
     out_type = grok_struct_type(cg).add("_grok_matched", T.BooleanType())
-    pat = cg.named_regex
-    caps = list(cg.captures)
-
     groups = capture_groups(cg)
 
     @pandas_udf(out_type)
     def _grok(s: pd.Series) -> pd.DataFrame:
         arr = pa.Array.from_pandas(s, type=pa.string())
-        ext = pc.extract_regex(arr, pat)  # StructArray; null row = no match
+        ext = arrow_extract(cg, arr)  # StructArray; null row = no match
         matched = ext.is_valid()
         out = pd.DataFrame(index=s.index)
 
@@ -338,10 +494,12 @@ def grok(
     1-element array (the engine's documented scalar->array promotion; the
     row engine keeps a scalar there).
 
-    ``backend='auto'`` (measured on local[32], 4M apache lines): the JVM
-    expr backend rescans once per capture — fine at <=3 captures, 8x slower
-    at 11; wide patterns go to the single-pass Arrow RE2 UDF (~1M rows/s vs
-    ~115k rows/s for expr on COMBINEDAPACHELOG).
+    ``backend='auto'`` picks ``expr`` up to 3 captures and ``arrow`` above.
+    The JVM expr backend rescans once per capture (local[32], 4M apache
+    lines: fine at <=3 captures, 8x slower at 11, ~115k rows/s on
+    COMBINEDAPACHELOG); the arrow backend extracts every capture in one
+    RE2 pass (~1M rows/s there), through the verified capture skeleton
+    whenever ``compile_grok`` derived one (``arrow_extract``).
     """
     pats = [patterns] if isinstance(patterns, str) else list(patterns)
     ow = set(overwrite or [])
@@ -350,6 +508,8 @@ def grok(
     if backend == "auto":
         max_caps = max((len(cg.captures) for cg in compiled), default=0)
         backend = "expr" if max_caps <= 3 else "arrow"
+    if backend not in ("expr", "arrow"):
+        raise ValueError(f"grok backend must be 'expr', 'arrow' or 'auto', not {backend!r}")
 
     # (name, type, is_array): a field duplicated inside ANY pattern becomes
     # an array everywhere (the reference's per-event union type is
@@ -390,8 +550,8 @@ def grok(
             this_src = F.when(
                 _matched_before(per_pattern, i), F.lit(None)
             ).otherwise(src)
-        if backend in ("pandas", "arrow"):
-            udf = grok_pandas_udf(cg) if backend == "pandas" else grok_arrow_udf(cg)
+        if backend == "arrow":
+            udf = grok_arrow_udf(cg)
             sname = f"_grok_{i}"
             df = df.withColumn(sname, udf(this_src))
             cols = {name: F.col(sname)[name] for name, _, _ in cg.captures}

@@ -30,7 +30,7 @@ EXPECTED = {
 }
 
 
-@pytest.mark.parametrize("backend", ["expr", "pandas", "arrow"])
+@pytest.mark.parametrize("backend", ["expr", "arrow"])
 def test_combined_apache_golden(spark, backend):
     from logstash_spark.operators.grok import grok
 
@@ -44,7 +44,7 @@ def test_combined_apache_golden(spark, backend):
     assert row["tags"] is None or "_grokparsefailure" not in row["tags"]
 
 
-@pytest.mark.parametrize("backend", ["expr", "pandas", "arrow"])
+@pytest.mark.parametrize("backend", ["expr", "arrow"])
 def test_grok_failure_tag(spark, backend):
     from logstash_spark.operators.grok import grok
 
@@ -85,7 +85,7 @@ def test_custom_pattern_library(spark):
 
 
 def test_backends_agree_on_corpus(spark):
-    """expr and pandas backends must produce identical captures over the
+    """expr and arrow backends must produce identical captures over the
     mixed synthetic corpus (70% apache / 30% other)."""
     from logstash_spark.operators.grok import grok
     from logstash_spark.sources.pages import synthetic_pages
@@ -93,11 +93,8 @@ def test_backends_agree_on_corpus(spark):
     p = synthetic_pages(spark, 500).select("url", "text")
     cols = ["url", "clientip", "verb", "response", "bytes", "_grok_matched"]
     a = grok(p, "text", "%{COMBINEDAPACHELOG}", backend="expr").select(cols)
-    b = grok(p, "text", "%{COMBINEDAPACHELOG}", backend="pandas").select(cols)
-    c = grok(p, "text", "%{COMBINEDAPACHELOG}", backend="arrow").select(cols)
-    ra = sorted(map(tuple, a.collect()))
-    assert ra == sorted(map(tuple, b.collect()))
-    assert ra == sorted(map(tuple, c.collect()))
+    b = grok(p, "text", "%{COMBINEDAPACHELOG}", backend="arrow").select(cols)
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_no_row_python_in_plan(spark):
@@ -106,7 +103,7 @@ def test_no_row_python_in_plan(spark):
     from logstash_spark.sources.pages import synthetic_pages
 
     p = synthetic_pages(spark, 10)
-    for backend in ("expr", "pandas"):
+    for backend in ("expr", "arrow"):
         assert_no_python_udf(grok(p, "text", "%{COMBINEDAPACHELOG}", backend=backend))
 
 
@@ -117,7 +114,7 @@ def test_no_row_python_in_plan(spark):
     "%{TIMESTAMP_ISO8601:ts} %{NOTSPACE:tok}",
 ])
 def test_backends_agree_on_mixed_patterns(spark, pattern):
-    """All three backends must produce identical captures for every pattern
+    """Both backends must produce identical captures for every pattern
     shape (optional groups, typed captures, multi-pattern lists) over the
     mixed corpus (70% apache / 15% kv / 10% json / 5% junk)."""
     from logstash_spark.operators.grok import compile_grok, grok
@@ -129,20 +126,20 @@ def test_backends_agree_on_mixed_patterns(spark, pattern):
     cols = ["url", *dict.fromkeys(fields), "_grok_matched"]
     outs = [
         sorted(map(tuple, grok(p, "text", pattern, backend=b).select(cols).collect()))
-        for b in ("expr", "pandas", "arrow")
+        for b in ("expr", "arrow")
     ]
-    assert outs[0] == outs[1] == outs[2]
+    assert outs[0] == outs[1]
 
 
 def test_duplicate_capture_names_collect_arrays(spark):
     """Reference grok keeps EVERY occurrence of a duplicated capture name —
-    the field becomes an array (round-2: all three backends)."""
+    the field becomes an array (on both backends)."""
     from logstash_spark.operators.grok import grok
 
     import pytest
 
     df = spark.createDataFrame([("alpha beta gamma",), ("nomatch!!!",)], "text string")
-    for backend in ("expr", "pandas", "arrow"):
+    for backend in ("expr", "arrow"):
         out = {r["text"]: r for r in grok(
             df, "text", r"%{WORD:w} %{WORD:w} %{WORD:last}", backend=backend
         ).collect()}
@@ -174,7 +171,7 @@ def test_inline_named_captures(spark):
     from logstash_spark.operators.grok import grok
 
     df = spark.createDataFrame([("queue 4F2A9BC01D five",), ("nope",)], "text string")
-    for backend in ("expr", "pandas", "arrow"):
+    for backend in ("expr", "arrow"):
         out = {r["text"]: r for r in grok(
             df, "text", r"queue (?<queue_id>[0-9A-F]{10,11}) %{WORD:w}", backend=backend
         ).collect()}
@@ -234,7 +231,7 @@ def test_capture_named_after_source_column(spark):
     from logstash_spark.operators.grok import grok
 
     df = spark.createDataFrame([("GET /x",), ("###",)], "message string")
-    for backend in ("expr", "pandas", "arrow"):
+    for backend in ("expr", "arrow"):
         rows = grok(df, "message", r"%{WORD:verb} %{GREEDYDATA:message}",
                     backend=backend, overwrite=["message"]).collect()
         ok = [r for r in rows if r["verb"] == "GET"][0]
@@ -252,7 +249,7 @@ def test_grok_append_to_existing_field_default(spark):
 
     df = spark.createDataFrame([("GET /x", "orig"), ("###", "keep")],
                                "message string, verb string")
-    for backend in ("expr", "pandas", "arrow"):
+    for backend in ("expr", "arrow"):
         rows = {r["message"][0] if isinstance(r["message"], list) else r["message"]: r
                 for r in grok(df, "message", r"%{WORD:verb} %{GREEDYDATA:message}",
                               backend=backend).collect()}
@@ -271,8 +268,8 @@ def test_grok_append_to_existing_field_default(spark):
 
 
 # Extended base-set patterns (the public grok base file beyond the apache
-# subset): each sample must match — and extract identically — on ALL THREE
-# backends (Python re / Java regex / RE2 share the pattern text).
+# subset): each sample must match — and extract identically — on BOTH
+# backends (Java regex / RE2 share the pattern text).
 _EXTENDED = [
     ("EMAILADDRESS", "john.doe+tag@mail.example.com"),
     ("HTTPDUSER", "bob@example.com"),
@@ -292,7 +289,7 @@ _EXTENDED = [
 ]
 
 
-@pytest.mark.parametrize("backend", ["expr", "pandas", "arrow"])
+@pytest.mark.parametrize("backend", ["expr", "arrow"])
 def test_extended_base_patterns_all_backends(spark, backend):
     from pyspark.sql import functions as F
 
@@ -311,7 +308,7 @@ def test_extended_base_patterns_all_backends(spark, backend):
         assert out["x"] == s, f"{backend}/{name}: {out['x']!r} != {s!r}"
 
 
-@pytest.mark.parametrize("backend", ["expr", "pandas", "arrow"])
+@pytest.mark.parametrize("backend", ["expr", "arrow"])
 def test_syslogbase_and_errorlog_captures(spark, backend):
     from logstash_spark.operators.grok import grok
 

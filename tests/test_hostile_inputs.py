@@ -30,7 +30,7 @@ def hostile(spark):
 N = len(HOSTILE)
 
 
-@pytest.mark.parametrize("backend", ["expr", "pandas", "arrow"])
+@pytest.mark.parametrize("backend", ["expr", "arrow"])
 def test_grok_hostile(hostile, backend):
     from logstash_spark.operators.grok import grok
 

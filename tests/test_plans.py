@@ -14,7 +14,7 @@ def test_e2e_plan_shape(spark):
     plan = physical_plan(df)
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan  # pandas backend => ArrowEvalPython only
+    assert "BatchEvalPython" not in plan  # arrow backend => ArrowEvalPython only
     assert "CartesianProduct" not in plan
 
 

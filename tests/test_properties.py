@@ -319,24 +319,43 @@ def test_edn_reader_roundtrip(value):
 )
 @settings(max_examples=40, deadline=None)
 def test_grok_backends_agree(spark, lines, pattern):
-    """expr (JVM regex), pandas (Python re) and arrow (RE2) are three
-    INDEPENDENT regex engines running the same compiled pattern — they
-    must produce identical captures, match flags and failure tags on
-    arbitrary input."""
-    from logstash_spark.operators.grok import grok
+    """expr (JVM regex), arrow (RE2) and a test-side Python ``re`` oracle
+    are three INDEPENDENT regex engines running the same compiled pattern
+    — they must produce identical captures, match flags and failure tags
+    on arbitrary input."""
+    from logstash_spark.operators.grok import capture_groups, grok
 
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(lines)], "id long, text string"
     ).cache()
     results = {}
-    for backend in ("expr", "pandas", "arrow"):
+    for backend in ("expr", "arrow"):
         rows = grok(df, "text", pattern, backend=backend).collect()
         results[backend] = {
             r["id"]: {k: (tuple(v) if isinstance(v, list) else v)
                       for k, v in r.asDict().items() if k != "_grok_matched"}
             for r in rows
         }
-    assert results["expr"] == results["pandas"] == results["arrow"]
+
+    cg = compile_grok(pattern)
+    rx = re.compile(cg.regex, re.ASCII)
+
+    def value(m, idx, typ):
+        v = m.group(idx) or None  # '' (optional group not taken) -> unset
+        if v is not None and typ == "int":
+            v = int(v) if -(2**63) <= int(v) < 2**63 else None
+        return v
+
+    oracle = {}
+    for i, s in enumerate(lines):
+        m = rx.search(s) if s is not None else None
+        row = {"id": i, "text": s, "tags": None if m else ("_grokparsefailure",)}
+        for name, occ in capture_groups(cg).items():
+            vals = [value(m, idx, typ) for idx, typ in occ] if m else [None]
+            # a duplicated name collects every occurrence; none -> unset
+            row[name] = tuple(v for v in vals if v is not None) or None if len(occ) > 1 else vals[0]
+        oracle[i] = row
+    assert results["expr"] == results["arrow"] == oracle
 
 
 @settings(max_examples=20, deadline=None)
