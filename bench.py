@@ -320,9 +320,6 @@ def main() -> None:
     if "--scaling" in sys.argv:
         run_scaling()
         return
-    if "--streaming" in sys.argv:
-        run_streaming_bench()
-        return
 
     idle = wait_for_idle()
 
@@ -391,60 +388,6 @@ def main() -> None:
         **idle,
     }
     print(json.dumps(out))
-
-
-def run_streaming_bench() -> None:
-    """Micro-batch throughput of the same pipeline on a file stream:
-    writes page batches to a temp dir, runs the streaming fan-out with a
-    checkpoint, reports docs/sec across processed micro-batches."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from logstash_spark.conditions import Field, Not, Rx
-    from logstash_spark.pipeline import Output, Pipeline, Stage
-    from logstash_spark.session import get_spark
-    from logstash_spark.sinks import NullSink
-    from logstash_spark.sources.pages import synthetic_pages
-    from logstash_spark.streaming.pipeline import run_streaming
-
-    spark = get_spark("bench_streaming")
-    n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "1000000"))
-    n_batches = 4
-    tmp = tempfile.mkdtemp(prefix="lsbench_stream_")
-    src = os.path.join(tmp, "src")
-    try:
-        pages = synthetic_pages(spark, n_docs, include_junk=True)
-        for i in range(n_batches):
-            pages.filter(F.pmod(F.xxhash64("url"), F.lit(n_batches)) == i) \
-                 .repartition(8).write.mode("append").parquet(src)
-        schema = spark.read.parquet(src).schema
-        pipe = Pipeline(
-            filters=[
-                Stage(op="grok", params={"source": "text", "patterns": "%{COMBINEDAPACHELOG}"}),
-                Stage(op="date", params={"source": "timestamp", "formats": ["dd/MMM/yyyy:HH:mm:ss Z"]}),
-            ],
-            outputs=[
-                Output("errors", NullSink(), when=Rx(Field("[response]"), "^5")),
-                Output("ok", NullSink(), when=Not(Rx(Field("[response]"), "^5"))),
-            ],
-        )
-        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", os.environ.get("SPARK_GRAFT_FILES_PER_TRIGGER", "16")).parquet(src)
-        q = run_streaming(pipe, stream, checkpoint=os.path.join(tmp, "ckpt"), watermark=None)
-        t0 = time.perf_counter()
-        q.processAllAvailable()
-        dt = time.perf_counter() - t0
-        q.stop()
-        print(json.dumps({
-            "metric": "streaming micro-batch e2e throughput (grok+date+routed fan-out)",
-            "value": round(n_docs / dt),
-            "unit": "docs/sec",
-            "docs": n_docs,
-            "sec": round(dt, 3),
-        }))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def run_scaling() -> None:

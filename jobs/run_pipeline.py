@@ -15,6 +15,15 @@ on restart (per-partition lineage — logstash_spark.lineage). Day predicates
 prune the scan (partition pruning on a date-partitioned table), so a
 restart only pays for unfinished days.
 
+Routing happens once per slice: ``write_outputs`` evaluates the ``Output``
+predicates over the persisted transformed frame and writes every sink. The
+built-in outputs carry ``agg_by=["lang"]``, so the per-sink aggregate is
+grouped off that same cached frame; its rows ``(sink, lang, n)`` are
+appended to ``<out>/agg`` and their per-sink sums are the ``rows_out`` of
+the slice. ``rows_in`` is the row count the parse Observation saw. Outputs
+without ``agg_by`` (``--conf`` / ``--spec`` pipelines) add no aggregate and
+no ``rows_out`` entry.
+
 `--input synthetic:N` generates the deterministic page table in-place
 (no external data) — used for smoke runs and the scaling bench.
 """
@@ -30,7 +39,6 @@ import sys
 # `python jobs/run_pipeline.py` the repo root must be on sys.path too
 # (the interpreter only adds the script's own dir, jobs/)
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-import time
 
 
 def build_args():
@@ -39,7 +47,6 @@ def build_args():
     p.add_argument("--out", required=True, help="output directory (sinks + aggregates)")
     p.add_argument("--manifest", default=None, help="lineage manifest path (enables resume)")
     p.add_argument("--by-day", action="store_true", help="process per warc_ts day with lineage")
-    p.add_argument("--grok-backend", default="arrow", choices=["arrow", "expr", "auto"])
     p.add_argument("--spec", default=None,
                    help="JSON pipeline spec (logstash_spark.spec) overriding the built-in pipeline")
     p.add_argument("--conf", default=None,
@@ -61,9 +68,9 @@ def build_pipeline(out_dir: str):
         ],
         outputs=[
             Output("errors", ParquetSink(os.path.join(out_dir, "errors"), mode="append"),
-                   when=Rx(Field("[response]"), "^5")),
+                   when=Rx(Field("[response]"), "^5"), agg_by=["lang"]),
             Output("ok", ParquetSink(os.path.join(out_dir, "ok"), mode="append"),
-                   when=Not(Rx(Field("[response]"), "^5"))),
+                   when=Not(Rx(Field("[response]"), "^5")), agg_by=["lang"]),
         ],
     )
 
@@ -75,9 +82,9 @@ def main() -> None:
 
     # spark-submit provides the session config; getOrCreate attaches to it
     spark = SparkSession.builder.appName("logstash_spark.run_pipeline").getOrCreate()
-    os.environ["SPARK_GRAFT_GROK_BACKEND"] = args.grok_backend
 
     from logstash_spark.metrics import PipelineMetrics
+    from logstash_spark.sinks import write_outputs
     from logstash_spark.sources.pages import synthetic_pages
     from logstash_spark.sources.readers import read_pages
 
@@ -96,22 +103,23 @@ def main() -> None:
         pipe = from_file(args.spec)
     else:
         pipe = build_pipeline(args.out)
+    if not pipe.outputs:
+        sys.exit("run_pipeline: the pipeline has no outputs")
     pm = PipelineMetrics()
 
-    def run_slice(df):
-        transformed = pipe.transform(df)
-        observed = pm.observe(transformed, f"parse@{time.time():.0f}",
+    def run_slice(df, name: str) -> tuple[int, dict[str, int]]:
+        """Route and write one slice in a single pass; returns (rows_in,
+        {sink: rows}) for every output with an ``agg_by`` aggregate."""
+        stage = f"parse@{name}"
+        observed = pm.observe(pipe.transform(df), stage,
                               failure_tags=["_grokparsefailure", "_dateparsefailure"])
-        results = __import__("logstash_spark.sinks", fromlist=["write_outputs"]).write_outputs(
-            observed, pipe.outputs
-        )
-        agg = (
-            transformed.withColumn("sink", F.when(F.col("response").rlike("^5"), "errors").otherwise("ok"))
-            .groupBy("sink", "lang").agg(F.count(F.lit(1)).alias("n"))
-        )
-        agg.write.mode("append").parquet(os.path.join(args.out, "agg"))
-        counts = {r["sink"]: r["n"] for r in agg.groupBy("sink").agg(F.sum("n").alias("n")).collect()}
-        return counts
+        results = write_outputs(observed, pipe.outputs)
+        aggs = {o.name: results[f"{o.name}__agg"] for o in pipe.outputs if o.agg_by}
+        rows = [(sink, lang, n) for sink, agg in aggs.items() for (lang,), n in agg.items()]
+        if rows:
+            spark.createDataFrame(rows, "sink string, lang string, n long") \
+                .write.mode("append").parquet(os.path.join(args.out, "agg"))
+        return pm.observations[stage].get["rows"], {s: sum(a.values()) for s, a in aggs.items()}
 
     if args.by_day and args.manifest:
         from logstash_spark.lineage import run_partitioned
@@ -119,14 +127,12 @@ def main() -> None:
         days = [r["d"] for r in pages.select(F.to_date("warc_ts").alias("d")).distinct().orderBy("d").collect()]
 
         def job(day: str):
-            sl = pages.filter(F.to_date("warc_ts") == day)
-            counts = run_slice(sl)
-            return sum(counts.values()), counts
+            return run_slice(pages.filter(F.to_date("warc_ts") == day), day)
 
         manifest = run_partitioned(spark, [str(d) for d in days], job, args.manifest)
         print(json.dumps({"days": len(manifest.entries), "metrics": pm.report()}))
     else:
-        counts = run_slice(pages)
+        _rows_in, counts = run_slice(pages, "all")
         print(json.dumps({"sinks": counts, "metrics": pm.report()}))
 
 

@@ -14,8 +14,6 @@ geoip/translate -> conditional outputs with statsd counts (docs/tutorials/
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,7 +40,7 @@ def geo_dim(spark: SparkSession, n_ranges: int = 4096) -> DataFrame:
 
 
 def build_e2e(
-    spark: SparkSession, n_docs: int, *, backend: str | None = None,
+    spark: SparkSession, n_docs: int, *, backend: str = "auto",
     from_html: bool = False, input_df: DataFrame | None = None,
 ) -> DataFrame:
     """Full pipeline plan over n synthetic docs; returns the per-sink
@@ -61,7 +59,6 @@ def build_e2e(
     from logstash_spark.operators import mutate as M
     from logstash_spark.operators.enrich import geoip, translate
 
-    backend = backend or os.environ.get("SPARK_GRAFT_GROK_BACKEND", "arrow")
     pages = input_df if input_df is not None else synthetic_pages(spark, n_docs, include_junk=True)
 
     text_col = "text"

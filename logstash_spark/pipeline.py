@@ -35,6 +35,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from logstash_spark.conditions import Always, Expr
 from logstash_spark.registry import OPERATORS
@@ -120,14 +121,6 @@ class Pipeline:
         out = self.transform(df)
         return write_outputs(out, self.outputs)
 
-    def route(self, df: DataFrame) -> DataFrame:
-        """Add one boolean `_route_<name>` column per output — the routing
-        decision computed once, reused by every sink write."""
-        out = self.transform(df)
-        for o in self.outputs:
-            out = out.withColumn(f"_route_{o.name}", output_predicate(out, o))
-        return out
-
 
 def output_predicate(df: DataFrame, o: Output):
     """Compiled route predicate for an output: conditional AND legacy gate."""
@@ -165,13 +158,8 @@ def apply_stage(df: DataFrame, st: Stage) -> DataFrame:
             # clone decorates ONLY the clones (clone.rb calls filter_matched
             # per clone inside the loop; the original is never decorated) —
             # clone_seq 0 marks the original row post-explode
-            out = fn(df, **st.params)
-            deco_stage = Stage(
-                op="noop", params={},
-                add_field=st.add_field, add_tag=st.add_tag,
-                remove_field=st.remove_field, remove_tag=st.remove_tag,
-            )
-            return _conditional_apply(out, deco_stage, OPERATORS["noop"], F.col("clone_seq") > 0)
+            return _conditional_apply(fn(df, **st.params), F.col("clone_seq") > 0,
+                                      lambda d: _apply_decorators(d, st))
         return _success_decorators(fn(df, **st.params), st)
     if st.op in _ROW_COUNT_OPS:
         if st.op in ("drop", "clone", "split"):
@@ -193,17 +181,12 @@ def apply_stage(df: DataFrame, st: Stage) -> DataFrame:
             df2 = df.withColumn(flag, cond)
             out = fn(df2, when=F.col(flag), **st.params)
             if st.add_field or st.add_tag or st.remove_field or st.remove_tag:
-                deco_stage = Stage(
-                    op="noop", params={},
-                    add_field=st.add_field, add_tag=st.add_tag,
-                    remove_field=st.remove_field, remove_tag=st.remove_tag,
-                )
                 deco_cond = F.col(flag)
                 if st.op == "clone":
                     # only the CLONES are decorated (clone.rb filter_matched
                     # runs per clone; the original passes through untouched)
                     deco_cond = deco_cond & (F.col("clone_seq") > 0)
-                out = _conditional_apply(out, deco_stage, OPERATORS["noop"], deco_cond)
+                out = _conditional_apply(out, deco_cond, lambda d: _apply_decorators(d, st))
             return out.drop(flag)
         if st.op != "metrics":
             # split-apply-union: ONLY matching rows enter the row-count op
@@ -227,11 +210,14 @@ def apply_stage(df: DataFrame, st: Stage) -> DataFrame:
             "flush-events-alongside row engine), so a conditional form "
             "would silently drop the non-matching rows; filter upstream"
         )
-    return _conditional_apply(df, st, fn, cond)
+    return _conditional_apply(df, cond, lambda d: _success_decorators(fn(d, **st.params), st))
 
 
-def _conditional_apply(df: DataFrame, st: Stage, fn: Callable[..., DataFrame], cond) -> DataFrame:
-    """when(cond) stage: snapshot original columns, run op, CASE-merge.
+def _conditional_apply(
+    df: DataFrame, cond, transform: Callable[[DataFrame], DataFrame], prefix: str = "_"
+) -> DataFrame:
+    """Run ``transform`` only where ``cond`` holds: snapshot the original
+    columns, transform, CASE-merge.
 
     Built as two flat selects (snapshot, merge) rather than per-column
     withColumn chains — analyzer cost stays linear in column count, and the
@@ -240,23 +226,26 @@ def _conditional_apply(df: DataFrame, st: Stage, fn: Callable[..., DataFrame], c
     conditional drops the old column for ALL rows and non-matching rows get
     null under the new name — put renames outside conditionals (or use
     replace) when both branches must survive.
+
+    The snapshot columns are ``<prefix>cond`` and ``<prefix>orig_<col>``.
+    Success-gated decorators merge with their own prefix, because they run
+    inside a conditional stage's transform and so nest in its snapshot.
     """
+    cond_c, orig_p = f"{prefix}cond", f"{prefix}orig_"
     orig_cols = list(df.columns)
     snapped = df.select(
-        "*", cond.alias("_cond"), *[F.col(c).alias(f"_orig_{c}") for c in orig_cols]
+        "*", cond.alias(cond_c), *[F.col(c).alias(f"{orig_p}{c}") for c in orig_cols]
     )
-    transformed = _success_decorators(fn(snapped, **st.params), st)
+    transformed = transform(snapped)
     out_cols = []
     orig_set = set(orig_cols)
     t_schema = {f.name: f.dataType for f in transformed.schema.fields}
-    from pyspark.sql import types as T
-
     for c in transformed.columns:
-        if c.startswith("_orig_") or c == "_cond":
+        if c.startswith(orig_p) or c == cond_c:
             continue
         if c in orig_set:
-            new_c, orig_c = F.col(c), F.col(f"_orig_{c}")
-            new_t, orig_t = t_schema.get(c), t_schema.get(f"_orig_{c}")
+            new_c, orig_c = F.col(c), F.col(f"{orig_p}{c}")
+            new_t, orig_t = t_schema.get(c), t_schema.get(f"{orig_p}{c}")
             if new_t != orig_t and isinstance(new_t, T.ArrayType) and not isinstance(orig_t, T.ArrayType):
                 # conditional add_field promoted a scalar column to array:
                 # unify by promoting the unmatched side to a 1-element array
@@ -264,10 +253,10 @@ def _conditional_apply(df: DataFrame, st: Stage, fn: Callable[..., DataFrame], c
                 # union type; scalar reads as [scalar] once any conditional
                 # append targets the column)
                 orig_c = F.array(orig_c.cast(new_t.elementType))
-            out_cols.append(F.when(F.col("_cond"), new_c).otherwise(orig_c).alias(c))
+            out_cols.append(F.when(F.col(cond_c), new_c).otherwise(orig_c).alias(c))
         else:
             # column created by the op: null where the condition is false
-            out_cols.append(F.when(F.col("_cond"), F.col(c)).alias(c))
+            out_cols.append(F.when(F.col(cond_c), F.col(c)).alias(c))
     return transformed.select(*out_cols)
 
 
@@ -291,40 +280,11 @@ def _apply_decorators(df: DataFrame, st: Stage) -> DataFrame:
 _SUCCESS_COLS = {"grok": "_grok_matched", "date": "_date_matched"}
 
 
-def _gated_decorators(df: DataFrame, st: Stage, gate) -> DataFrame:
-    """Apply the stage's decorators only where ``gate`` holds: snapshot,
-    decorate, CASE-merge (the _conditional_apply shape with its own
-    prefix, so it nests inside an enclosing conditional snapshot)."""
-    from pyspark.sql import types as T
-
-    orig_cols = list(df.columns)
-    snapped = df.select(
-        "*", gate.alias("_deco_cond"),
-        *[F.col(c).alias(f"_deco_orig_{c}") for c in orig_cols],
-    )
-    dec = _apply_decorators(snapped, st)
-    t_schema = {f.name: f.dataType for f in dec.schema.fields}
-    orig_set = set(orig_cols)
-    out_cols = []
-    for c in dec.columns:
-        if c.startswith("_deco_orig_") or c == "_deco_cond":
-            continue
-        if c in orig_set:
-            new_c, orig_c = F.col(c), F.col(f"_deco_orig_{c}")
-            new_t, orig_t = t_schema.get(c), t_schema.get(f"_deco_orig_{c}")
-            if new_t != orig_t and isinstance(new_t, T.ArrayType) and not isinstance(orig_t, T.ArrayType):
-                orig_c = F.array(orig_c.cast(new_t.elementType))
-            out_cols.append(F.when(F.col("_deco_cond"), new_c).otherwise(orig_c).alias(c))
-        else:
-            out_cols.append(F.when(F.col("_deco_cond"), F.col(c)).alias(c))
-    return dec.select(*out_cols)
-
-
 def _success_decorators(out: DataFrame, st: Stage) -> DataFrame:
     """Decorator dispatch: gate on the op's success flag when it has one."""
     if not (st.add_field or st.add_tag or st.remove_field or st.remove_tag):
         return out
     s = _SUCCESS_COLS.get(st.op)
     if s and s in out.columns:
-        return _gated_decorators(out, st, F.col(s))
+        return _conditional_apply(out, F.col(s), lambda d: _apply_decorators(d, st), prefix="_deco_")
     return _apply_decorators(out, st)

@@ -52,3 +52,24 @@ def test_mutate_chain_stays_in_codegen(spark):
     # single codegen'd Project over the Range — no exchanges, no UDF nodes
     plan = physical_plan(p)
     assert "Exchange" not in plan
+
+
+def test_shipped_job_plan_shape(spark, tmp_path):
+    """The shipped job's own spec (``jobs/run_pipeline.py`` build_pipeline),
+    transformed and routed: no row-at-a-time Python, no sort-merge or
+    cartesian join."""
+    import os
+    import runpy
+
+    from logstash_spark.pipeline import output_predicate
+    from logstash_spark.sources.pages import synthetic_pages
+
+    job = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs", "run_pipeline.py")
+    pipe = runpy.run_path(job)["build_pipeline"](str(tmp_path))
+    df = pipe.transform(synthetic_pages(spark, 100))
+    for o in pipe.outputs:
+        df = df.withColumn(f"_route_{o.name}", output_predicate(df, o))
+    plan = physical_plan(df)
+    assert "BatchEvalPython" not in plan
+    assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan

@@ -5,10 +5,9 @@ import os
 import time
 
 import pytest
-from pyspark.sql import functions as F
 
 from logstash_spark.conditions import Field, Not, Rx
-from logstash_spark.pipeline import Output, Pipeline, Stage
+from logstash_spark.pipeline import Output, Pipeline, Stage, output_predicate
 from logstash_spark.sinks import ParquetSink
 from logstash_spark.sources.pages import synthetic_pages
 
@@ -219,10 +218,11 @@ def test_streaming_batch_routed_set_parity(spark, tmp_path):
         ],
     )
 
-    # batch routing decision
-    routed = pipe.route(stored)
-    batch_err = {r["url"] for r in routed.filter(F.col("_route_errors")).select("url").collect()}
-    batch_rest = {r["url"] for r in routed.filter(F.col("_route_rest")).select("url").collect()}
+    # batch routing decision: the same Output predicates write_outputs uses
+    out = pipe.transform(stored)
+    err_o, rest_o = pipe.outputs
+    batch_err = {r["url"] for r in out.filter(output_predicate(out, err_o)).select("url").collect()}
+    batch_rest = {r["url"] for r in out.filter(output_predicate(out, rest_o)).select("url").collect()}
 
     from logstash_spark.streaming.pipeline import run_streaming
 

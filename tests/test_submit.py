@@ -77,3 +77,59 @@ def test_run_pipeline_by_day_resume(tmp_path):
     entries2 = [json.loads(l) for l in open(manifest)]
     ts2 = {e["partition"]: e["ts"] for e in entries2}
     assert ts1 == ts2  # nothing re-ran
+
+    # the per-sink aggregate (Output.agg_by) agrees with the sinks and the
+    # manifest: one routing decision feeds the writes, agg and counts
+    import pyarrow.parquet as pq
+
+    agg = pq.read_table(os.path.join(out_dir, "agg")).to_pydict()
+    agg_n = {}
+    for sink, n in zip(agg["sink"], agg["n"]):
+        agg_n[sink] = agg_n.get(sink, 0) + n
+    sink_n = {s: pq.read_table(os.path.join(out_dir, s)).num_rows for s in ("errors", "ok")}
+    assert agg_n == sink_n
+    for e in entries2:
+        assert set(e["rows_out"]) == {"errors", "ok"}
+        assert e["rows_in"] == e["rows_out"]["errors"] + e["rows_out"]["ok"]
+    assert {s: sum(e["rows_out"][s] for e in entries2) for s in sink_n} == sink_n
+
+
+def test_run_pipeline_conf_without_grok_by_day(tmp_path):
+    """A --conf pipeline that defines none of the built-in pipeline's fields
+    (no grok, so no response or lang) runs every day to completion."""
+    conf = tmp_path / "tag.conf"
+    conf.write_text('filter { mutate { add_tag => ["seen"] } }\n'
+                    'output { file { path => "seen" } }\n')
+    out_dir = str(tmp_path / "out")
+    manifest = str(tmp_path / "lineage.jsonl")
+    cmd = [
+        sys.executable, os.path.join(REPO, "jobs", "run_pipeline.py"),
+        "--input", "synthetic:1000", "--out", out_dir, "--conf", str(conf),
+        "--manifest", manifest, "--by-day",
+    ]
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="4")
+    r = subprocess.run(cmd, capture_output=True, text=True, timeout=420, env=env)
+    assert r.returncode == 0, r.stderr[-3000:]
+    entries = [json.loads(l) for l in open(manifest)]
+    assert len(entries) > 0 and all(e["status"] == "done" for e in entries)
+    assert sum(e["rows_in"] for e in entries) == 1000
+    import pyarrow.parquet as pq
+
+    seen = pq.read_table(os.path.join(out_dir, "seen"))
+    assert seen.num_rows == 1000
+    assert all("seen" in tags for tags in seen.column("tags").to_pylist())
+
+
+def test_run_pipeline_rejects_pipeline_without_outputs(tmp_path):
+    """A pipeline with no outputs has no sink write to run it, so the job
+    fails fast instead of waiting on counters nothing would fill."""
+    conf = tmp_path / "no_output.conf"
+    conf.write_text('filter { mutate { add_tag => ["seen"] } }\n')
+    cmd = [
+        sys.executable, os.path.join(REPO, "jobs", "run_pipeline.py"),
+        "--input", "synthetic:10", "--out", str(tmp_path / "out"), "--conf", str(conf),
+    ]
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="2")
+    r = subprocess.run(cmd, capture_output=True, text=True, timeout=420, env=env)
+    assert r.returncode == 1
+    assert "the pipeline has no outputs" in r.stderr
