@@ -1,4 +1,4 @@
-"""Pipeline throughput/error metrics — the stats-API mirror.
+"""Pipeline row and failure-tag metrics — the stats-API mirror.
 
 The reference exposes flow stats via thread naming / queue sizes
 (lib/logstash/util.rb:12-25, sized_queue.rb:6-8 TODO). Our engine reports:
@@ -6,13 +6,11 @@ The reference exposes flow stats via thread naming / queue sizes
 - per-stage row counts via `df.observe` (Observation API — collected by the
   JVM during the SAME job, zero extra passes; this is the 100 TB-safe way,
   never `count()` side-jobs),
-- parse-failure rates from the failure tags (_grokparsefailure etc.),
-- wall-clock throughput docs/sec from job timing.
+- parse-failure rates from the failure tags (_grokparsefailure etc.).
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
@@ -22,7 +20,6 @@ from pyspark.sql import functions as F
 @dataclass
 class PipelineMetrics:
     observations: dict[str, Observation] = field(default_factory=dict)
-    t0: float = field(default_factory=time.time)
 
     def observe(self, df: DataFrame, stage: str, *, failure_tags: list[str] | None = None) -> DataFrame:
         """Attach counters to the plan at this stage."""
@@ -37,17 +34,10 @@ class PipelineMetrics:
         return df.observe(obs, *metrics)
 
     def report(self) -> dict:
-        wall = time.time() - self.t0
         stages = {}
         for name, obs in self.observations.items():
             try:
                 stages[name] = dict(obs.get)
             except Exception:
                 stages[name] = {}
-        first = next(iter(stages.values()), {})
-        rows = first.get("rows", 0)
-        return {
-            "wall_s": round(wall, 3),
-            "docs_per_sec": round(rows / wall, 1) if wall > 0 else None,
-            "stages": stages,
-        }
+        return {"stages": stages}

@@ -1089,7 +1089,6 @@ def write_outputs(
     df: DataFrame,
     outputs: list,
     *,
-    storage_level: StorageLevel | None = None,
     on_sink_done=None,
 ) -> dict[str, Any]:
     """Route + write every output from ONE pass over ``df``.
@@ -1098,20 +1097,17 @@ def write_outputs(
     and returns {name: sink result}. Per-sink counts come free off the
     cached frame.
 
-    ``storage_level`` defaults to MEMORY_AND_DISK: with N sinks the
-    transformed frame is read N times, and re-running a 100 TB parse per
-    sink costs far more than spilling it once to executor-local disk
-    (short-circuit reads, no shuffle service involved). If local disk is
-    the scarce resource — or there is exactly ONE sink — pass
-    StorageLevel.NONE semantics by persisting DISK_ONLY or skipping: with
-    one sink the persist only pays if its write retries.
+    The routed frame is persisted at MEMORY_AND_DISK: N sinks read it N
+    times, and re-running the parse per sink costs far more than spilling
+    it once to executor-local disk (short-circuit reads, no shuffle
+    service involved).
     """
     from logstash_spark.pipeline import output_predicate
 
     routed = df
     for o in outputs:
         routed = routed.withColumn(f"_route_{o.name}", output_predicate(routed, o))
-    routed = routed.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+    routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         results: dict[str, Any] = {}
         for o in outputs:

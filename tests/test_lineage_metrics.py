@@ -46,7 +46,6 @@ def test_metrics_observe_single_pass(spark):
     rep = pm.report()
     assert rep["stages"]["parse"]["rows"] == 100
     assert 0 < rep["stages"]["parse"]["_grokparsefailure"] < 100
-    assert rep["docs_per_sec"] > 0
 
 
 def test_lineage_manifest_tolerates_truncated_tail(tmp_path):

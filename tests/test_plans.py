@@ -5,24 +5,46 @@ from pyspark.sql import functions as F
 from logstash_spark.plans.checks import assert_no_python_udf, physical_plan
 
 
+def _flagship(spark, grok_params=None):
+    """The flagship chain (grok -> date -> mutate.convert -> translate ->
+    geoip), first-match routed and aggregated per (sink, lang, country)."""
+    from logstash_spark.pipeline import Pipeline, Stage
+    from logstash_spark.sources.pages import synthetic_pages
+
+    resp = spark.createDataFrame([("200", "ok"), ("404", "miss"), ("500", "server_error")],
+                                 "key string, value string")
+    geo = spark.range(64).select((F.col("id") * 65536).alias("ip_lo"),
+                                 (F.col("id") * 65536 + 65535).alias("ip_hi"),
+                                 F.concat(F.lit("C"), F.col("id").cast("string")).alias("country"))
+    pipe = Pipeline(filters=[
+        Stage(op="grok", params={"source": "text", "patterns": "%{COMBINEDAPACHELOG}", **(grok_params or {})}),
+        Stage(op="date", params={"source": "timestamp", "formats": ["dd/MMM/yyyy:HH:mm:ss Z"]}),
+        Stage(op="mutate.convert", params={"mapping": {"bytes": "integer"}}),
+        Stage(op="translate", params={"dim": resp, "source": "response", "target": "resp_class",
+                                      "fallback": "unknown"}),
+        Stage(op="geoip", params={"geo_dim": geo, "source": "clientip", "fields": ["country"]}),
+    ])
+    g = pipe.transform(synthetic_pages(spark, 1000, include_junk=True))
+    sink = (F.when(F.col("response").rlike("^5"), "errors")
+            .when(~F.col("_grok_matched"), "unparsed")
+            .otherwise("ok"))
+    return (g.withColumn("sink", sink).groupBy("sink", "lang", "geoip_country")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("bytes").alias("total_bytes")))
+
+
 def test_e2e_plan_shape(spark):
     """The flagship pipeline: broadcast enrichments, no row-Python, no
     sort-merge join anywhere."""
-    from logstash_spark.bench_pipeline import build_e2e
-
-    df = build_e2e(spark, 1000)
-    plan = physical_plan(df)
+    plan = physical_plan(_flagship(spark))
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan  # arrow backend => ArrowEvalPython only
+    assert "ArrowEvalPython" in plan
     assert "CartesianProduct" not in plan
 
 
 def test_e2e_expr_backend_fully_jvm(spark):
-    from logstash_spark.bench_pipeline import build_e2e
-
-    df = build_e2e(spark, 1000, backend="expr")
-    plan = physical_plan(df)
+    plan = physical_plan(_flagship(spark, {"backend": "expr"}))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
