@@ -553,18 +553,6 @@ def dedup_clusters(
 # ---------------------------------------------------------------------------
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles of normalized text, as array<string>.
-
-    NOTE: as a single nested expression the `words` subtree sits inside the
-    transform() lambda and gets re-evaluated per element (~30x slowdown,
-    measured). Hot paths use :func:`with_shingles`, which stages the split
-    into its own projection so the lambda only sees a column reference.
-    """
-    words = F.split(normalize_text(text), " ")
-    return _shingles_of(words, k)
-
-
 def _shingles_of(words: Column, k: int) -> Column:
     n = F.size(words)
     idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
@@ -763,20 +751,6 @@ def dedup_containment(
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """K minhash values as array<bigint>: min over xxhash64(shingle, salt_i).
-
-    One expression tree, no UDF: transform over a literal salt range, each
-    element = array_min of the salted hashes.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, i))
-        ),
-    )
 
 
 def dedup_minhash_lsh(

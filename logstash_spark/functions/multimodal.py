@@ -753,17 +753,6 @@ def decode_image(df: DataFrame, *, target_size: tuple[int, int] = (64, 64)) -> D
     return df.select("media_id", "bytes").mapInPandas(batches, out_schema)
 
 
-def frame_sample(df: DataFrame, *, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling stub: emits (media_id, frame_idx) rows from
-    duration metadata WITHOUT touching bytes — pure exprs, demonstrating
-    metadata-only pruning before the expensive decode stage."""
-    n_frames = F.greatest((F.col("meta.duration_ms") / every_ms).cast("int"), F.lit(0))
-    return df.select(
-        "media_id",
-        F.explode(F.sequence(F.lit(0), n_frames)).alias("frame_idx"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # audio: RIFF/WAV PCM — stdlib struct, the same no-external-codec stance as
 # parse_ppm/parse_bmp. The synthetic waveform is a closed-form function of

@@ -56,26 +56,6 @@ def _bucket(col: Column, n_buckets: int, hash_fn: str) -> Column:
     ).cast("int")
 
 
-def hashed_ngrams(df: DataFrame, *, text_col: str, id_col: str) -> DataFrame:
-    """(id, gram) — lowercased whitespace unigrams + bigrams, one row per
-    occurrence. Pure JVM (split + window slices)."""
-    toks = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("id"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("l"),
-    )
-    nbig = F.size("l") - F.lit(1)
-    bigrams = F.when(
-        nbig >= 1,
-        F.transform(
-            F.sequence(F.lit(1), nbig),
-            lambda i: F.array_join(F.slice(F.col("l"), i, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return toks.select(
-        "id", F.explode(F.concat(F.col("l"), bigrams)).alias("gram")
-    ).filter(F.col("gram") != "")
-
-
 def _ln_e6(x: Column) -> Column:
     return F.floor(F.log(x.cast("double")) * E6).cast("long")
 

@@ -495,6 +495,9 @@ def grok(
     row engine keeps a scalar there).
 
     ``backend='auto'`` picks ``expr`` up to 3 captures and ``arrow`` above.
+    A pattern using QUOTEDSTRING (``QS``) always goes to ``arrow``: Java
+    regex recurses once per iteration of its loop, so a ~64 KB quoted field
+    overflows the stack and takes the local JVM down; RE2 does not recurse.
     The JVM expr backend rescans once per capture (local[32], 4M apache
     lines: fine at <=3 captures, 8x slower at 11, ~115k rows/s on
     COMBINEDAPACHELOG); the arrow backend extracts every capture in one
@@ -507,7 +510,8 @@ def grok(
     compiled = [compile_grok(p, extra_patterns) for p in pats]
     if backend == "auto":
         max_caps = max((len(cg.captures) for cg in compiled), default=0)
-        backend = "expr" if max_caps <= 3 else "arrow"
+        quoted = any(BASE_PATTERNS["QUOTEDSTRING"] in cg.regex for cg in compiled)
+        backend = "expr" if max_caps <= 3 and not quoted else "arrow"
     if backend not in ("expr", "arrow"):
         raise ValueError(f"grok backend must be 'expr', 'arrow' or 'auto', not {backend!r}")
 

@@ -8,7 +8,7 @@ codegen'd columnar ops with no Python in the path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,12 +71,6 @@ def infer_json_schema(df: DataFrame, source: str, sample: int = 100) -> T.Struct
         spark.sparkContext.parallelize([r["j"] for r in rows], 1)
     )
     return inferred.schema
-
-
-def json_field(source: Column, path: str) -> Column:
-    """Cheap single-field extraction (`get_json_object`) — use when only one
-    key is needed; avoids materializing the struct."""
-    return F.get_json_object(source, path)
 
 
 def kv(

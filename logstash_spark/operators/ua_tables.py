@@ -15,7 +15,7 @@ players, smart-TV/console/car shells, phone-brand model extraction and
 legacy/hobby OSes — the long tail that previously fell to 'Other'. Entry shape (a dict, mirroring uap-core's
 keys where they exist):
 
-    regex    detect regex (rlike; may use (?i))                 [required]
+    regex    detect regex (searched; may use (?i))              [required]
     family   family name; may contain '$1' = detect group 1     [required]
     version  SINGLE-capture version regex (group 1 = full dotted version)
     v_groups list of group indices INTO `regex` joined with '.'
@@ -29,8 +29,10 @@ family has no version (empty string, matching the plugin's behavior).
 drops one in) into this shape via the engine's vendored YAML reader, so
 full-database fidelity is a config option, not a code change.
 
-Everything compiles to ONE JVM-side rlike cascade per section (see
-operators/enrich.py:useragent) — no Python in the row path.
+Patterns are Python `re` (compiled with re.ASCII), which is also the
+engine the public Python ua-parser reads `regexes.yaml` with;
+operators/enrich.py:useragent runs the three first-match cascades once per
+distinct agent of each Arrow batch.
 """
 
 from __future__ import annotations
@@ -542,8 +544,8 @@ def load_uap_parsers(path: str) -> dict[str, list[dict]]:
                 if v2 is not None:
                     entry["v2"] = str(v2)
             else:
-                # clip to the groups the regex actually has — Spark's
-                # regexp_extract raises on an out-of-range group index
+                # clip to the groups the regex actually has — Python's
+                # Match.group raises on an out-of-range group index
                 ngroups = _re.compile(e["regex"]).groups
                 groups = [g for g in (2, 3, 4) if g <= ngroups]
                 if groups:

@@ -27,8 +27,3 @@ def assert_no_python_udf(df: DataFrame) -> None:
     UDF) is allowed — that's the sanctioned slow path."""
     plan = physical_plan(df)
     assert "BatchEvalPython" not in plan, "row-at-a-time Python UDF in plan:\n" + plan
-
-
-def assert_pushed_filters(df: DataFrame, fragment: str) -> None:
-    plan = physical_plan(df)
-    assert "PushedFilters" in plan and fragment in plan, plan

@@ -13,11 +13,14 @@ Multi-sink fan-out uses foreachBatch: one micro-batch scan, N filtered
 writes — same single-pass rule as the batch path.
 
 Resumability (north rule): `checkpointLocation` recovers offsets, and
-foreachBatch is AT-LEAST-ONCE — so path-backed sinks are written to a
-per-batch subdirectory with overwrite (a replayed batch rewrites ITS OWN
-directory: idempotent, effectively exactly-once). Wire sinks (tcp/udp/
-statsd) have no replayable target and stay at-least-once — documented,
-not promised away. Batch lineage lives in lineage.py.
+foreachBatch is AT-LEAST-ONCE — so each sink appends to its path and then
+drops a marker in a per-(sink, batch_id) commit ledger under
+`<checkpoint>/sink-commits`. A replayed batch skips the sinks that already
+committed it and writes only the others; the residual window is a crash
+between a sink's write and its marker. Overwrite-mode path sinks are
+rejected at start (each batch would erase the previous ones). Wire sinks
+(tcp/udp/statsd) have no replayable target and stay at-least-once —
+documented, not promised away. Batch lineage lives in lineage.py.
 """
 
 from __future__ import annotations

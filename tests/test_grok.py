@@ -240,6 +240,23 @@ def test_capture_named_after_source_column(spark):
         assert "_grokparsefailure" in bad["tags"], backend
 
 
+def test_auto_backend_sends_quotedstring_to_arrow(spark):
+    """A 3-capture pattern would pick the JVM expr backend, but Java regex
+    overflows its stack on QUOTEDSTRING's loop over a 64 KB quoted field
+    (and takes the local JVM down with it). Under 'auto' any pattern using
+    QUOTEDSTRING runs on RE2 instead."""
+    from logstash_spark.operators.grok import grok
+    from logstash_spark.plans.checks import physical_plan
+
+    q = '"' + "a" * 65536 + '"'
+    df = spark.createDataFrame([(f"GET {q} 200",)], "text string")
+    out = grok(df, "text", "%{WORD:verb} %{QS:q} %{NUMBER:code}")
+    assert "ArrowEvalPython" in physical_plan(out)
+    row = out.collect()[0]
+    assert (row["verb"], row["q"], row["code"]) == ("GET", q, "200")
+    assert len(row["q"]) == 65538
+
+
 def test_grok_append_to_existing_field_default(spark):
     """Reference default (filters/base.rb:182-196): a capture landing on an
     EXISTING field appends into an array [existing, captured]; overwrite

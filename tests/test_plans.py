@@ -95,3 +95,11 @@ def test_shipped_job_plan_shape(spark, tmp_path):
     assert "BatchEvalPython" not in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
+    # every stage compiles: with the fallback off, a generated method over
+    # the 64 KB limit fails the query instead of running interpreted
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        assert len(df.limit(5).collect()) == 5
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)

@@ -231,3 +231,41 @@ def test_r5_breadth_wave(spark):
         assert (r["ua_version"] or "") == ver, (i, r["ua_version"], ver)
         assert r["ua_os"] == os_, (i, r["ua_os"], os_)
         assert r["ua_device"] == dev, (i, r["ua_device"], dev)
+
+
+def test_useragent_matches_golden(spark):
+    """tests/data/ua_golden.jsonl was recorded from the JVM rlike/
+    regexp_extract cascade the pandas UDF replaced: one agent per distinct
+    (name, os, device) over a 5k-agent probe set, plus null, '', non-ASCII
+    and 5,000-char agents. Every one of the 7 fields must reproduce, and
+    the classifier runs as ONE Arrow UDF evaluation."""
+    import json
+    import os
+
+    from logstash_spark.plans.checks import physical_plan
+
+    path = os.path.join(os.path.dirname(__file__), "data", "ua_golden.jsonl")
+    with open(path, encoding="utf-8") as f:
+        gold = [json.loads(line) for line in f]
+    fields = ["name", "version", "major", "minor", "os", "os_version", "device"]
+    df = spark.createDataFrame([(i, g["agent"]) for i, g in enumerate(gold)], "i int, agent string")
+    out = useragent(df, "agent")
+    plan = physical_plan(out)
+    assert "pythonUDF0" in plan and "pythonUDF1" not in plan
+    got = {r["i"]: r for r in out.collect()}
+    bad = [(g["agent"] and g["agent"][:80], f, got[i]["ua_" + f], g[f])
+           for i, g in enumerate(gold) for f in fields if got[i]["ua_" + f] != g[f]]
+    assert not bad, bad[:10]
+
+
+def test_useragent_rejects_bad_regex_at_plan_time(spark):
+    """Tables compile on the driver: a pattern Python's `re` rejects (here
+    the Java-only `(?<name>...)` group) raises when the plan is built, not
+    inside an executor."""
+    import re
+
+    import pytest
+
+    df = spark.createDataFrame([Row(agent="x")])
+    with pytest.raises(re.error):
+        useragent(df, "agent", tables={"ua": [{"family": "X", "regex": "(?<n>x)"}]})

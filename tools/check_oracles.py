@@ -47,6 +47,9 @@ def main() -> int:
     from logstash_spark.session import get_spark
 
     spark = get_spark(cores=8)
+    # a stage whose generated code fails to compile fails its query here
+    # instead of silently running interpreted
+    spark.conf.set("spark.sql.codegen.fallback", "false")
     qs, oracles = entry.queries(), entry.oracle_sql()
 
     con = duckdb.connect()
