@@ -15,14 +15,22 @@ on restart (per-partition lineage — logstash_spark.lineage). Day predicates
 prune the scan (partition pruning on a date-partitioned table), so a
 restart only pays for unfinished days.
 
+Delivery: the built-in pipeline adds ``day = to_date(warc_ts)`` to its
+input, and its sinks and ``<out>/agg`` are partitioned by ``day`` and
+written with dynamic partition overwrite. A day that re-runs (a resume
+after a failure between its writes and its manifest record) replaces its
+own partitions, so each input row is written once. ``--conf`` / ``--spec``
+outputs keep their configured modes: an append sink among them is
+at-least-once on resume.
+
 Routing happens once per slice: ``write_outputs`` evaluates the ``Output``
 predicates over the persisted transformed frame and writes every sink. The
-built-in outputs carry ``agg_by=["lang"]``, so the per-sink aggregate is
-grouped off that same cached frame; its rows ``(sink, lang, n)`` are
-appended to ``<out>/agg`` and their per-sink sums are the ``rows_out`` of
-the slice. ``rows_in`` is the row count the parse Observation saw. Outputs
-without ``agg_by`` (``--conf`` / ``--spec`` pipelines) add no aggregate and
-no ``rows_out`` entry.
+built-in outputs carry ``agg_by=["day", "lang"]``, so the per-sink
+aggregate is grouped off that same cached frame; its rows ``(sink, day,
+lang, n)`` are written to ``<out>/agg`` and their per-sink sums are the
+``rows_out`` of the slice. ``rows_in`` is the row count the parse
+Observation saw. Outputs without ``agg_by`` (``--conf`` / ``--spec``
+pipelines) add no aggregate and no ``rows_out`` entry.
 
 `--input synthetic:N` generates the deterministic page table in-place
 (no external data) — used for smoke runs and the scaling bench.
@@ -67,10 +75,12 @@ def build_pipeline(out_dir: str):
             Stage(op="useragent", params={"source": "agent"}),
         ],
         outputs=[
-            Output("errors", ParquetSink(os.path.join(out_dir, "errors"), mode="append"),
-                   when=Rx(Field("[response]"), "^5"), agg_by=["lang"]),
-            Output("ok", ParquetSink(os.path.join(out_dir, "ok"), mode="append"),
-                   when=Not(Rx(Field("[response]"), "^5")), agg_by=["lang"]),
+            Output("errors", ParquetSink(os.path.join(out_dir, "errors"), mode="overwrite",
+                                         partition_by=("day",)),
+                   when=Rx(Field("[response]"), "^5"), agg_by=["day", "lang"]),
+            Output("ok", ParquetSink(os.path.join(out_dir, "ok"), mode="overwrite",
+                                     partition_by=("day",)),
+                   when=Not(Rx(Field("[response]"), "^5")), agg_by=["day", "lang"]),
         ],
     )
 
@@ -82,6 +92,8 @@ def main() -> None:
 
     # spark-submit provides the session config; getOrCreate attaches to it
     spark = SparkSession.builder.appName("logstash_spark.run_pipeline").getOrCreate()
+    # an overwrite of a day-partitioned sink replaces only the days written
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     from logstash_spark.metrics import PipelineMetrics
     from logstash_spark.sinks import write_outputs
@@ -93,6 +105,7 @@ def main() -> None:
     else:
         pages = read_pages(spark, args.input)
 
+    day = F.to_date("warc_ts")
     if args.conf:
         from logstash_spark.conf import compile_file
 
@@ -103,6 +116,9 @@ def main() -> None:
         pipe = from_file(args.spec)
     else:
         pipe = build_pipeline(args.out)
+        # the one day column: it slices --by-day and partitions the sinks
+        pages = pages.withColumn("day", day)
+        day = F.col("day")
     if not pipe.outputs:
         sys.exit("run_pipeline: the pipeline has no outputs")
     pm = PipelineMetrics()
@@ -115,19 +131,19 @@ def main() -> None:
                               failure_tags=["_grokparsefailure", "_dateparsefailure"])
         results = write_outputs(observed, pipe.outputs)
         aggs = {o.name: results[f"{o.name}__agg"] for o in pipe.outputs if o.agg_by}
-        rows = [(sink, lang, n) for sink, agg in aggs.items() for (lang,), n in agg.items()]
+        rows = [(sink, d, lang, n) for sink, agg in aggs.items() for (d, lang), n in agg.items()]
         if rows:
-            spark.createDataFrame(rows, "sink string, lang string, n long") \
-                .write.mode("append").parquet(os.path.join(args.out, "agg"))
+            spark.createDataFrame(rows, "sink string, day date, lang string, n long").write \
+                .mode("overwrite").partitionBy("day").parquet(os.path.join(args.out, "agg"))
         return pm.observations[stage].get["rows"], {s: sum(a.values()) for s, a in aggs.items()}
 
     if args.by_day and args.manifest:
         from logstash_spark.lineage import run_partitioned
 
-        days = [r["d"] for r in pages.select(F.to_date("warc_ts").alias("d")).distinct().orderBy("d").collect()]
+        days = [r["d"] for r in pages.select(day.alias("d")).distinct().orderBy("d").collect()]
 
-        def job(day: str):
-            return run_slice(pages.filter(F.to_date("warc_ts") == day), day)
+        def job(d: str):
+            return run_slice(pages.filter(day == d), d)
 
         manifest = run_partitioned(spark, [str(d) for d in days], job, args.manifest)
         print(json.dumps({"days": len(manifest.entries), "metrics": pm.report()}))

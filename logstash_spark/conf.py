@@ -1693,15 +1693,3 @@ def bind_input(spark, node: PluginNode, *, stdin_lines=None):
         df = df.withColumn(k, F.lit(v))
     return df
 
-
-def run_conf_file(spark, path: str, *, out_dir: str, input_df=None) -> dict:
-    """compile_file + bind the first input + run — one call from a .conf
-    to written sinks (pass ``input_df`` to override the input binding)."""
-    pipe, inputs = compile_file(path, out_dir=out_dir)
-    if input_df is None:
-        if not inputs:
-            raise ConfCompileError("config has no input section; pass input_df")
-        input_df = bind_input(spark, inputs[0])
-        for extra in inputs[1:]:
-            input_df = input_df.unionByName(bind_input(spark, extra), allowMissingColumns=True)
-    return pipe.run(input_df)

@@ -586,8 +586,6 @@ def decode_media(buf: bytes):
     return None
 
 
-_FEATURE_SCHEMA = "media_id long, n_bytes int, byte_mean double, byte_entropy double"
-
 _DECODE_FEATURE_SCHEMA = (
     "media_id long, fmt string, width int, height int, n_pix int, "
     "px_mean double, px_entropy double"
@@ -687,70 +685,6 @@ def media_ahash(df: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "ahash"])
 
     return df.select("media_id", "bytes").mapInPandas(batches, "media_id long, ahash long")
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Feature extraction over media bytes via mapInPandas (Arrow batches).
-
-    With a real codec this is decode->embed; here the features are computed
-    on the raw bytes (size, mean, entropy) — the BATCH SHAPE and partition
-    behavior are identical to the production path, only the kernel differs.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            b = pdf["bytes"]
-            n = b.str.len().fillna(0).astype("int64")
-            out = pd.DataFrame({"media_id": pdf["media_id"], "n_bytes": n.astype("int32")})
-            means, ents = [], []
-            for buf in b:
-                if buf is None or len(buf) == 0:
-                    means.append(0.0)
-                    ents.append(0.0)
-                    continue
-                arr = np.frombuffer(buf, dtype=np.uint8)
-                means.append(float(arr.mean()))
-                counts = np.bincount(arr, minlength=256) / len(arr)
-                nz = counts[counts > 0]
-                ents.append(float(-(nz * np.log2(nz)).sum()))
-            out["byte_mean"] = means
-            out["byte_entropy"] = ents
-            yield out
-
-    return df.select("media_id", "bytes").mapInPandas(batches, _FEATURE_SCHEMA)
-
-
-def decode_image(df: DataFrame, *, target_size: tuple[int, int] = (64, 64)) -> DataFrame:
-    """Decode + nearest-neighbor resize to ``target_size`` grayscale.
-
-    The decode is the REAL stdlib PPM/BMP/PNG parser above (no PIL
-    needed); JPEG would slot into :func:`decode_media` behind the same
-    signature — the Spark plumbing (Arrow batches, array<int> pixels
-    schema, partition sizing) is identical either way. Undecodable payloads
-    come back decoded=false with null pixels (keep-and-flag, so a corrupt
-    blob doesn't silently shrink the corpus)."""
-    out_schema = "media_id long, pixels array<int>, decoded boolean"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tw, th = target_size
-        for pdf in it:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["bytes"]):
-                d = decode_media(buf)
-                if d is None:
-                    rows.append((mid, None, False))
-                    continue
-                _fmt, w, h, raster = d
-                px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
-                gray = px.mean(axis=2)
-                # nearest-neighbor resample to (th, tw)
-                yi = (np.arange(th) * h) // th
-                xi = (np.arange(tw) * w) // tw
-                small = gray[np.ix_(yi, xi)].astype("int32")
-                rows.append((mid, small.ravel().tolist(), True))
-            yield pd.DataFrame(rows, columns=["media_id", "pixels", "decoded"])
-
-    return df.select("media_id", "bytes").mapInPandas(batches, out_schema)
 
 
 # ---------------------------------------------------------------------------

@@ -327,7 +327,7 @@ def sessionize(
 ) -> DataFrame:
     """Gap-based sessionization: within each key, a new session starts when
     the time since the previous event reaches ``gap_sec`` (>= — the
-    half-open [t, t+gap) rule shared with streaming session_window; the
+    half-open [t, t+gap) rule of Spark's session_window; the
     classic web/log-analytics operator; the reference ecosystem reaches it
     via the aggregate filter's task_id correlation — this is the
     declarative form).
@@ -348,9 +348,8 @@ def sessionize(
     w = W.partitionBy(key_col).orderBy(*order)
     prev = F.lag(tsec).over(w)
     # >= : an event exactly gap_sec after the last one starts a NEW
-    # session — the same half-open [t, t+gap) rule as the native
-    # streaming session_window, so batch and streaming rollups agree
-    # at the boundary
+    # session — the same half-open [t, t+gap) rule as Spark's native
+    # session_window
     brk = F.when(prev.isNull() | ((tsec - prev) >= gap_sec), 1).otherwise(0)
     cum = W.partitionBy(key_col).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
     return df.withColumn(out, F.sum(brk).over(cum).cast("int"))

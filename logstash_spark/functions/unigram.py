@@ -217,22 +217,3 @@ def unigram_tokenize(
 
     raise ValueError(f"unknown unigram backend {backend!r}")
 
-
-def viterbi_segmentations(w: str, vocab: list[tuple[str, int]]):
-    """ALL full segmentations of ``w`` with their (score, n_pieces) —
-    the brute-force cross-check tests use to assert the oracle fixture
-    is tie-free under the adjusted objective. Exponential; test-only."""
-    out = []
-
-    def rec(pos, score, pieces):
-        if pos == len(w):
-            out.append((score, len(pieces), list(pieces)))
-            return
-        for p, s in vocab:
-            if w.startswith(p, pos):
-                pieces.append(p)
-                rec(pos + len(p), score + s, pieces)
-                pieces.pop()
-
-    rec(0, 0, [])
-    return out

@@ -445,196 +445,6 @@ def encode_netflow5(records: list[tuple]) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# netflow v9 (RFC 3954) — template-described records: template FlowSets
-# (id 0) define per-(source_id, template_id) field layouts; data FlowSets
-# (id > 255) carry records in that layout. Stateful template cache per
-# stream inside mapInPandas (same shape as collectd's parts context).
-# ---------------------------------------------------------------------------
-
-NETFLOW9_SCHEMA = (
-    "flow_seq bigint, source_id bigint, unix_secs bigint, src_addr string, "
-    "dst_addr string, src_port int, dst_port int, protocol int, "
-    "in_pkts bigint, in_bytes bigint, first_switched bigint, last_switched bigint"
-)
-
-# RFC 3954 §8 field types we surface as named columns
-_NF9_FIELDS = {
-    1: "in_bytes", 2: "in_pkts", 4: "protocol", 7: "src_port",
-    8: "src_addr", 11: "dst_port", 12: "dst_addr",
-    21: "last_switched", 22: "first_switched",
-    # IPv6 flows (RFC 3954 §8 types 27/28) land in the same address
-    # columns, rendered in colon-hex by the length-aware ip() helper
-    27: "src_addr", 28: "dst_addr",
-}
-_NF9_IP_FIELDS = {"src_addr", "dst_addr"}
-
-
-def decode_netflow9(
-    df: DataFrame, source: str = "bytes", stream_key: str | None = None,
-    order_by: str | None = None,
-) -> DataFrame:
-    """netflow v9 / IPFIX (v10) decode with TEMPLATE state: template sets
-    seen earlier in the stream describe later data sets (RFC 3954 / RFC
-    7011 — IPFIX differs in header size, set ids 2/3 and enterprise IEs,
-    all handled). The template cache is keyed (stream, source_id,
-    template_id) and lives for the partition — pass ``stream_key``
-    (exporter address) so packets of one exporter stay together; data
-    records whose template has not arrived yet are skipped, exactly like
-    the plugin (it logs+waits for the template).
-
-    Scale shape: one repartition on stream_key (when given) so each
-    exporter's packet sequence lands in one task in arrival order; decode
-    is then a single stateful pass per partition — no shuffle afterwards.
-    """
-    import struct
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T._parse_datatype_string(NETFLOW9_SCHEMA)
-    names = [f_.name for f_ in out_schema.fields]
-
-    def ip(raw: bytes) -> str:
-        if len(raw) == 16:  # IPv6 IE (types 27/28)
-            import ipaddress
-
-            return str(ipaddress.IPv6Address(raw))
-        return ".".join(str(b) for b in raw[:4])
-
-    def batches(it):
-        templates: dict[tuple, list[tuple[int, int]]] = {}
-        for pdf in it:
-            rows = []
-            keys = pdf[stream_key] if stream_key and stream_key in pdf.columns else [None] * len(pdf)
-            for raw, skey in zip(pdf[source], keys):
-                if raw is None or len(raw) < 16:
-                    continue
-                buf = bytes(raw)
-                (version,) = struct.unpack_from(">H", buf, 0)
-                if version == 9:
-                    if len(buf) < 20:
-                        continue
-                    _v, _count, _uptime, unix_secs, flow_seq, source_id = struct.unpack_from(
-                        ">HHIIII", buf, 0
-                    )
-                    pos, tmpl_set, opt_set = 20, (0,), (1,)
-                elif version == 10:  # IPFIX (RFC 7011): 16B header, set ids 2/3
-                    _v, _length, unix_secs, flow_seq, source_id = struct.unpack_from(
-                        ">HHIII", buf, 0
-                    )
-                    pos, tmpl_set, opt_set = 16, (2,), (3,)
-                else:
-                    continue
-                while pos + 4 <= len(buf):
-                    set_id, set_len = struct.unpack_from(">HH", buf, pos)
-                    if set_len < 4 or pos + set_len > len(buf):
-                        break  # corrupt set length: stop parsing the packet
-                    body, end = pos + 4, pos + set_len
-                    if set_id in tmpl_set:  # template set
-                        p = body
-                        while p + 4 <= end:
-                            tid, fcount = struct.unpack_from(">HH", buf, p)
-                            p += 4
-                            fields = []
-                            ok = True
-                            for _j in range(fcount):
-                                if p + 4 > end:
-                                    ok = False
-                                    break
-                                ie, fl = struct.unpack_from(">HH", buf, p)
-                                p += 4
-                                if version == 10 and ie & 0x8000:
-                                    # enterprise IE: 4-byte enterprise number
-                                    # follows (RFC 7011 §3.2); field kept by
-                                    # length, surfaced only if a known IE
-                                    p += 4
-                                    ie &= 0x7FFF
-                                fields.append((ie, fl))
-                            if not ok:
-                                break
-                            templates[(skey, source_id, tid)] = fields
-                    elif set_id in opt_set:
-                        pass  # options template: no event data
-                    elif set_id > 255:  # data FlowSet
-                        tmpl = templates.get((skey, source_id, set_id))
-                        if tmpl is None:
-                            pass  # template not yet seen: skip (plugin behavior)
-                        else:
-                            rec_len = sum(fl for _ft, fl in tmpl)
-                            p = body
-                            while rec_len > 0 and p + rec_len <= end:
-                                ev = {"flow_seq": flow_seq, "source_id": source_id,
-                                      "unix_secs": unix_secs}
-                                q = p
-                                for ft, fl in tmpl:
-                                    name = _NF9_FIELDS.get(ft)
-                                    if name is not None:
-                                        if name in _NF9_IP_FIELDS:
-                                            # types 8/12 (IPv4) and 27/28
-                                            # (IPv6) share a column; a
-                                            # template carrying BOTH keeps
-                                            # the FIRST-seen address so the
-                                            # family is deterministic per
-                                            # template order, never a silent
-                                            # later-field overwrite
-                                            ev.setdefault(name, ip(buf[q:q + fl]))
-                                        else:
-                                            ev[name] = int.from_bytes(buf[q:q + fl], "big")
-                                    q += fl
-                                rows.append(tuple(ev.get(n) for n in names))
-                                p += rec_len
-                    pos = end
-            yield pd.DataFrame(rows, columns=names)
-
-    if stream_key:
-        # one task per exporter stream; order_by (capture seq) restores
-        # arrival order after the shuffle so templates precede their data
-        df = df.repartition(stream_key)
-        if order_by:
-            df = df.sortWithinPartitions(stream_key, order_by)
-    return df.mapInPandas(batches, out_schema)
-
-
-def encode_netflow9_template(source_id: int, template_id: int, fields: list[tuple[int, int]],
-                             seq: int = 0) -> bytes:
-    """Test-side builder: one v9 packet holding one template FlowSet."""
-    import struct
-
-    body = struct.pack(">HH", template_id, len(fields))
-    for ft, fl in fields:
-        body += struct.pack(">HH", ft, fl)
-    fset = struct.pack(">HH", 0, 4 + len(body)) + body
-    hdr = struct.pack(">HHIIII", 9, 1, 0, 1700000000, seq, source_id)
-    return hdr + fset
-
-
-def encode_netflow9_data(source_id: int, template_id: int, records: list[bytes],
-                         seq: int = 0) -> bytes:
-    """Test-side builder: one v9 packet holding one data FlowSet of
-    pre-packed records (pad to a 4-byte boundary per RFC 3954 §5.3)."""
-    import struct
-
-    body = b"".join(records)
-    pad = (-len(body)) % 4
-    fset = struct.pack(">HH", template_id, 4 + len(body) + pad) + body + b"\x00" * pad
-    hdr = struct.pack(">HHIIII", 9, len(records), 0, 1700000000, seq, source_id)
-    return hdr + fset
-
-
-def encode_ipfix(source_id: int, sets: list[tuple[int, bytes]], seq: int = 0) -> bytes:
-    """Test-side builder: one IPFIX message (RFC 7011 16-byte header) from
-    (set_id, body) pairs; the message length field is computed."""
-    import struct
-
-    payload = b""
-    for set_id, body in sets:
-        pad = (-len(body)) % 4
-        payload += struct.pack(">HH", set_id, 4 + len(body) + pad) + body + b"\x00" * pad
-    hdr = struct.pack(">HHIII", 10, 16 + len(payload), 1700000000, seq, source_id)
-    return hdr + payload
-
-
-# ---------------------------------------------------------------------------
 # collectd codec (default_plugins.rb:24) — TLV "parts" binary protocol:
 # (type uint16, length uint16, payload); stdlib struct in mapInPandas
 # ---------------------------------------------------------------------------

@@ -234,7 +234,7 @@ def translate_literal(
         m = F.create_map(
             *[F.lit(x) for kv in dictionary.items() for x in (str(kv[0]), kv[1])]
         )
-        out = m.getItem(src)
+        out = F.try_element_at(m, src)  # null on a missing key, ANSI or not
     if fallback is not None:
         out = F.coalesce(out, F.lit(fallback))
     if not override and target in df.columns:

@@ -12,8 +12,8 @@ groupBy concatenates. Two shuffles (window + agg) on the same key — AQE
 coalesces; the key (source file/stream id) is the natural partitioner, so
 state never crosses partitions.
 
-Streaming design lives in logstash_spark.streaming.stateful
-(applyInPandasWithState) — same grouping semantics with timeout-based flush.
+Batch only: Structured Streaming does not support the window functions
+this needs.
 """
 
 from __future__ import annotations

@@ -7,7 +7,7 @@
 All three grammars are public (Ganglia 3.1 XDR gmetric packets; the NSCA
 2.x `data_packet` struct from nsca's common.h; X.690 BER + RFC 1157/3416
 trap PDUs) and fixed enough for stdlib `struct` — the same stance as
-netflow v5/v9 and collectd in codecs.py: decode runs as an Arrow-batched
+netflow v5 and collectd in codecs.py: decode runs as an Arrow-batched
 mapInPandas over a binary column (linear, shuffle-free, scale-safe), and
 each protocol ships a pure-Python encoder so output->input round-trips
 the real bytes in tests without any live daemon.

@@ -55,32 +55,6 @@ def read_pages(spark: SparkSession, location: str, *, streaming: bool = False) -
     return spark.read.parquet(location)
 
 
-def read_warc_pages(spark: SparkSession, location: str, *, pattern: str = "*.warc*") -> DataFrame:
-    """Crawl intake from WARC segments on disk/object store: binaryFile
-    scan (one file per row; set spark.sql.files.maxPartitionBytes >= the
-    segment size so a file never splits) -> decode_warc -> the engine's
-    pages schema. ``lang`` is null at intake — language ID is a pipeline
-    stage (functions.text.lang_id), not a container field."""
-    from pyspark.sql import functions as F
-
-    from logstash_spark.sources.warc import decode_warc
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(location)
-        .select("content")
-    )
-    recs = decode_warc(files)
-    return recs.select(
-        F.col("url"),
-        F.to_timestamp(F.col("warc_date"), "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.col("payload").cast("string").alias("text"),
-        F.lit(None).cast("string").alias("lang"),
-    )
-
-
 def write_pages(df: DataFrame, location: str, *, mode: str = "overwrite") -> None:
     """Write the pages table partitioned for the pipeline's access pattern:
     day(warc_ts) partitions + url-hash bucketing would apply on Iceberg

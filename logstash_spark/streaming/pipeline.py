@@ -10,7 +10,10 @@ input loop (pipeline.rb:173-207) -> checkpointed offsets + task retries.
 The filter chain is IDENTICAL code to batch (Pipeline.transform works on a
 streaming DataFrame unchanged — that's the point of declaring the plan).
 Multi-sink fan-out uses foreachBatch: one micro-batch scan, N filtered
-writes — same single-pass rule as the batch path.
+writes — same single-pass rule as the batch path. Windowed and sketch
+aggregates need no stream-only helpers: Spark's `window`/`session_window`
+and the batch sketch functions (functions/sketch.py) run on a watermarked
+stream unchanged.
 
 Resumability (north rule): `checkpointLocation` recovers offsets, and
 foreachBatch is AT-LEAST-ONCE — so each sink appends to its path and then
@@ -116,146 +119,3 @@ def run_streaming(
         .start()
     )
 
-
-def progress_stats(query) -> dict:
-    """The pipeline-stats-API mirror for streaming (reference: queue/thread
-    observability, util.rb:12-25, sized_queue.rb): digest of Structured
-    Streaming's progress events — rows in/processed per second, batch
-    durations, state rows — without any extra instrumentation."""
-    recents = query.recentProgress or []
-    last = query.lastProgress or {}
-    total_rows = sum(int(p.get("numInputRows", 0)) for p in recents)
-    durations = [p.get("durationMs", {}).get("triggerExecution") for p in recents]
-    durations = [d for d in durations if d is not None]
-    return {
-        "batches": len(recents),
-        "total_input_rows": total_rows,
-        "last_input_rows_per_sec": last.get("inputRowsPerSecond"),
-        "last_processed_rows_per_sec": last.get("processedRowsPerSecond"),
-        "mean_trigger_ms": (sum(durations) / len(durations)) if durations else None,
-        "state_rows": sum(
-            int(s.get("numRowsTotal", 0)) for s in (last.get("stateOperators") or [])
-        ),
-    }
-
-
-def windowed_counts(stream_df: DataFrame, *, ts: str, key: str, window: str = "5 minutes") -> DataFrame:
-    """The metrics-filter analog on a stream: watermarked windowed counts."""
-    return (
-        ensure_event_time(stream_df, ts).withWatermark(ts, "10 minutes")
-        .groupBy(F.window(F.col(ts), window).alias("w"), F.col(key))
-        .count()
-        .select(F.col("w.start").alias("window_start"), key, "count")
-    )
-
-
-def session_rollup(
-    stream_df: DataFrame,
-    *,
-    ts: str,
-    key: str,
-    gap: str = "15 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Streaming gap-based sessionization via the engine's NATIVE session
-    windows (`F.session_window`): a session extends while events for a key
-    arrive within ``gap``; the watermark closes sessions whose gap has
-    definitively passed, so state is bounded and results are append-able.
-
-    This is the streaming twin of `stats.sessionize` (batch lag+cumsum):
-    the batch form numbers sessions 1..n per key for replayable oracles;
-    the native session window keys sessions by [start, end) — the right
-    shape when the stream never ends. State: one (key, open-session) row
-    per active key, merged by the state store; no applyInPandas needed —
-    session merge is engine-side JVM code.
-
-    Boundary parity with the batch form: event times are floored to whole
-    seconds here (sessionize compares epoch seconds), and both forms break
-    a session when the gap is >= the threshold — session_window's window
-    is [t, t+gap), so an event exactly gap after the last one starts a new
-    session, and stats.sessionize uses the same >= rule.
-
-    Works on batch frames too (session_window is a grouping expression),
-    where it degenerates to the same rollup as sessionize+groupBy modulo
-    session numbering vs bounds keying.
-    """
-    stream_df = ensure_event_time(stream_df, ts)
-    stream_df = stream_df.withColumn(ts, F.date_trunc("second", F.col(ts)))
-    return (
-        stream_df.withWatermark(ts, watermark)
-        .groupBy(F.session_window(F.col(ts), gap).alias("sw"), F.col(key))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key,
-            F.col("sw.start").alias("sess_start"),
-            F.col("sw.end").alias("sess_end"),
-            "n_events",
-        )
-    )
-
-
-def windowed_hll_distinct(
-    stream_df: DataFrame,
-    *,
-    ts: str,
-    key: str,
-    value: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Approximate distinct-count per (event-time window, key) on a
-    stream via the HLL register build (functions/sketch.py): the state
-    store holds at most m=4096 (window, key, reg) rows per group —
-    BOUNDED, unlike dropDuplicates-style exact distinct whose state is
-    the number of distinct values — and the watermark evicts closed
-    windows. The register aggregate is the SAME groupBy/max the batch
-    path uses, so stream-vs-batch equality is a replay test, not a
-    separate implementation (test_sketch::test_windowed_hll_stream_matches_batch)."""
-    from logstash_spark.functions.sketch import hll_estimate, hll_registers
-
-    df = ensure_event_time(stream_df, ts).withWatermark(ts, watermark)
-    regs = hll_registers(
-        df.withColumn("_w", F.window(F.col(ts), window)), ["_w", key], value
-    )
-    est = hll_estimate(regs, ["_w", key])
-    return est.select(
-        F.col("_w.start").alias("window_start"),
-        key,
-        "present",
-        "est_hll",
-    )
-
-
-def windowed_cms(
-    stream_df: DataFrame,
-    *,
-    ts: str,
-    tok: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    d: int = 4,
-    w: int = 512,
-) -> DataFrame:
-    """Count-Min registers per event-time window on a stream: state is
-    at most d*w BIGINT counters per open window (bounded regardless of
-    cardinality — the streaming-safe form of frequency tracking; exact
-    per-token counts would hold one state row per distinct token), and
-    the watermark evicts closed windows. The cell derivation is the
-    SAME _cms_cells map the batch cms_build uses, so stream-vs-batch
-    equality is a replay test (test_sketch::
-    test_windowed_cms_stream_matches_batch). Heavy-hitter queries probe
-    the emitted registers batch-side with cms_probe — the sketch per
-    window is d*w rows, so probing any candidate set broadcasts."""
-    from logstash_spark.functions.sketch import _cms_cells
-
-    df = ensure_event_time(stream_df, ts).withWatermark(ts, watermark)
-    cells = (
-        df.withColumn("_w", F.window(F.col(ts), window))
-        .withColumn("tok", F.col(tok))
-        .select("_w", F.explode(_cms_cells(d, w)).alias("cell"))
-        .select("_w", "cell.r", "cell.c")
-    )
-    regs = cells.groupBy("_w", "r", "c").agg(F.count("*").alias("cnt"))
-    return regs.select(
-        F.col("_w.start").alias("window_start"), "r", "c", "cnt"
-    )

@@ -402,77 +402,6 @@ def test_fluent_codec_roundtrip(spark):
     assert rows["u2"]["verb"] == "POST"
 
 
-def test_netflow9_template_decode(spark):
-    """netflow v9 (RFC 3954): template FlowSet defines the record layout;
-    later data FlowSets decode through the cached template; data arriving
-    BEFORE its template is skipped like the plugin."""
-    import struct
-
-    from logstash_spark.operators.codecs import (
-        decode_netflow9, encode_netflow9_data, encode_netflow9_template,
-    )
-
-    # template 256: src_addr(8,4) dst_addr(12,4) sport(7,2) dport(11,2)
-    # proto(4,1) in_pkts(2,4) in_bytes(1,4)
-    fields = [(8, 4), (12, 4), (7, 2), (11, 2), (4, 1), (2, 4), (1, 4)]
-    tmpl_pkt = encode_netflow9_template(source_id=7, template_id=256, fields=fields)
-
-    def rec(src, dst, sp, dp, proto, pkts, nbytes):
-        return (bytes(int(x) for x in src.split(".")) + bytes(int(x) for x in dst.split("."))
-                + struct.pack(">HHB", sp, dp, proto) + struct.pack(">II", pkts, nbytes))
-
-    data_pkt = encode_netflow9_data(7, 256, [
-        rec("10.0.0.1", "10.0.0.2", 1234, 80, 6, 10, 5000),
-        rec("10.0.0.3", "10.0.0.4", 5353, 53, 17, 2, 120),
-    ], seq=1)
-    early_pkt = encode_netflow9_data(99, 256, [rec("1.1.1.1", "2.2.2.2", 1, 2, 6, 1, 1)])
-
-    df = spark.createDataFrame(
-        [("e1", 0, bytearray(tmpl_pkt)), ("e1", 1, bytearray(data_pkt)),
-         ("e2", 0, bytearray(early_pkt))],  # e2: data before any template
-        "exporter string, seq int, bytes binary",
-    ).coalesce(1).sortWithinPartitions("exporter", "seq")
-    rows = decode_netflow9(df, "bytes").collect()
-    assert len(rows) == 2  # the template-less e2 record skipped
-    by_src = {r["src_addr"]: r for r in rows}
-    r1 = by_src["10.0.0.1"]
-    assert (r1["dst_addr"], r1["src_port"], r1["dst_port"], r1["protocol"],
-            r1["in_pkts"], r1["in_bytes"]) == ("10.0.0.2", 1234, 80, 6, 10, 5000)
-    assert by_src["10.0.0.3"]["protocol"] == 17
-    assert all(r["source_id"] == 7 and r["unix_secs"] == 1700000000 for r in rows)
-
-    # truncated/corrupt packets never raise
-    junk = spark.createDataFrame(
-        [(bytearray(b"\x00\x09short"),), (bytearray(tmpl_pkt[:10]),)], "bytes binary")
-    assert decode_netflow9(junk, "bytes").count() == 0
-
-
-def test_ipfix_decode(spark):
-    """IPFIX / netflow v10 (RFC 7011): 16-byte header, template set id 2,
-    enterprise-bit IEs skipped by length, data set decoded through the
-    cached template."""
-    import struct
-
-    from logstash_spark.operators.codecs import decode_netflow9, encode_ipfix
-
-    # template 300 in set 2: src_addr(8,4), sport(7,2), enterprise IE
-    # (0x8000|99, len 8, enterprise 4242) ignored by name, in_bytes(1,4)
-    tmpl_body = struct.pack(">HH", 300, 4) + struct.pack(
-        ">HH", 8, 4) + struct.pack(">HH", 7, 2) + struct.pack(
-        ">HHI", 0x8000 | 99, 8, 4242) + struct.pack(">HH", 1, 4)
-    rec = bytes([10, 1, 2, 3]) + struct.pack(">H", 8080) + b"\x00" * 8 + struct.pack(">I", 777)
-    pkt_t = encode_ipfix(5, [(2, tmpl_body)])
-    pkt_d = encode_ipfix(5, [(300, rec + rec)], seq=1)
-    df = spark.createDataFrame(
-        [(0, bytearray(pkt_t)), (1, bytearray(pkt_d))], "seq int, bytes binary"
-    ).coalesce(1).sortWithinPartitions("seq")
-    rows = decode_netflow9(df, "bytes").collect()
-    assert len(rows) == 2
-    assert all(r["src_addr"] == "10.1.2.3" and r["src_port"] == 8080
-               and r["in_bytes"] == 777 and r["source_id"] == 5
-               and r["unix_secs"] == 1700000000 for r in rows)
-
-
 def test_warc_decode_roundtrip_plain_and_gzip(spark):
     """WARC container intake: response records recover url/date/status/
     content-type/payload exactly, in both the plain and the per-member
@@ -578,29 +507,6 @@ def test_warc_decode_malformed_and_truncated(spark):
     )
     rows = decode_warc(df).collect()
     assert len(rows) == 1 and rows[0].url == "https://x/1"
-
-
-def test_read_warc_pages_from_disk(spark, tmp_path):
-    """Production intake path: real .warc / .warc.gz files on disk ->
-    binaryFile scan -> pages schema with parsed warc_ts."""
-    from logstash_spark.sources.readers import read_warc_pages
-    from logstash_spark.sources.warc import encode_warc
-
-    (tmp_path / "seg1.warc").write_bytes(encode_warc(
-        [{"url": f"https://s1/{i}", "warc_date": f"2013-01-01T00:00:0{i}Z",
-          "payload": f"<p>{i}</p>".encode()} for i in range(3)]))
-    (tmp_path / "seg2.warc.gz").write_bytes(encode_warc(
-        [{"url": "https://s2/0", "warc_date": "2013-02-03T04:05:06Z",
-          "payload": b"<p>gz</p>"}], gzip_members=True))
-    (tmp_path / "ignore.txt").write_bytes(b"not warc")
-
-    pages = read_warc_pages(spark, str(tmp_path))
-    rows = {r.url: r for r in pages.collect()}
-    assert set(rows) == {"https://s1/0", "https://s1/1", "https://s1/2", "https://s2/0"}
-    assert rows["https://s2/0"].text == "<p>gz</p>"
-    assert str(rows["https://s2/0"].warc_ts) == "2013-02-03 04:05:06"
-    assert bytes(rows["https://s1/1"].html) == b"<p>1</p>"
-    assert pages.schema.simpleString() == "struct<url:string,warc_ts:timestamp,html:binary,text:string,lang:string>"
 
 
 def test_msgpack_encode_array_and_null_columns(spark):
@@ -726,54 +632,6 @@ def test_lumberjack_roundtrip_and_hostile(spark):
     ]
     hostile = spark.createDataFrame(bad, "stream binary")
     assert decode_lumberjack(hostile, "stream").count() == 0
-
-
-def test_netflow9_ipv6_fields_decode(spark):
-    """RFC 3954 §8 types 27/28 (IPV6_SRC/DST_ADDR) render colon-hex into
-    the same address columns as their IPv4 twins."""
-    import ipaddress
-    import struct as _s
-
-    from logstash_spark.operators.codecs import (
-        decode_netflow9, encode_netflow9_data, encode_netflow9_template,
-    )
-
-    fields = [(27, 16), (28, 16), (7, 2), (11, 2)]
-    tmpl = encode_netflow9_template(source_id=3, template_id=260, fields=fields)
-    src = ipaddress.IPv6Address("2001:db8::1").packed
-    dst = ipaddress.IPv6Address("::ffff:10.0.0.1").packed
-    rec = src + dst + _s.pack(">HH", 443, 51000)
-    data = encode_netflow9_data(source_id=3, template_id=260, records=[rec])
-    df = spark.createDataFrame([(tmpl,), (data,)], "bytes binary").coalesce(1)
-    rows = decode_netflow9(df).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["src_addr"] == "2001:db8::1"
-    assert r["dst_addr"] == "::ffff:a00:1"
-    assert (r["src_port"], r["dst_port"]) == (443, 51000)
-
-
-def test_netflow9_mixed_family_first_seen_wins(spark):
-    """A template carrying BOTH an IPv4 (type 8) and an IPv6 (type 27)
-    source-address IE keeps the FIRST-seen field per record — the family
-    is deterministic by template order, never a silent later overwrite."""
-    import ipaddress
-    import struct as _s
-
-    from logstash_spark.operators.codecs import (
-        decode_netflow9, encode_netflow9_data, encode_netflow9_template,
-    )
-
-    fields = [(8, 4), (27, 16), (11, 2)]  # IPv4 src first, then IPv6 src
-    tmpl = encode_netflow9_template(source_id=4, template_id=261, fields=fields)
-    v4 = bytes([10, 1, 2, 3])
-    v6 = ipaddress.IPv6Address("2001:db8::9").packed
-    rec = v4 + v6 + _s.pack(">H", 80)
-    data = encode_netflow9_data(source_id=4, template_id=261, records=[rec])
-    df = spark.createDataFrame([(tmpl,), (data,)], "bytes binary").coalesce(1)
-    rows = decode_netflow9(df).collect()
-    assert len(rows) == 1
-    assert rows[0]["src_addr"] == "10.1.2.3"  # first-seen (IPv4), not 2001:db8::9
 
 
 class TestDeclaredCharset:

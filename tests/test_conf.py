@@ -1,6 +1,12 @@
 """The .conf config-language front end — parsed and compiled against the
 reference's OWN tutorial configs (docs/tutorials/10-minute-walkthrough/)."""
 
+import ast
+import contextlib
+import io
+import os
+import sys
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -9,6 +15,19 @@ from logstash_spark.conf import ConfCompileError, compile_config, compile_file
 from logstash_spark.confparser import ConfSyntaxError, IfNode, PluginNode, parse_config
 
 REF = "/root/reference/docs/tutorials/10-minute-walkthrough"
+
+
+def _agent(conf, out_dir) -> dict:
+    """Run a .conf file through the shipped CLI (`jobs/agent.py -f`) and
+    return each output's printed result line."""
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
+    import agent
+
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        assert agent.main(["-f", str(conf), "--out", str(out_dir)]) == 0
+    return dict(line.split(": ", 1) for line in out.getvalue().splitlines() if ": " in line)
+
 
 GOLDEN_LINE = (
     '129.92.249.70 - - [18/Aug/2011:06:00:14 -0700] "GET /style2.css HTTP/1.1" '
@@ -441,9 +460,7 @@ def test_run_conf_file_end_to_end(spark, tmp_path):
       null {{ }}
     }}
     """)
-    from logstash_spark.conf import run_conf_file
-
-    res = run_conf_file(spark, str(conf), out_dir=str(tmp_path))
+    _agent(conf, tmp_path)
     big = spark.read.parquet(str(tmp_path / "big"))
     rows = {r["word"]: r for r in big.collect()}
     assert set(rows) == {"beta", "gamma"}
@@ -547,7 +564,7 @@ def test_statsd_bare_key_counts_constant(spark, tmp_path):
 def test_realworld_syslog_pipeline_end_to_end(spark, tmp_path):
     """A production-shaped .conf: file input -> grok SYSLOG + pri decode +
     date -> conditional routing to elasticsearch (real es_bulk wire) and a
-    severity counter — one run_conf_file call."""
+    severity counter — one agent CLI run."""
     import json as J
     import os
 
@@ -576,11 +593,9 @@ def test_realworld_syslog_pipeline_end_to_end(spark, tmp_path):
       statsd {{ increment => "sev.%{{syslog_severity_code}}" }}
     }}
     """)
-    from logstash_spark.conf import run_conf_file
-
-    res = run_conf_file(spark, str(conf), out_dir=str(tmp_path))
+    res = _agent(conf, tmp_path)
     # severity counter covers every event
-    assert sum(res["statsd_1"].values()) == 20
+    assert sum(ast.literal_eval(res["statsd_1"]).values()) == 20
     # severities 0-4 of the pri%8 cycle routed to the ES wire sink
     es_dir = os.path.join(str(tmp_path), "elasticsearch_0")
     doc_lines = [J.loads(l) for f in os.listdir(es_dir) if not f.startswith((".", "_"))
@@ -608,7 +623,7 @@ def test_multiline_input_codec_binding(spark, tmp_path):
     }}
     output {{ null {{ }} }}
     """)
-    from logstash_spark.conf import run_conf_file, bind_input, compile_file
+    from logstash_spark.conf import bind_input
 
     pipe, inputs = compile_file(str(conf), out_dir=str(tmp_path))
     df = bind_input(spark, inputs[0])
@@ -628,9 +643,7 @@ def test_run_conf_file_unions_multiple_inputs(spark, tmp_path):
     filter {{ grok {{ match => {{ "message" => "%{{WORD:w}} %{{INT:n:int}}" }} }} }}
     output {{ file {{ path => "all" }} }}
     """)
-    from logstash_spark.conf import run_conf_file
-
-    run_conf_file(spark, str(conf), out_dir=str(tmp_path))
+    _agent(conf, tmp_path)
     out = spark.read.parquet(str(tmp_path / "all"))
     got = {(r["type"], r["w"], r["n"]) for r in out.collect()}
     assert got == {("alpha", "one", 1), ("alpha", "two", 2), ("beta", "three", 3)}

@@ -1,6 +1,8 @@
 """Enrichment joins: translate / geoip / dns / useragent + physical-plan
 shape (broadcast, never sort-merge — the 100 TB-critical property)."""
 
+import warnings
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -139,10 +141,14 @@ def test_translate_literal_override_false(spark):
     df = spark.createDataFrame(
         [("200", "keepme"), ("404", None)], "code string, name string"
     )
-    out = {r["code"]: r["name"] for r in translate_literal(
-        df, source="code", target="name",
-        dictionary={"200": "ok", "404": "missing"}, override=False,
-    ).collect()}
+    # the lookup uses no deprecated Column API (getItem with a Column key)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        plan = translate_literal(
+            df, source="code", target="name",
+            dictionary={"200": "ok", "404": "missing"}, override=False,
+        )
+    out = {r["code"]: r["name"] for r in plan.collect()}
     assert out == {"200": "keepme", "404": "missing"}
 
 

@@ -262,124 +262,3 @@ def test_histogram_quantiles_out_of_domain_clamps(spark):
     # -5 clamps into bucket 0, 99 into the top bucket (edge 9.0)
     assert r[0.25] == 0.0
     assert r[1.0] == 9.0
-
-
-def test_windowed_hll_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Production shape: event-time windowed HLL with watermark (append
-    mode, bounded state, chained register->estimate aggregates). Every
-    window the stream emits must carry exactly the batch estimate for
-    that (window, key); the final unclosed window may be withheld by the
-    watermark — that is the append contract, not a loss."""
-    import time as _t
-
-    from logstash_spark.streaming.pipeline import (
-        ensure_event_time,
-        windowed_hll_distinct,
-    )
-
-    e = load_table(spark, sf_dir, "events")
-    e.write.mode("overwrite").parquet(str(tmp_path / "ev"))
-
-    # batch truth, same derivation
-    b = ensure_event_time(spark.read.parquet(str(tmp_path / "ev")), "ts")
-    regs = hll_registers(
-        b.withColumn("_w", F.window(F.col("ts"), "30 days")), ["_w", "event_type"], "user_id"
-    )
-    est = hll_estimate(regs, ["_w", "event_type"])
-    batch = {
-        (r["_w"]["start"], r["event_type"]): (r["present"], r["est_hll"])
-        for r in est.collect()
-    }
-
-    stream = spark.readStream.schema(e.schema).parquet(str(tmp_path / "ev"))
-    q = (
-        windowed_hll_distinct(
-            stream, ts="ts", key="event_type", value="user_id",
-            window="30 days", watermark="1 day",
-        )
-        .writeStream.format("memory")
-        .queryName("hll_win")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
-    )
-    try:
-        deadline = _t.time() + 120
-        got = []
-        while _t.time() < deadline:
-            if q.exception():
-                raise AssertionError(str(q.exception()))
-            got = spark.sql("select * from hll_win").collect()
-            # all but the watermark-held tail should eventually land
-            if len(got) >= max(1, len(batch) - 2 * len({k[1] for k in batch})):
-                break
-            _t.sleep(0.5)
-    finally:
-        q.stop()
-    # completeness, not just soundness: everything except the
-    # watermark-held tail (at most ~2 windows per key) must have emitted
-    n_keys = len({k[1] for k in batch})
-    assert len(got) >= max(1, len(batch) - 2 * n_keys), (len(got), len(batch))
-    for r in got:
-        key = (r["window_start"], r["event_type"])
-        assert key in batch, key
-        assert (r["present"], r["est_hll"]) == batch[key], (r, batch[key])
-
-
-def test_windowed_cms_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Event-time windowed Count-Min registers with watermark: every
-    closed window's register set must equal the batch cms_build of that
-    window's rows exactly (append contract: the final unclosed window
-    may be withheld)."""
-    import time as _t
-
-    from logstash_spark.streaming.pipeline import ensure_event_time, windowed_cms
-    from logstash_spark.functions.sketch import cms_build
-
-    e = load_table(spark, sf_dir, "events")
-    e.write.mode("overwrite").parquet(str(tmp_path / "ev"))
-
-    b = ensure_event_time(spark.read.parquet(str(tmp_path / "ev")), "ts")
-    wb = b.withColumn("_w", F.window(F.col("ts"), "30 days"))
-    batch = {}
-    # batch truth per window via the SAME cms_build kernel
-    wins = [r["ws"] for r in wb.select(F.col("_w.start").alias("ws")).distinct().collect()]
-    for ws in wins:
-        toks = wb.filter(F.col("_w.start") == ws).select(F.col("event_type").alias("tok"))
-        for r in cms_build(toks, d=4, w=64).collect():
-            batch[(ws, r["r"], r["c"])] = r["cnt"]
-
-    stream = spark.readStream.schema(e.schema).parquet(str(tmp_path / "ev"))
-    q = (
-        windowed_cms(stream, ts="ts", tok="event_type",
-                     window="30 days", watermark="1 day", d=4, w=64)
-        .writeStream.format("memory")
-        .queryName("cms_win")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_cms"))
-        .start()
-    )
-    try:
-        deadline = _t.time() + 120
-        got = []
-        while _t.time() < deadline:
-            if q.exception():
-                raise AssertionError(str(q.exception()))
-            got = spark.sql("select * from cms_win").collect()
-            if got:
-                break
-            _t.sleep(2)
-    finally:
-        q.stop()
-    assert got, "stream emitted no closed windows"
-    for r in got:
-        key = (r["window_start"], r["r"], r["c"])
-        assert key in batch, f"stream emitted unknown cell {key}"
-        assert r["cnt"] == batch[key], f"cell {key}: {r['cnt']} != {batch[key]}"
-    # every closed window the stream emitted is COMPLETE: its cell set
-    # matches the batch cell set for that window
-    emitted_windows = {r["window_start"] for r in got}
-    for ws in emitted_windows:
-        scells = {(r["r"], r["c"]) for r in got if r["window_start"] == ws}
-        bcells = {(rr, cc) for (w2, rr, cc) in batch if w2 == ws}
-        assert scells == bcells

@@ -149,17 +149,3 @@ def test_conditional_multiline_split_apply_union(spark):
     # non-matching rows pass through untouched — even the indented one
     assert rows[2]["line"] == "other solo" and rows[2]["multiline_n"] is None
     assert rows[3]["line"] == "   other indent kept" and rows[3]["multiline_n"] is None
-
-
-def test_multiline_stateful_validates_what(spark):
-    """Typo'd `what` raises immediately (no silent mode flip — the batch
-    twin raises too)."""
-    import pytest
-
-    from logstash_spark.streaming.stateful import multiline_stateful
-
-    with pytest.raises(ValueError, match="previous.*next|what"):
-        multiline_stateful(
-            spark.createDataFrame([("a", "x")], "stream_key string, text string"),
-            pattern=r"^\s", what="Next",
-        )

@@ -136,19 +136,6 @@ def test_lang_id_and_quality(spark):
     assert t[0] == 12
 
 
-def test_multimodal_plumbing(spark):
-    """Binary media columns + mapInPandas feature extraction: schema and
-    batch shape are real; decode itself is a deterministic stub."""
-    from logstash_spark.functions.multimodal import extract_features, synthetic_media
-
-    m = synthetic_media(spark, 50)
-    assert dict(m.dtypes)["bytes"] == "binary"
-    out = extract_features(m)
-    rows = out.collect()
-    assert len(rows) == 50
-    assert all(r["n_bytes"] > 0 and r["byte_entropy"] > 0 for r in rows)
-
-
 def test_lsh_multiprobe_recall(spark):
     """Multi-probe LSH recall@5 vs exact brute force on the driver's
     embeddings table — the knob that makes bucketed ANN usable."""
@@ -441,15 +428,6 @@ def test_ppm_bmp_stdlib_decode(spark):
     # n_pix = PIXELS (w*h), not raster bytes (w*h*3)
     assert all(f["fmt"] == "ppm" and f["n_pix"] == f["width"] * f["height"]
                for f in feats.values())
-
-
-def test_decode_image_resize(spark):
-    from logstash_spark.functions.multimodal import decode_image, synthetic_media
-
-    m = synthetic_media(spark, 6)
-    out = {r["media_id"]: r for r in decode_image(m, target_size=(8, 8)).collect()}
-    assert all(r["decoded"] and len(r["pixels"]) == 64 for r in out.values())
-    assert all(0 <= p <= 255 for p in out[0]["pixels"])
 
 
 def test_ivf_train_constant_plan_depth(spark):

@@ -8,7 +8,6 @@ from logstash_spark.functions.unigram import (
     MAX_CHARS,
     UNK,
     unigram_tokenize,
-    viterbi_segmentations,
 )
 
 # singles score -(400+i); 'f' deliberately absent -> UNK class
@@ -24,6 +23,26 @@ MULTI = [
     ("9a", -830),    # loses to 9+a   (-819)
 ]
 VOCAB = SINGLES + MULTI
+
+
+def viterbi_segmentations(w: str, vocab: list[tuple[str, int]]):
+    """ALL full segmentations of ``w`` with their (score, n_pieces) —
+    the brute-force cross-check that asserts the oracle fixture is
+    tie-free under the adjusted objective. Exponential."""
+    out = []
+
+    def rec(pos, score, pieces):
+        if pos == len(w):
+            out.append((score, len(pieces), list(pieces)))
+            return
+        for p, s in vocab:
+            if w.startswith(p, pos):
+                pieces.append(p)
+                rec(pos + len(p), score + s, pieces)
+                pieces.pop()
+
+    rec(0, 0, [])
+    return out
 
 
 def _tok(spark, texts, backend):

@@ -18,11 +18,12 @@ Usage:
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
