@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from logstash_spark.session import drop_zip_finders
+
 
 def translate(
     df: DataFrame,
@@ -322,6 +324,7 @@ def useragent(
 
     @pandas_udf(", ".join(f"{f} string" for f in _UA_FIELDS))
     def _ua(col: pd.Series) -> pd.DataFrame:
+        drop_zip_finders()
         codes, uniques = pd.factorize(col)  # null -> code -1
         rows = [classify(s) for s in uniques]
         rows.append((None, "", "", None, None, "", None))  # row -1: null

@@ -20,12 +20,15 @@ Spark design (NOT the reference's per-event Ruby regex loop):
    - ``expr``  — pure JVM: one ``regexp_extract`` per capture group inside
      whole-stage codegen. Zero Python in the hot path; Catalyst CSE shares
      the match work. Best when capture count is small.
-   - ``arrow`` — one Arrow-batched UDF running RE2 (``pyarrow.compute``)
-     over the whole batch, returning a struct. Best for wide patterns
+   - ``arrow`` — one ``arrow_udf`` running RE2 (``pyarrow.compute``)
+     over the whole Arrow batch, returning a struct of string captures
+     (Arrow in and out, no pandas). Best from 2 captures up
      (COMBINEDAPACHELOG: 12 captures = 1 pass instead of 12 regex scans).
      When ``compile_grok`` can prove it safe, the pass extracts with a
      reduced *capture skeleton* and verifies it (``arrow_extract``).
      Never row-at-a-time Python.
+   Both backends cast ``:int``/``:float`` captures with the same Spark
+   cast in ``grok()``.
 At 100 TB both backends scale linearly with input partitions; there is no
 shuffle in a grok stage.
 """
@@ -34,15 +37,18 @@ from __future__ import annotations
 
 import re
 import warnings
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from logstash_spark.operators.patterns import BASE_PATTERNS
+from logstash_spark.session import drop_zip_finders
 
 _GROK_REF = re.compile(r"%\{(\w+)(?::([\w\[\]@.-]+))?(?::(int|float))?\}")
 GROK_FAILURE_TAG = "_grokparsefailure"
@@ -325,22 +331,28 @@ def _cast_type(typ: str) -> str:
     return {"int": "bigint", "float": "double", "string": "string"}[typ]
 
 
-_SPARK_T = {"int": T.LongType(), "float": T.DoubleType(), "string": T.StringType()}
-
-
-def grok_struct_type(cg: CompiledGrok) -> T.StructType:
-    fields = []
-    for name, occ in capture_groups(cg).items():
-        base = _SPARK_T[occ[0][1]]
-        fields.append(
-            T.StructField(name, T.ArrayType(base) if len(occ) > 1 else base, True)
-        )
-    return T.StructType(fields)
-
-
 # ---------------------------------------------------------------------------
 # backends
 # ---------------------------------------------------------------------------
+
+
+def _capture_columns(cg: CompiledGrok, group: Callable[[int], Column]) -> dict[str, Column]:
+    """field name -> typed Column, from ``group(idx)``: capture group
+    ``idx`` as a string Column, null where it did not take part. A
+    duplicated capture name collects its non-null occurrences into an
+    array (reference grok semantics); no occurrence -> null, not []."""
+
+    def one(idx: int, typ: str) -> Column:
+        return group(idx).cast(_cast_type(typ))
+
+    cols: dict[str, Column] = {}
+    for name, occ in capture_groups(cg).items():
+        if len(occ) == 1:
+            cols[name] = one(*occ[0])
+        else:
+            arr = F.array_compact(F.array(*[one(i, t) for i, t in occ]))
+            cols[name] = F.when(F.size(arr) > 0, arr)
+    return cols
 
 
 def grok_expr_columns(cg: CompiledGrok, source: Column) -> dict[str, Column]:
@@ -351,22 +363,13 @@ def grok_expr_columns(cg: CompiledGrok, source: Column) -> dict[str, Column]:
     """
     matched = source.rlike(cg.regex)
 
-    def one(idx: int, typ: str) -> Column:
+    def group(idx: int) -> Column:
         c = F.when(matched, F.regexp_extract(source, cg.regex, idx))
         # '' capture from an optional group -> null, matching reference's
         # "field not set" for unmatched optional captures.
-        c = F.when(c == "", F.lit(None)).otherwise(c)
-        return c.cast(_cast_type(typ))
+        return F.when(c == "", F.lit(None)).otherwise(c)
 
-    cols: dict[str, Column] = {}
-    for name, occ in capture_groups(cg).items():
-        if len(occ) == 1:
-            cols[name] = one(*occ[0])
-        else:
-            # duplicate capture name: all occurrences collect into an array
-            # (reference grok semantics); no occurrence -> null, not []
-            arr = F.array_compact(F.array(*[one(i, t) for i, t in occ]))
-            cols[name] = F.when(F.size(arr) > 0, arr)
+    cols = _capture_columns(cg, group)
     cols["_grok_matched"] = matched
     return cols
 
@@ -387,9 +390,6 @@ def arrow_extract(cg: CompiledGrok, arr):
     89.4k docs/s median (+35%, 12/12 pairs; parent IQR 7.9k); grok's
     summed Python time 4.6-5.8 s -> 3.3-3.4 s per pass over 3 traced
     pairs."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     if cg.skeleton is None:
         return pc.extract_regex(arr, cg.named_regex)
     ext = pc.extract_regex(arr, cg.skeleton)  # null row = no match
@@ -411,54 +411,34 @@ def arrow_extract(cg: CompiledGrok, arr):
 
 
 def grok_arrow_udf(cg: CompiledGrok):
-    """RE2 backend: pyarrow ``extract_regex`` (via ``arrow_extract``) —
-    vectorized C++ passes over the Arrow batch, no per-row Python and no
-    pandas object loop. This is the fastest path for wide patterns
-    (COMBINEDAPACHELOG: one RE2 scan extracts all 12 captures).
+    """RE2 backend: one ``arrow_udf`` over ``arrow_extract`` — vectorized
+    C++ passes over the Arrow batch, no per-row Python and no pandas hop.
+    It returns a non-null struct of every capture group ``cN`` as a
+    string ('' from an optional group that did not take part -> null) and
+    ``_grok_matched``; ``grok()`` types and names the captures with the
+    same Spark expressions as the expr backend (``_capture_columns``).
 
-    Measured alternative (rejected): a ``mapInArrow`` formulation avoids
-    the Arrow->pandas series hop and is ~30% faster on a frame holding ONLY
-    the text column — but it ships EVERY column through the Python worker,
-    and on the real pages table (html binary present) it is ~30% SLOWER
-    than this scalar UDF, which Spark feeds just the one input column.
-    Column pruning beats serialization micro-savings at 100 TB."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    A/B against the pandas UDF this replaced (perfbench flagship_agg,
+    local[4], 4-core shared Xeon host, 3 traced pairs, with
+    ``drop_zip_finders``): ``grok.python_run_s`` 2.86-3.07 s -> 1.34-1.58 s
+    per pass, the same bytes returned.
 
-    out_type = grok_struct_type(cg).add("_grok_matched", T.BooleanType())
-    groups = capture_groups(cg)
+    Measured alternative (rejected): a ``mapInArrow`` formulation ships
+    EVERY column through the Python worker; on the real pages table (html
+    binary present) it was ~30% SLOWER than a scalar UDF, which Spark
+    feeds just the one input column."""
+    out_type = T.StructType(
+        [T.StructField(f"c{idx}", T.StringType()) for _, idx, _ in cg.captures]
+        + [T.StructField("_grok_matched", T.BooleanType())]
+    )
 
-    @pandas_udf(out_type)
-    def _grok(s: pd.Series) -> pd.DataFrame:
-        arr = pa.Array.from_pandas(s, type=pa.string())
+    @arrow_udf(out_type)
+    def _grok(arr: pa.Array) -> pa.Array:
+        drop_zip_finders()
         ext = arrow_extract(cg, arr)  # StructArray; null row = no match
-        matched = ext.is_valid()
-        out = pd.DataFrame(index=s.index)
-
-        def clean(idx: int, typ: str) -> pd.Series:
-            col_arr = ext.field(f"c{idx}")
-            # '' from an optional non-participating group -> null (grok
-            # "field not set" semantics, same as the other backends)
-            col_arr = pc.if_else(pc.equal(col_arr, ""), pa.scalar(None, pa.string()), col_arr)
-            col = col_arr.to_pandas().set_axis(s.index)
-            if typ == "int":
-                col = pd.to_numeric(col, errors="coerce").astype("Int64")
-            elif typ == "float":
-                col = pd.to_numeric(col, errors="coerce")
-            return col
-
-        for name, occ in groups.items():
-            if len(occ) == 1:
-                out[name] = clean(*occ[0])
-            else:
-                # duplicate capture name -> array of all occurrences
-                subs = [clean(i, t) for i, t in occ]
-                out[name] = [
-                    ([v for v in row if v is not None and v is not pd.NA] or None)
-                    for row in zip(*subs)
-                ]
-        out["_grok_matched"] = matched.to_pandas().set_axis(s.index).fillna(False)
-        return out
+        caps = [pc.if_else(pc.equal(c, ""), None, c) for c in ext.flatten()]
+        return pa.StructArray.from_arrays(
+            [*caps, ext.is_valid()], names=[*(f.name for f in ext.type), "_grok_matched"])
 
     return _grok
 
@@ -494,15 +474,16 @@ def grok(
     1-element array (the engine's documented scalar->array promotion; the
     row engine keeps a scalar there).
 
-    ``backend='auto'`` picks ``expr`` up to 3 captures and ``arrow`` above.
-    A pattern using QUOTEDSTRING (``QS``) always goes to ``arrow``: Java
-    regex recurses once per iteration of its loop, so a ~64 KB quoted field
-    overflows the stack and takes the local JVM down; RE2 does not recurse.
-    The JVM expr backend rescans once per capture (local[32], 4M apache
-    lines: fine at <=3 captures, 8x slower at 11, ~115k rows/s on
-    COMBINEDAPACHELOG); the arrow backend extracts every capture in one
-    RE2 pass (~1M rows/s there), through the verified capture skeleton
-    whenever ``compile_grok`` derived one (``arrow_extract``).
+    ``backend='auto'`` picks ``expr`` for a pattern with at most 1 capture
+    and ``arrow`` from 2 up. A pattern using QUOTEDSTRING (``QS``) always
+    goes to ``arrow``: Java regex recurses once per iteration of its loop,
+    so a ~64 KB quoted field overflows the stack and takes the local JVM
+    down; RE2 does not recurse. The JVM expr backend rescans once per
+    capture; the arrow backend extracts every capture in one RE2 pass,
+    through the verified capture skeleton whenever ``compile_grok``
+    derived one (``arrow_extract``). Measured (4-core Xeon host, local[4],
+    400k perfbench rows, warm): 1 capture expr 0.73 s / arrow 0.85 s,
+    2 captures 1.79 / 0.61 s, 3 captures 2.14 / 0.58 s.
     """
     pats = [patterns] if isinstance(patterns, str) else list(patterns)
     ow = set(overwrite or [])
@@ -511,7 +492,7 @@ def grok(
     if backend == "auto":
         max_caps = max((len(cg.captures) for cg in compiled), default=0)
         quoted = any(BASE_PATTERNS["QUOTEDSTRING"] in cg.regex for cg in compiled)
-        backend = "expr" if max_caps <= 3 and not quoted else "arrow"
+        backend = "expr" if max_caps < 2 and not quoted else "arrow"
     if backend not in ("expr", "arrow"):
         raise ValueError(f"grok backend must be 'expr', 'arrow' or 'auto', not {backend!r}")
 
@@ -558,7 +539,7 @@ def grok(
             udf = grok_arrow_udf(cg)
             sname = f"_grok_{i}"
             df = df.withColumn(sname, udf(this_src))
-            cols = {name: F.col(sname)[name] for name, _, _ in cg.captures}
+            cols = _capture_columns(cg, lambda idx: F.col(sname)[f"c{idx}"])
             cols["_grok_matched"] = F.col(sname)["_grok_matched"]
         else:
             cols = grok_expr_columns(cg, this_src)

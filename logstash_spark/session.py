@@ -9,10 +9,12 @@ tested on local[N].
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
-# Tuned for the target workload: wide text rows, pandas-UDF parse stages,
+# Tuned for the target workload: wide text rows, Arrow-UDF parse stages,
 # broadcast enrichment joins, multi-sink fan-out.
 DEFAULT_CONFS: dict[str, str] = {
     # AQE: runtime coalesce + skew-join splitting — required by the north
@@ -20,7 +22,9 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for pandas UDFs (the grok path) and createDataFrame.
+    # Arrow for createDataFrame(pandas) and toPandas. The Python UDFs
+    # (grok's arrow_udf, useragent's pandas UDF) always exchange Arrow
+    # batches; the next setting sizes them.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Arrow batch size is host-sensitive: the r1 host measured 50k ~20%
     # over 10k; the r4h host's sweep (10k/20k/50k/100k on grok-arrow at
@@ -82,3 +86,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def drop_zip_finders() -> None:
+    """Drop the ``zipimport`` finders from ``sys.path_importer_cache``.
+
+    Call it at the top of each batch of a Python UDF. On every task the
+    worker runs ``importlib.invalidate_caches()``
+    (``pyspark.worker_util.setup_spark_files``), and on Python 3.11 each
+    cached zipimporter then re-reads its archive's directory. Importing
+    pyspark from ``$SPARK_HOME/python/lib/pyspark.zip`` leaves one per
+    package directory (16 in a worker running a bare ``arrow_udf``, where
+    the call took 0.14-0.21 s of CPU on a 4-core Xeon host). Modules
+    already imported stay loaded, and a later import rebuilds its finder
+    from ``zipimport._zip_directory_cache`` without reading the file.
+    Workers are reused, so every task after a worker's first skips the
+    re-reads."""
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        cache.pop(path, None)

@@ -55,13 +55,25 @@ def test_spark_submit_end_to_end(tmp_path):
     assert stage["rows"] == 2000
 
 
-def test_run_pipeline_by_day_resume(tmp_path):
+def _multi_day_pages(spark, path: str, n: int = 3000, days: int = 3) -> str:
+    """Synthetic pages are one second apart (one day); spread them over
+    ``days`` and write them to parquet for ``--input``."""
+    from logstash_spark.sources.pages import synthetic_pages
+
+    synthetic_pages(spark, n).withColumn(
+        "warc_ts", F.expr(f"warc_ts + make_dt_interval(CAST(pmod(xxhash64(url), {days}) AS INT))")
+    ).write.parquet(path)
+    return path
+
+
+def test_run_pipeline_by_day_resume(spark, tmp_path):
     """--by-day + --manifest: per-day lineage; a rerun skips completed days."""
+    inp = _multi_day_pages(spark, str(tmp_path / "pages"))
     out_dir = str(tmp_path / "out")
     manifest = str(tmp_path / "lineage.jsonl")
     cmd = [
         sys.executable, os.path.join(REPO, "jobs", "run_pipeline.py"),
-        "--input", "synthetic:3000", "--out", out_dir,
+        "--input", inp, "--out", out_dir,
         "--manifest", manifest, "--by-day",
     ]
     env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="4")
@@ -69,6 +81,7 @@ def test_run_pipeline_by_day_resume(tmp_path):
     assert r1.returncode == 0, r1.stderr[-3000:]
     entries1 = [json.loads(l) for l in open(manifest)]
     assert len(entries1) > 0 and all(e["status"] == "done" for e in entries1)
+    assert len(entries1) >= 2  # the resume below skips more than one day
     total = sum(e["rows_in"] for e in entries1)
     assert total == 3000
     ts1 = {e["partition"]: e["ts"] for e in entries1}
@@ -100,13 +113,7 @@ def test_run_pipeline_by_day_resume_after_crash_is_exactly_once(spark, tmp_path)
     record leaves the day undone. The resume re-runs it and replaces that
     day's output, so every input row is in the sinks once and the per-day
     aggregate matches each manifest entry."""
-    from logstash_spark.sources.pages import synthetic_pages
-
-    # synthetic pages are one second apart (one day); spread them over 3
-    inp = str(tmp_path / "pages")
-    synthetic_pages(spark, 3000).withColumn(
-        "warc_ts", F.expr("warc_ts + make_dt_interval(CAST(pmod(xxhash64(url), 3) AS INT))")
-    ).write.parquet(inp)
+    inp = _multi_day_pages(spark, str(tmp_path / "pages"))
     out_dir = str(tmp_path / "out")
     manifest = str(tmp_path / "lineage.jsonl")
     cmd = [
