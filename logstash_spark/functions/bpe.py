@@ -19,12 +19,10 @@ Spark-first shape (and why it scales):
   collect). num_merges is the model hyperparameter and bounds the loop;
   lineage is truncated with localCheckpoint every few rounds, the same
   pattern as dedup's connected-components loop (dedup.py).
-- **Apply is map-only**: merges broadcast (a merge table is tiny —
-  even 32k merges is <1 MB); documents tokenize without a shuffle.
-  Two backends: pure column expressions (a replace chain — exhaustively
-  oracle-able, right for small merge counts) and an Arrow-batched
-  mapInPandas loop (constant plan size for production-sized merge
-  tables).
+- **Apply is map-only**: merges ride in the task closure (a merge table
+  is tiny — even 32k merges is <1 MB); documents tokenize without a
+  shuffle in an Arrow-batched mapInPandas loop with a word cache per
+  task, whose plan size is constant in the merge count.
 
 Merge-step semantics (deliberate, documented): a word is rendered as its
 symbols joined by single spaces with sentinel padding, and merging pair
@@ -33,9 +31,9 @@ non-overlapping string replacement, identical in Spark and DuckDB, which
 is what makes the whole training loop value-oracle-able. On runs of the
 same symbol with odd length (``w w w``), the second pass can pick a
 different (but equally frequent) merge POSITION than the canonical
-left-greedy scan; pair COUNTS and merge RANKING are unaffected. The arrow
-backend implements the same two-pass semantics so backends agree bit-for-
-bit.
+left-greedy scan; pair COUNTS and merge RANKING are unaffected. Apply
+uses the same two-pass semantics (Python ``str.replace`` twice), so a
+word tokenizes exactly as training rendered it.
 
 Reference analog: the reference has no tokenizer (it is a log pipeline);
 this operator belongs to the LLM-data-pipeline surface mandated alongside
@@ -44,8 +42,11 @@ SURVEY.md §2.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 END_OF_WORD = "</w>"
 
@@ -127,89 +128,42 @@ def bpe_tokenize(
     df: DataFrame,
     merges: list[tuple[str, str, int]],
     source: str = "text",
-    *,
-    backend: str = "expr",
 ) -> DataFrame:
     """Tokenize ``source`` with a learned merge table: adds ``tokens``
-    (space-joined subword tokens, end-of-word marked) and ``n_tokens``.
-    Map-only, no shuffle; merges ride in the plan (expr) or a broadcast
-    closure (arrow).
-
-    backend='expr': per-word replace chain inside a transform lambda —
-    2*len(merges) JVM replaces, whole-stage codegen, fully oracle-able.
-    Right for oracle-scale merge tables.
-
-    backend='arrow': Arrow-batched mapInPandas applying the same two-pass
-    merge loop in Python — constant plan size, the production path for
-    real (8k-64k) merge tables where a replace chain would blow up the
-    plan. Backends agree bit-for-bit (pinned by tests).
+    (space-joined subword tokens, end-of-word marked) and ``n_tokens``,
+    replacing any of that name. Map-only, no shuffle: an Arrow-batched
+    mapInPandas applies the two-pass merge loop once per distinct word
+    of a partition, and the plan size stays constant for real (8k-64k)
+    merge tables.
     """
-    if backend == "expr":
+    schema = T.StructType(
+        [f for f in df.schema.fields if f.name not in ("tokens", "n_tokens")]
+        + [T.StructField("tokens", T.StringType()), T.StructField("n_tokens", T.IntegerType())]
+    )
+    pairs = [(f" {a} {b} ", f" {a}{b} ") for a, b, _ in merges]
+    # split on ASCII whitespace only, as bpe_words' Spark (Java) \s does,
+    # not Python's Unicode \s: NBSP and U+3000 stay inside a word
+    ws = re.compile("[ \t\n\x0b\f\r]+")
 
-        def word_tokens(w: Column) -> Column:
-            c = _render_word(w)
-            for a, b, _ in merges:
-                c = _merge_once(c, a, b)
-            return F.trim(c)
+    def run(batches):
+        cache: dict[str, str] = {}
 
-        # coalesce: NULL text must tokenize like empty text (tokens='',
-        # n_tokens=0) so the two backends stay bit-identical
-        toks = F.array_join(
-            F.transform(
-                F.filter(
-                    F.split(F.coalesce(F.col(source), F.lit("")), r"\s+"),
-                    lambda w: w != "",
-                ),
-                word_tokens,
-            ),
-            " ",
-        )
-        out = df.withColumn("tokens", toks)
-        return out.withColumn(
-            "n_tokens",
-            F.when(F.col("tokens") == "", F.lit(0)).otherwise(
-                F.array_size(F.split(F.col("tokens"), " "))
-            ),
-        )
+        def tok_word(w: str) -> str:
+            got = cache.get(w)
+            if got is None:
+                c = " " + " ".join(w) + f" {END_OF_WORD} "
+                for pat, rep in pairs:
+                    c = c.replace(pat, rep).replace(pat, rep)
+                got = cache[w] = c.strip()
+            return got
 
-    if backend == "arrow":
-        import re as _re
+        for pdf in batches:
+            toks = [
+                " ".join(tok_word(w) for w in ws.split(t or "") if w)
+                for t in pdf[source].tolist()
+            ]
+            pdf["tokens"] = toks
+            pdf["n_tokens"] = [(t.count(" ") + 1) if t else 0 for t in toks]
+            yield pdf[[f.name for f in schema.fields]]
 
-        from pyspark.sql import types as T
-
-        # pre-existing tokens/n_tokens columns are REPLACED (the expr
-        # backend's withColumn semantics) — never duplicated in the schema
-        schema = T.StructType(
-            [f for f in df.schema.fields if f.name not in ("tokens", "n_tokens")]
-            + [T.StructField("tokens", T.StringType()), T.StructField("n_tokens", T.IntegerType())]
-        )
-        pairs = [(f" {a} {b} ", f" {a}{b} ") for a, b, _ in merges]
-        # Java \s (the expr backend) is ASCII-only; Python's is Unicode —
-        # spell the ASCII class out so both backends agree on
-        # NBSP/ideographic-space text (r5 review fix, same as unigram)
-        ws = _re.compile("[ \t\n\x0b\f\r]+")
-
-        def run(batches):
-            cache: dict[str, str] = {}
-
-            def tok_word(w: str) -> str:
-                got = cache.get(w)
-                if got is None:
-                    c = " " + " ".join(w) + f" {END_OF_WORD} "
-                    for pat, rep in pairs:
-                        c = c.replace(pat, rep).replace(pat, rep)
-                    got = cache[w] = c.strip()
-                return got
-
-            for pdf in batches:
-                toks = [
-                    " ".join(tok_word(w) for w in ws.split(t or "") if w)
-                    for t in pdf[source].tolist()
-                ]
-                pdf["tokens"] = toks
-                pdf["n_tokens"] = [(t.count(" ") + 1) if t else 0 for t in toks]
-                yield pdf[[f.name for f in schema.fields]]
-
-        return df.mapInPandas(run, schema=schema)
-
-    raise ValueError(f"unknown bpe backend {backend!r}")
+    return df.mapInPandas(run, schema=schema)

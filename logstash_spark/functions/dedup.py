@@ -292,7 +292,7 @@ def dup_spans(
     (stride <= k/2 still catches every duplicated run of >= 2k tokens);
     ``hot_cap`` drops grams with more than that many occurrences before
     the join-back (boilerplate a human would strip by rule, not by pair
-    enumeration) — account for drops with :func:`hot_bucket_stats`.
+    enumeration).
     ``hash_fn``: 'md5' (gate default — DuckDB replays it) or 'xxhash64'
     (production: 8-byte bigint keys instead of 32-char hex — the explode
     and both shuffles carry a quarter of the bytes).
@@ -588,9 +588,9 @@ def cap_hot_buckets(df: DataFrame, bucket_cols: list[str], cap: int) -> DataFram
 
     Implemented as a window count over the bucket key: the window's shuffle
     partitioning is the SAME key the subsequent self-join uses, so Catalyst
-    reuses the exchange — the cap costs no extra shuffle. Dropped-bucket
-    accounting (no-silent-caps rule): use :func:`hot_bucket_stats` — an
-    always-on count would force an extra action on the hot path.
+    reuses the exchange — the cap costs no extra shuffle. Dropped buckets
+    are not counted here: an always-on count would force an extra action
+    on the hot path.
     """
     w = W.partitionBy(*bucket_cols)
     return (
@@ -598,23 +598,6 @@ def cap_hot_buckets(df: DataFrame, bucket_cols: list[str], cap: int) -> DataFram
         .filter(F.col("_bucket_n") <= cap)
         .drop("_bucket_n")
     )
-
-
-def hot_bucket_stats(df: DataFrame, bucket_cols: list[str], cap: int) -> dict:
-    """Accounting for cap_hot_buckets: how many buckets/rows a given cap
-    would drop. Separate action by design — call it when you need the
-    numbers (tests, pipeline health checks), not on the hot path."""
-    agg = (
-        df.groupBy(*bucket_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > cap)
-        .agg(
-            F.count(F.lit(1)).alias("dropped_buckets"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("dropped_rows"),
-        )
-        .first()
-    )
-    return {"dropped_buckets": agg["dropped_buckets"], "dropped_rows": agg["dropped_rows"]}
 
 
 # ---------------------------------------------------------------------------
@@ -900,13 +883,6 @@ def _simhash_ids(
     return votes.select("id", bits.alias(out))
 
 
-def simhash(df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id", out: str = "simhash") -> DataFrame:
-    """64-bit SimHash per document (docs with no tokens hash to 0)."""
-    sims = _simhash_ids(df, text_col=text_col, id_col=id_col, out=out)
-    joined = df.join(sims.withColumnRenamed("id", id_col), id_col, "left")
-    return joined.withColumn(out, F.coalesce(F.col(out), F.lit(0).cast("long")))
-
-
 def simhash_near_dups(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id", max_hamming: int = 8,
     bucket_cap: int = 2048, hash_fn: str = "xxhash64",
@@ -1017,8 +993,7 @@ def winnow_overlap(
 
     Scale shape: the inverted index is (fp, id) rows; hot fingerprints
     (boilerplate grams every doc selects) are capped at ``bucket_cap``
-    docs with the standard cap_hot_buckets treatment (accounting via
-    hot_bucket_stats); the pair join is fp-bucket-local (equi-join,
+    docs with the standard cap_hot_buckets treatment; the pair join is fp-bucket-local (equi-join,
     never cartesian) and the per-pair shared count is ONE groupBy with
     map-side combine. Per-doc fingerprint totals attach by two joins
     against the doc-count-sized table (AQE broadcasts)."""

@@ -30,23 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META_T = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-    ]
-)
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("meta", MEDIA_META_T),
-    ]
-)
-
 _HAVE_PIL = False
 try:  # pragma: no cover - not present in this container
     import PIL.Image  # noqa: F401

@@ -23,7 +23,7 @@ Scale design (100 TB):
 - per-document weight is one groupBy(id) sum — the only corpus-sized
   shuffle, uniformly keyed by document id (no skew by construction).
 - selection at scale takes the keep-threshold from a sampled
-  approxQuantile (:func:`dsir_threshold`), never a global sort.
+  approxQuantile of the scores, never a global sort.
 
 Cross-engine determinism (the DuckDB value gate): every float step is
 pinned to the e6 integer grid — ``λ_e6[b] = ⌊1e6·ln(t_b+1)⌋ − ⌊1e6·ln(s_b+1)⌋
@@ -142,8 +142,8 @@ def dsir_select(
 ) -> DataFrame:
     """Gumbel-top-k DSIR selection: (id, logw_e6, gumbel_e6, score_e6,
     keep). ``tau_e6`` is the keep threshold on the score grid; leave None
-    to return scores only (keep = NULL) and size the cut with
-    :func:`dsir_threshold`."""
+    to return scores only (keep = NULL) and size the cut from them (e.g.
+    ``approxQuantile`` of ``score_e6`` at 1 - keep fraction)."""
     w = dsir_weights(
         df,
         text_col=text_col,
@@ -162,14 +162,6 @@ def dsir_select(
     return out.withColumn(
         "keep", F.when(F.col("score_e6") >= tau_e6, 1).otherwise(0)
     )
-
-
-def dsir_threshold(scores: DataFrame, keep_frac: float, *, col: str = "score_e6") -> int:
-    """Production threshold selection: approxQuantile over the score column
-    (one pass, sample-bounded) — the scalable stand-in for a global top-k
-    sort. Returns the e6 score at the (1−keep_frac) quantile."""
-    q = scores.stat.approxQuantile(col, [1.0 - keep_frac], 0.001)
-    return int(q[0])
 
 
 def quality_threshold_sweep(

@@ -3,11 +3,12 @@
 Training-data-pipeline extension (not in the Logstash reference): top-k
 nearest neighbors by cosine similarity.
 
-- brute force  — exact baseline: broadcast the (small) query set, score
-  every (query, doc) pair with a JVM dot-product (`aggregate`/`zip_with`),
-  window top-k. One broadcast join + one shuffle for the top-k window.
-  At 100 TB of vectors this is the score-everything path — linear, and the
-  right answer when the query set is small.
+- brute force  — the score-everything path (`q8_topk`, over int8-quantized
+  vectors): broadcast the (small) query set, score every (query, doc) pair
+  with a JVM dot-product (`aggregate`/`zip_with`), window top-k. One broadcast
+  join + one shuffle for the top-k window. At 100 TB of vectors this is
+  the score-everything path — linear, and the right answer when the query
+  set is small.
 - LSH-bucketed — scale path: random-hyperplane signatures (reusing the
   deterministic xxhash64-based plane construction), equi-join on bucket,
   exact re-rank within buckets. Sub-linear candidate count, tunable recall.
@@ -35,34 +36,6 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def brute_force_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
-    k: int = 10,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Exact cosine top-k: crossJoin(broadcast(queries)) + window row_number.
-
-    Vectors are cast to double before arithmetic so results are reproducible
-    across engines (float-sum order effects stay below the rounding used in
-    parity checks).
-    """
-    d = docs.select(F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v"))
-    q = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).cast("array<double>").alias("qv"))
-    scored = d.crossJoin(F.broadcast(q))
-    if exclude_self:
-        scored = scored.filter(F.col("nbr_id") != F.col("query_id"))
-    scored = scored.withColumn("cos", cosine(F.col("v"), F.col("qv")))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("nbr_id").asc())
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    return out.select("query_id", "nbr_id", "rank", F.round("cos", 4).alias("cos"))
 
 
 # ---------------------------------------------------------------------------
@@ -114,7 +87,7 @@ def q8_topk(
     exclude_self: bool = True,
 ) -> DataFrame:
     """Brute-force top-k over int8-quantized vectors — the scalar-quantized
-    variant of :func:`brute_force_topk` (same broadcast-query shape, the
+    variant of exact cosine top-k (same broadcast-query shape, the
     fact side scanned once; composes with the LSH/IVF candidate generation
     above for sub-linear scan). Ranking key is the exact integer dot
     (``dot_q8`` desc, nbr_id asc) — fully deterministic, value-oracle-able.
@@ -143,46 +116,16 @@ def q8_topk(
 # ---------------------------------------------------------------------------
 
 
-def _plane_component(plane_idx: Column | int, dim_idx: Column, seed: int) -> Column:
-    """Deterministic pseudo-random hyperplane component in {-1,+1} from
-    xxhash64(plane, dim, seed) — no RNG state, identical on every executor."""
-    h = F.xxhash64(F.lit(seed), plane_idx if isinstance(plane_idx, Column) else F.lit(plane_idx), dim_idx)
-    return F.when(h.bitwiseAND(F.lit(1)) == 1, F.lit(1.0)).otherwise(F.lit(-1.0))
-
-
-def hyperplane_signature(vec: Column, num_planes: int = 16, seed: int = 42) -> Column:
-    """num_planes sign bits packed into a bigint bucket id.
-
-    Folded as acc*2 + sign_bit per plane (shift-by-column isn't expressible
-    with F.shiftleft's literal bit count)."""
-
-    def plane_dot(p: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                vec,
-                F.sequence(F.lit(0), F.size(vec) - 1),
-                lambda x, j: x * _plane_component(p, j, seed),
-            ),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        )
-
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(num_planes - 1)),
-        F.lit(0).cast("long"),
-        lambda acc, p: acc * 2 + F.when(plane_dot(p) > 0, F.lit(1)).otherwise(F.lit(0)).cast("long"),
-    )
-
-
 def _hyperplane_buckets(
     v: DataFrame, *, num_planes: int, tables: int, base_seed: int = 42,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """(id, t, bucket) per vector per table, via explode + flat sum-aggs.
 
-    Same construction as :func:`hyperplane_signature` (xxhash64(seed, plane,
-    dim) sign components; plane 0 = most significant bit) but relational:
-    one explode over dims, then tables*num_planes codegen'd sum aggregates —
+    Random-hyperplane signatures (sign component +1/-1 from the low bit of
+    xxhash64(seed, plane, dim); plane 0 = most significant bit), built
+    relationally: one explode over dims, then tables*num_planes codegen'd
+    sum aggregates —
     the nested-HOF expression form is interpreted per element and an order
     of magnitude slower at volume (same pathology as the minhash rewrite).
     Partial aggregation collapses map-side; the shuffle carries
@@ -649,9 +592,9 @@ def semdedup(
     other: in the degenerate corpus survivors shrink ~max× per round, so
     refinement restores exact unsplit semantics; in the general case any
     survivor-vs-survivor pair still split apart in round 2 is the
-    documented approximation — size it with :func:`semdedup_cluster_stats`
-    (the no-silent-caps accounting twin, same pattern as
-    hot_bucket_stats). Output: (id, list_id, is_dup) for EVERY input
+    documented approximation; it can only live in clusters above
+    ``max_cluster_rows`` (count them with a separate groupBy over the
+    assigned list ids). Output: (id, list_id, is_dup) for EVERY input
     vector — the caller filters is_dup to prune.
 
     ``round_cos`` pins routing + pair similarities to a decimal grid so
@@ -779,35 +722,6 @@ def _split_by_cluster(
     return assigned.join(F.broadcast(nsub), "list_id").withColumn(
         "_sub", F.pmod(F.xxhash64(F.col("id"), F.lit(seed)), F.col("_nsub")).cast("int")
     )
-
-
-def semdedup_cluster_stats(
-    docs: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cluster_rows: int = 100_000,
-) -> dict:
-    """Accounting for semdedup's cluster-size enforcement (no-silent-caps
-    rule, same contract as dedup.hot_bucket_stats): how many clusters/rows
-    exceed the bound and would be hash-split — i.e. where the approximation
-    (survivor pairs split apart in the refinement round) can live. Separate
-    action by design; call it from tests / pipeline health checks, not the
-    hot path."""
-    d = docs.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
-    assigned = _assign_numpy(d, centroids, keep_vec=False)
-    agg = (
-        assigned.groupBy("list_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > max_cluster_rows)
-        .agg(
-            F.count(F.lit(1)).alias("split_clusters"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("split_rows"),
-        )
-        .first()
-    )
-    return {"split_clusters": agg["split_clusters"], "split_rows": agg["split_rows"]}
 
 
 _SIM_PERSISTED: list = []

@@ -243,7 +243,7 @@ def pii_redact(df: DataFrame, source: str = "text", target: str = "text_redacted
     after the previous categories were already replaced — so one span is
     attributed to exactly one category (an email's digits never also count
     as a phone). Pure JVM regexp cascade: zero Python, no shuffle, linear
-    per row; at 100 TB this composes with html_to_text in the same
+    per row; at 100 TB this composes with html_to_text_col in the same
     codegen'd map stage.
 
     Each intermediate text is staged as its OWN projection and referenced
@@ -417,21 +417,6 @@ def html_to_text_col(html_str: Column) -> Column:
     return s
 
 
-def html_to_text(
-    df: DataFrame,
-    source: str = "html",
-    target: str = "text_extracted",
-    charset: str = "UTF-8",
-) -> DataFrame:
-    """Binary html column -> extracted text (decode + html_to_text_col)."""
-    from pyspark.sql import types as T
-
-    col = F.col(source)
-    if isinstance(df.schema[source].dataType, T.BinaryType):
-        col = F.decode(col, charset)
-    return df.withColumn(target, html_to_text_col(col))
-
-
 def c4_line_rules(
     df: DataFrame,
     source: str = "text",
@@ -509,7 +494,7 @@ def main_content(
     chars), keep blocks with >= ``min_words`` words and link density <=
     ``max_link_density``, re-join survivors with newlines. Navigation
     bars and footers are short and link-saturated, so both rules fire
-    on exactly the boilerplate a flat tag-strip (html_to_text) keeps.
+    on exactly the boilerplate a flat tag-strip (html_to_text_col) keeps.
 
     Entirely higher-order column functions over ONE split array —
     per-row, no explode, no shuffle, no Python; at corpus scale this is

@@ -6,28 +6,20 @@ pieces carry the ``##`` prefix); any position with no match makes the
 WHOLE word ``[UNK]``, as does a word longer than the length cap.
 
 Complements functions/bpe.py (merge-table tokenizer) with the vocab-set
-family, same two-backend stance:
-
-- backend='expr': the greedy loop as NESTED higher-order functions —
-  an F.aggregate over piece slots whose reducer finds the longest match
-  via an inner F.aggregate over candidate lengths (descending, first hit
-  wins). Pure JVM, whole-stage codegen, plan size linear in the vocab
-  literal. Right for oracle-scale vocabularies.
-- backend='arrow': Arrow-batched mapInPandas running the same loop in
-  Python with a per-batch word cache — constant plan size, the
-  production path for 30k-piece vocabularies. Backends agree
-  bit-for-bit (pinned by tests).
-
-Map-only, no shuffle; the vocab rides in the plan (expr) or the task
-closure (arrow). The DuckDB oracle replays the greedy loop as a
-recursive CTE over the exploded word set — a genuine second
+family. Apply is an Arrow-batched mapInPandas running the greedy loop in
+Python with a word cache per task: the vocab rides in the task closure as
+a set, so the plan size is constant in the vocab and each probe is one
+hash lookup. Map-only, no shuffle. The DuckDB oracle replays the greedy
+loop as a recursive CTE over the exploded word set — a genuine second
 implementation, not a re-run of this one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import re
+
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 UNK = "[UNK]"
 MAX_PIECES = 32          # max subword pieces per word (= max word chars cap)
@@ -37,135 +29,64 @@ def wordpiece_tokenize(
     df: DataFrame,
     vocab: list[str],
     source: str = "text",
-    *,
-    backend: str = "expr",
 ) -> DataFrame:
     """Adds ``tokens`` (space-joined pieces, ``##`` continuations kept),
-    ``n_tokens`` and ``n_unk`` columns. ``vocab`` holds word-initial
-    pieces plainly and continuation pieces with the ``##`` prefix."""
+    ``n_tokens`` and ``n_unk`` columns, replacing any of that name.
+    ``vocab`` holds word-initial pieces plainly and continuation pieces
+    with the ``##`` prefix."""
     max_piece = max((len(v) - 2 if v.startswith("##") else len(v))
                     for v in vocab) if vocab else 1
 
-    if backend == "expr":
-        vocab_arr = F.array(*[F.lit(v) for v in vocab])
+    schema = T.StructType(
+        [f for f in df.schema.fields
+         if f.name not in ("tokens", "n_tokens", "n_unk")]
+        + [T.StructField("tokens", T.StringType()),
+           T.StructField("n_tokens", T.IntegerType()),
+           T.StructField("n_unk", T.IntegerType())])
+    vset = frozenset(vocab)
+    # split on ASCII whitespace only, as Spark's (Java's) \s does, not
+    # Python's Unicode \s: NBSP and U+3000 stay inside a word (pinned by
+    # test)
+    ws = re.compile("[ \t\n\x0b\f\r]+")
 
-        def word_tokens(w: Column) -> Column:
-            wl = F.length(w)
+    def run(batches):
+        cache: dict[str, str] = {}
 
-            def step(acc, _i):
-                pos = acc.getField("pos")
-                toks = acc.getField("toks")
-                failed = acc.getField("failed")
-                remaining = wl - pos
-                # longest match at pos: lengths descending, first hit
-                best = F.aggregate(
-                    F.sequence(
-                        F.least(F.lit(max_piece), remaining), F.lit(1),
-                        F.lit(-1)),
-                    F.lit(0),
-                    lambda bk, k: F.when(bk > 0, bk).when(
-                        F.array_contains(
-                            vocab_arr,
-                            F.concat(
-                                F.when(pos > 0, F.lit("##")).otherwise(
-                                    F.lit("")),
-                                w.substr(pos + 1, k))),
-                        k).otherwise(F.lit(0)))
-                piece = F.concat(
-                    F.when(pos > 0, F.lit("##")).otherwise(F.lit("")),
-                    w.substr(pos + 1, best))
-                return F.when(failed | (pos >= wl), acc).otherwise(
-                    F.when(
-                        best == 0,
-                        F.struct(pos.alias("pos"), toks.alias("toks"),
-                                 F.lit(True).alias("failed")),
-                    ).otherwise(
-                        F.struct(
-                            (pos + best).alias("pos"),
-                            F.concat(toks, F.lit(" "), piece).alias("toks"),
-                            F.lit(False).alias("failed"))))
-
-            res = F.aggregate(
-                F.sequence(F.lit(1), F.lit(MAX_PIECES)),
-                F.struct(F.lit(0).alias("pos"), F.lit("").alias("toks"),
-                         F.lit(False).alias("failed")),
-                step)
-            done = (~res.getField("failed")) & (res.getField("pos") == wl)
-            return F.when(wl > MAX_PIECES, F.lit(UNK)).when(
-                done, F.trim(res.getField("toks"))).otherwise(F.lit(UNK))
-
-        words = F.filter(
-            F.split(F.coalesce(F.col(source), F.lit("")), r"\s+"),
-            lambda w: w != "")
-        toks = F.array_join(F.transform(words, word_tokens), " ")
-        out = df.withColumn("tokens", toks)
-        out = out.withColumn(
-            "n_tokens",
-            F.when(F.col("tokens") == "", F.lit(0)).otherwise(
-                F.array_size(F.split(F.col("tokens"), " "))))
-        return out.withColumn(
-            "n_unk",
-            F.array_size(
-                F.filter(F.split(F.col("tokens"), " "),
-                         lambda t: t == UNK)))
-
-    if backend == "arrow":
-        import re as _re
-
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [f for f in df.schema.fields
-             if f.name not in ("tokens", "n_tokens", "n_unk")]
-            + [T.StructField("tokens", T.StringType()),
-               T.StructField("n_tokens", T.IntegerType()),
-               T.StructField("n_unk", T.IntegerType())])
-        vset = frozenset(vocab)
-        # Java \s (the expr backend's F.split) is ASCII-only; Python's is
-        # Unicode — spell the ASCII class out so both backends agree on
-        # NBSP/ideographic-space text (r5 review fix, same as unigram)
-        ws = _re.compile("[ \t\n\x0b\f\r]+")
-
-        def run(batches):
-            cache: dict[str, str] = {}
-
-            def tok_word(w: str) -> str:
-                got = cache.get(w)
-                if got is not None:
-                    return got
-                if len(w) > MAX_PIECES:
-                    cache[w] = UNK
-                    return UNK
-                pos = 0
-                pieces = []
-                while pos < len(w):
-                    for k in range(min(max_piece, len(w) - pos), 0, -1):
-                        cand = (("##" if pos else "") + w[pos:pos + k])
-                        if cand in vset:
-                            pieces.append(cand)
-                            pos += k
-                            break
-                    else:
-                        pieces = None
-                        break
-                got = " ".join(pieces) if pieces else UNK
-                cache[w] = got
+        def tok_word(w: str) -> str:
+            got = cache.get(w)
+            if got is not None:
                 return got
+            if len(w) > MAX_PIECES:
+                cache[w] = UNK
+                return UNK
+            pos = 0
+            pieces = []
+            while pos < len(w):
+                for k in range(min(max_piece, len(w) - pos), 0, -1):
+                    cand = (("##" if pos else "") + w[pos:pos + k])
+                    if cand in vset:
+                        pieces.append(cand)
+                        pos += k
+                        break
+                else:
+                    pieces = None
+                    break
+            got = " ".join(pieces) if pieces else UNK
+            cache[w] = got
+            return got
 
-            for pdf in batches:
-                toks = [
-                    " ".join(tok_word(w) for w in ws.split(t or "") if w)
-                    for t in pdf[source].tolist()]
-                pdf = pdf.drop(
-                    columns=[c for c in ("tokens", "n_tokens", "n_unk")
-                             if c in pdf.columns])
-                pdf["tokens"] = toks
-                pdf["n_tokens"] = [
-                    (t.count(" ") + 1) if t else 0 for t in toks]
-                pdf["n_unk"] = [t.split(" ").count(UNK) if t else 0
-                                for t in toks]
-                yield pdf[[f.name for f in schema.fields]]
+        for pdf in batches:
+            toks = [
+                " ".join(tok_word(w) for w in ws.split(t or "") if w)
+                for t in pdf[source].tolist()]
+            pdf = pdf.drop(
+                columns=[c for c in ("tokens", "n_tokens", "n_unk")
+                         if c in pdf.columns])
+            pdf["tokens"] = toks
+            pdf["n_tokens"] = [
+                (t.count(" ") + 1) if t else 0 for t in toks]
+            pdf["n_unk"] = [t.split(" ").count(UNK) if t else 0
+                            for t in toks]
+            yield pdf[[f.name for f in schema.fields]]
 
-        return df.mapInPandas(run, schema=schema)
-
-    raise ValueError(f"unknown wordpiece backend {backend!r}")
+    return df.mapInPandas(run, schema=schema)

@@ -16,7 +16,8 @@ text-file lines), so codecs reduce to column transformations:
 - `json_lines` — lines + per-line JSON parse.
 - `plain`      — identity with charset normalization (operators.charset).
 - `encode_json`/`encode_csv` — event -> serialized line for bus sinks.
-- rubydebug/dots — diagnostic sinks (sinks.CollectSink / show()).
+- rubydebug/dots — diagnostic sinks: `stdout` compiles to
+                 sinks.CollectSink (NullSink for `codec => dots`).
 msgpack/edn/fluent/netflow/collectd need codec libraries not present in
 this runtime; their framing is identical to json_lines (byte column ->
 1..N typed events) and they gate behind ImportError at call time.
@@ -231,12 +232,6 @@ def decode_fluent(df: DataFrame, source: str, schema: str) -> DataFrame:
     return df.mapInPandas(batches, out_schema)
 
 
-def rubydebug(df: DataFrame, n: int = 20) -> None:
-    """rubydebug codec analog: pretty-print events to the console
-    (agent.rb:104 default stdout codec). Diagnostic only."""
-    df.show(n=n, truncate=False, vertical=True)
-
-
 def dots(df: DataFrame) -> int:
     """dots codec (default_plugins.rb:9): one '.' per event — the
     throughput eyeball check. Batch analog: count remotely (no event data
@@ -419,31 +414,6 @@ def decode_netflow5(df: DataFrame, source: str = "bytes") -> DataFrame:
     return df.mapInPandas(batches, out_schema)
 
 
-def encode_netflow5(records: list[tuple]) -> bytes:
-    """Build one netflow v5 packet from (src_ip, dst_ip, sport, dport,
-    proto, pkts, bytes) tuples — the test-side fixture builder (there is no
-    netflow SINK in the reference's manifest; export is collector-side)."""
-    import struct
-
-    def ip2n(s: str) -> int:
-        a, b, c, d = (int(x) for x in s.split("."))
-        return (a << 24) | (b << 16) | (c << 8) | d
-
-    hdr = struct.pack(">HHIIIIBBH", 5, len(records), 0, 1700000000, 0, 7, 0, 0, 0)
-    body = b""
-    for src, dst, sport, dport, proto, pkts, nbytes in records:
-        body += struct.pack(
-            ">IIIHHIIIIHHBBBBHHBBH",
-            ip2n(src), ip2n(dst), 0,  # nexthop
-            0, 0,  # input/output iface
-            pkts, nbytes, 0, 0,  # first/last switched
-            sport, dport,
-            0, 2, proto, 0,  # pad, tcp_flags, proto, tos
-            0, 0, 0, 0, 0,  # AS/masks/pad
-        )
-    return hdr + body
-
-
 # ---------------------------------------------------------------------------
 # collectd codec (default_plugins.rb:24) — TLV "parts" binary protocol:
 # (type uint16, length uint16, payload); stdlib struct in mapInPandas
@@ -516,27 +486,6 @@ def decode_collectd(df: DataFrame, source: str = "bytes") -> DataFrame:
             yield pd.DataFrame(rows, columns=names)
 
     return df.mapInPandas(batches, out_schema)
-
-
-def encode_collectd_packet(host: str, time_s: int, metrics: list[tuple]) -> bytes:
-    """Test-side fixture builder: (plugin, type, type_instance, [values])
-    tuples -> one collectd packet."""
-    import struct
-
-    def spart(ptype: int, s: str) -> bytes:
-        b = s.encode() + b"\x00"
-        return struct.pack(">HH", ptype, 4 + len(b)) + b
-
-    out = spart(_CD_HOST, host) + struct.pack(">HHQ", _CD_TIME, 12, time_s)
-    for plugin, typ, tinst, vals in metrics:
-        out += spart(_CD_PLUGIN, plugin) + spart(_CD_TYPE, typ)
-        if tinst:
-            out += spart(_CD_TYPE_INST, tinst)
-        payload = struct.pack(">H", len(vals)) + bytes([1] * len(vals))
-        for v in vals:
-            payload += struct.pack("<d", float(v))
-        out += struct.pack(">HH", _CD_VALUES, 4 + len(payload)) + payload
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1080,7 +1029,7 @@ def encode_lumberjack(records: list[dict], *, compress: bool = True,
                       start_seq: int = 1) -> bytes:
     """Build one lumberjack client stream from field dicts — window frame
     + (optionally zlib-compressed) data frames, the bytes a forwarder
-    sends. Plain function (like encode_netflow5/encode_collectd_packet):
+    sends. Plain function (like encode_ganglia/encode_nsca):
     callers batch events per stream with groupBy().applyInPandas."""
     import struct as _struct
     import zlib as _zlib

@@ -296,7 +296,7 @@ def useragent(
 
     The reference wraps the public ua-parser database (default_plugins.rb:45);
     this runs the same cascade over the vendored uap-core-shaped tables in
-    operators/ua_tables.py, or over `tables=load_uap_parsers("regexes.yaml")`.
+    operators/ua_tables.py, or over `tables` of the same shape.
     Emits name, version, major, minor, os, os_version, device under the
     prefix — the plugin's documented field set. A null source, or one no
     entry matches, gets name/minor/os/device null and the versions ''.

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame
 __all__ = [
     "encode_ganglia",
     "decode_ganglia",
-    "GANGLIA_SCHEMA",
     "encode_nsca",
     "decode_nsca",
     "NSCA_SCHEMA",
@@ -101,11 +100,6 @@ def encode_ganglia(
     )
     return meta, val
 
-
-GANGLIA_SCHEMA = (
-    "host string, name string, val string, ganglia_type string, "
-    "units string, slope int, tmax int, dmax int"
-)
 
 _SLOPES = {0: 0, 1: 1, 2: 2, 3: 3, 4: 4}
 

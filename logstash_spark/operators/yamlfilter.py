@@ -15,8 +15,7 @@ document to canonical JSON inside an Arrow-batched pandas UDF — ONE
 Python pass per document, then the typed parse is `from_json` (JVM,
 codegen) exactly like the json filter. At 100 TB the Python conversion
 is the cost ceiling; the subset reader is regex-free and single-scan
-per document (O(bytes)), and flat documents can skip Python entirely
-via `yaml_flat` (split + str-ops, pure JVM).
+per document (O(bytes)).
 
 Unsupported constructs (anchors/aliases, tags, multi-doc streams beyond
 one leading ``---``, block scalars ``|``/``>``) raise — the document
@@ -362,35 +361,3 @@ def yaml_parse(
         df = df.drop(tname)
     return df
 
-
-def yaml_flat(df: DataFrame, source: str, target: str) -> DataFrame:
-    """Flat `key: value` YAML documents -> map<string,string>, pure JVM
-    (split + str-ops; the 100 TB fast path when documents are known-flat —
-    comments and quotes stripped, nested docs yield partial maps: use
-    yaml_parse for full semantics)."""
-    lines = F.filter(
-        F.transform(
-            F.split(F.col(source), "\n"),
-            lambda ln: F.regexp_replace(ln, r"\s+#.*$", ""),
-        ),
-        lambda ln: ln.contains(": ") & ~ln.startswith("#") & ~ln.startswith(" "),
-    )
-    ent = F.transform(
-        lines,
-        lambda ln: F.struct(
-            F.trim(F.substring_index(ln, ": ", 1)).alias("k"),
-            F.regexp_replace(
-                # value = everything after the first ': ' (1-based substring:
-                # key is 1..L, ': ' is L+1..L+2, value starts at L+3)
-                F.trim(F.substring(ln, F.length(F.substring_index(ln, ": ", 1)) + 3, F.lit(1 << 20))),
-                r"^['\"]|['\"]$",
-                "",
-            ).alias("v"),
-        ),
-    )
-    m = F.aggregate(
-        ent,
-        F.create_map().cast("map<string,string>"),
-        lambda acc, e: F.map_concat(F.map_filter(acc, lambda k, _: k != e["k"]), F.create_map(e["k"], e["v"])),
-    )
-    return df.withColumn(target, m)

@@ -3,49 +3,23 @@
 North rule: "partitions by warc_ts-bucketed url hash with explicit salting
 for skewed hosts, AQE-tuned shuffles". The pieces:
 
-- ``bucket_pages`` — the canonical physical layout: (day(warc_ts),
-  pmod(xxhash64(url), B)). Day pruning serves backfill/resume (lineage runs
-  per day); the url-hash bucket spreads any single day uniformly across the
-  cluster regardless of host skew, and co-locates repeated scans/joins on
-  url. On Iceberg this is `PARTITIONED BY (days(warc_ts), bucket(B, url))`;
-  in-flight it is a repartition by the same two expressions.
+- ``write_bucketed`` — the url-hash bucket layout made durable: B hash
+  buckets on url, sorted within each, so repeated scans/joins on url
+  skip the shuffle. On Iceberg this is `PARTITIONED BY (bucket(B, url))`.
 - ``salt_hot_keys`` — explicit salting for skewed aggregation keys (one
   crawl host can be 20%+ of a web corpus): hot keys get a salt in [0,S),
   cold keys salt 0, so a groupBy on (key, salt) splits the hot key into S
-  partial groups; ``unsalt_agg`` re-aggregates the partials. Spark's AQE
+  partial groups; ``salted_agg`` re-aggregates the partials. Spark's AQE
   skew handling (enabled in session.DEFAULT_CONFS) covers JOIN skew at
-  runtime; aggregation-key skew needs this plan-level treatment.
-- ``hot_keys`` — find keys above a row-share threshold with one cheap
-  sample-based pass (at 100 TB never a full count per key before deciding).
+  runtime; aggregation-key skew needs this plan-level treatment. The
+  caller names the hot keys (at 100 TB, from a sampled count per key,
+  never a full one).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def bucket_expr(url: Column, buckets: int) -> Column:
-    return F.pmod(F.xxhash64(url), F.lit(buckets))
-
-
-def bucket_pages(df: DataFrame, *, buckets: int = 256, url: str = "url", ts: str = "warc_ts") -> DataFrame:
-    """Repartition to the canonical (day, url-bucket) layout."""
-    return df.repartition(F.to_date(F.col(ts)), bucket_expr(F.col(url), buckets))
-
-
-def hot_keys(
-    df: DataFrame, key: str, *, threshold: float = 0.01, sample_fraction: float = 0.01, seed: int = 42
-) -> list:
-    """Keys holding more than ``threshold`` of rows, estimated on a sample."""
-    sample = df.sample(fraction=sample_fraction, seed=seed) if sample_fraction < 1.0 else df
-    total = sample.count()
-    if total == 0:
-        return []
-    rows = (
-        sample.groupBy(key).count().filter(F.col("count") > total * threshold).select(key).collect()
-    )
-    return [r[0] for r in rows]
 
 
 def salt_hot_keys(
@@ -122,11 +96,10 @@ def write_bucketed(
     reports the bucketing as satisfied output partitioning and the
     Exchange is elided (pinned in test_partitioning).
 
-    This is the at-rest counterpart of :func:`bucket_pages` (the
-    in-flight repartition): the north rule's url-hash bucketing made
-    durable, the standard trick for a corpus that is joined on the same
-    key every day (dedup against yesterday, enrichment backfills,
-    incremental decontamination). Pay one shuffle at write time, skip it
+    This is the north rule's url-hash bucketing made durable, the
+    standard trick for a corpus that is joined on the same key every day
+    (dedup against yesterday, enrichment backfills, incremental
+    decontamination). Pay one shuffle at write time, skip it
     on every subsequent read. On Iceberg the same layout is
     ``PARTITIONED BY (bucket(B, url))``; this writer is the
     session-catalog (parquet) form.

@@ -2265,9 +2265,9 @@ FROM perdoc"""
 
 @q("wordpiece_tokenize_docs", _wp_oracle())
 def wordpiece_tokenize_docs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordPiece greedy longest-match-first apply (functions/wordpiece,
-    expr backend: the loop as nested JVM higher-order functions) over a
-    deterministic hex-word corpus — multi-char pieces force real greedy
+    """WordPiece greedy longest-match-first apply (functions/wordpiece:
+    the loop in an Arrow-batched mapInPandas) over a deterministic
+    hex-word corpus — multi-char pieces force real greedy
     choices, words containing 'f' hit the vocabulary gap and fail to
     [UNK] whole-word, per the published BERT semantics. The oracle is an
     independent DuckDB implementation (recursive CTE + correlated
@@ -2281,7 +2281,7 @@ def wordpiece_tokenize_docs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda j: F.md5((F.col("id") * 31 + j).cast("string")).substr(
             F.lit(1), ((F.col("id") + j) % 8 + 3).cast("int")))
     d = d.withColumn("text", F.array_join(words, " "))
-    out = wordpiece_tokenize(d, _WP_VOCAB, backend="expr")
+    out = wordpiece_tokenize(d, _WP_VOCAB)
     return out.select(
         F.col("id").alias("doc_id"), "tokens", "n_tokens", "n_unk")
 
@@ -2355,9 +2355,9 @@ FROM perdoc"""
 
 @q("unigram_tokenize_docs", _ug_oracle())
 def unigram_tokenize_docs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SentencePiece unigram-LM apply (functions/unigram, expr backend:
-    Viterbi forward + backtrack as nested JVM higher-order functions)
-    over a deterministic hex-word corpus — integer scores engineered so
+    """SentencePiece unigram-LM apply (functions/unigram: the Viterbi DP
+    in an Arrow-batched mapInPandas) over a deterministic hex-word
+    corpus — integer scores engineered so
     the optimal choice is NON-greedy (pieces exist that longest-match
     would take but Viterbi must reject), words containing 'f' hit the
     coverage gap and fail to [UNK] whole-word. The oracle is an
@@ -2374,7 +2374,7 @@ def unigram_tokenize_docs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda j: F.md5((F.col("id") * 37 + j).cast("string")).substr(
             F.lit(1), ((F.col("id") + j) % 8 + 3).cast("int")))
     d = d.withColumn("text", F.array_join(words, " "))
-    out = unigram_tokenize(d, _UG_VOCAB, backend="expr")
+    out = unigram_tokenize(d, _UG_VOCAB)
     return out.select(
         F.col("id").alias("doc_id"), "tokens", "n_tokens", "n_unk")
 
@@ -5625,16 +5625,15 @@ FROM tok"""
 @q("bpe_tokenize_docs", _bpe_apply_sql(_BPE_TOK_N))
 def bpe_tokenize_docs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE apply: train 6 merges on the documents corpus, then tokenize
-    every document with the learned table (expr backend — a JVM replace
-    chain inside a transform lambda, map-only). Output: per-doc subword
-    token string + token count, the unit the pack/sample/budget operators
-    consume. The arrow backend (constant plan size for production merge
-    tables) is pinned bit-identical to this path in tests."""
+    every document with the learned table (an Arrow-batched mapInPandas
+    applying the merges per distinct word, map-only). Output: per-doc
+    subword token string + token count, the unit the pack/sample/budget
+    operators consume."""
     from logstash_spark.functions.bpe import bpe_tokenize, bpe_train
 
     d = load_table(spark, sf_dir, "documents")
     merges = bpe_train(d, "text", num_merges=_BPE_TOK_N)
-    out = bpe_tokenize(d, merges, "text", backend="expr")
+    out = bpe_tokenize(d, merges, "text")
     return out.select("doc_id", "tokens", "n_tokens")
 
 
@@ -5718,15 +5717,16 @@ def bpe_pack_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus, tokenize every document (REAL subword counts, not
     whitespace proxies), then sequence-pack the token stream into
     256-token training sequences. The shapes compose without a shuffle
-    between them: tokenize is map-only, packing's sharded prefix-sum is
-    the same two-phase plan as the standalone sequence_pack. The oracle
-    chains the unrolled training CTEs into the packing window."""
+    between them: tokenize is a map-only mapInPandas, packing's sharded
+    prefix-sum is the same two-phase plan as the standalone
+    sequence_pack. The oracle chains the unrolled training CTEs into the
+    packing window."""
     from logstash_spark.functions.bpe import bpe_tokenize, bpe_train
     from logstash_spark.functions.pack import sequence_pack
 
     d = load_table(spark, sf_dir, "documents")
     merges = bpe_train(d, "text", num_merges=_BPE_PACK_N)
-    t = bpe_tokenize(d, merges, "text", backend="expr")
+    t = bpe_tokenize(d, merges, "text")
     return sequence_pack(t, capacity=256)
 
 

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 META_PREFIX = "_meta"
-INTERNAL_PREFIX = "_grok_matched"
 
 
 def strip_internal(df: DataFrame) -> DataFrame:

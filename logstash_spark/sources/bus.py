@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-KAFKA_WIRE_COLUMNS = ["key", "value", "topic", "partition", "offset", "timestamp"]
-
 
 def kafka_source(
     spark: SparkSession,
@@ -118,8 +116,6 @@ def kafka_wire_shim(encoded: DataFrame, *, partitions: int = 4) -> DataFrame:
 # file-backed shim stance as the kafka contract above.
 # ---------------------------------------------------------------------------
 
-REDIS_WIRE_COLUMNS = ["key", "list_index", "value"]
-
 
 def encode_redis_records(
     df: DataFrame,
@@ -178,8 +174,6 @@ def decode_redis_records(raw: DataFrame, value_schema: str) -> DataFrame:
 # match, not equality). Same file-backed wire-contract stance as the
 # kafka/redis shims above — live sockets are a deployment concern.
 # ---------------------------------------------------------------------------
-
-ZEROMQ_WIRE_COLUMNS = ["topic", "value", "peer", "seq"]
 
 _ZMQ_TOPOLOGIES = ("pushpull", "pubsub", "pair")
 

@@ -1,5 +1,5 @@
 """BPE tokenizer (functions/bpe.py): train on the classic Sennrich corpus
-shape, apply with both backends, edge cases."""
+shape, apply against recorded outputs, edge cases."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -49,34 +49,41 @@ class TestApply:
         assert out.tokens == "n e w est</w> lo w e r </w>"
         assert out.n_tokens == 9
 
+    # expected tokens below were recorded from the former JVM replace-chain
+    # implementation, which agreed bit-for-bit with this one on each input
     def test_backends_bit_identical(self, spark):
         from logstash_spark.functions.bpe import bpe_tokenize, bpe_train
 
         rows = ["the fast spark scan", "the slow table scan scan", "spark spark go"]
         corpus = _corpus(spark, rows)
         merges = bpe_train(corpus, num_merges=6)
-        a = bpe_tokenize(corpus, merges, backend="expr").select("tokens", "n_tokens")
-        b = bpe_tokenize(corpus, merges, backend="arrow").select("tokens", "n_tokens")
-        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+        got = bpe_tokenize(corpus, merges).select("text", "tokens", "n_tokens")
+        assert sorted(map(tuple, got.collect())) == [
+            ("spark spark go", "s p ark</w> s p ark</w> g o </w>", 9),
+            ("the fast spark scan", "t h e </w> f a s t </w> s p ark</w> s can</w>", 14),
+            (
+                "the slow table scan scan",
+                "t h e </w> s l o w </w> t a b l e </w> s can</w> s can</w>",
+                19,
+            ),
+        ]
 
     def test_same_symbol_runs_agree_across_backends(self, spark):
         # the documented two-pass corner: odd runs of one symbol (www)
         from logstash_spark.functions.bpe import bpe_tokenize
 
         df = _corpus(spark, ["www wwww wwwww"])
-        merges = [("w", "w", 99)]
-        a = bpe_tokenize(df, merges, backend="expr").collect()[0]
-        b = bpe_tokenize(df, merges, backend="arrow").collect()[0]
-        assert a.tokens == b.tokens and a.n_tokens == b.n_tokens
+        got = bpe_tokenize(df, [("w", "w", 99)]).collect()[0]
+        assert got.tokens == "ww w </w> ww ww </w> ww w ww </w>"
+        assert got.n_tokens == 10
 
     def test_empty_and_null_text(self, spark):
         from logstash_spark.functions.bpe import bpe_tokenize
 
         df = spark.createDataFrame([("",), (None,), ("  ",)], "text string")
-        for backend in ("arrow", "expr"):
-            got = bpe_tokenize(df, [("a", "b", 2)], backend=backend).collect()
-            assert [r.n_tokens for r in got] == [0, 0, 0], backend
-            assert [r.tokens for r in got] == ["", "", ""], backend
+        got = bpe_tokenize(df, [("a", "b", 2)]).collect()
+        assert [r.n_tokens for r in got] == [0, 0, 0]
+        assert [r.tokens for r in got] == ["", "", ""]
 
     def test_no_merges_yields_chars(self, spark):
         from logstash_spark.functions.bpe import bpe_tokenize
@@ -85,11 +92,12 @@ class TestApply:
         assert out.tokens == "h i </w>"
         assert out.n_tokens == 3
 
-    def test_expr_plan_stays_jvm(self, spark):
-        # expr backend must never fall into BatchEvalPython
+    def test_plan_is_one_map_in_pandas(self, spark):
+        # one Arrow-batched MapInPandas, never a row-at-a-time Python UDF
         from logstash_spark.functions.bpe import bpe_tokenize
 
         plan = bpe_tokenize(
-            _corpus(spark, ["x"]), [("a", "b", 2)], backend="expr"
+            _corpus(spark, ["x"]), [("a", "b", 2)]
         )._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan
         assert "BatchEvalPython" not in plan

@@ -3,10 +3,11 @@ the sandbox): encode -> wire schema -> decode round trip."""
 
 from pyspark.sql import functions as F
 
+KAFKA_WIRE_COLUMNS = ["key", "value", "topic", "partition", "offset", "timestamp"]
+
 
 def test_kafka_roundtrip_via_wire_shim(spark):
     from logstash_spark.sources.bus import (
-        KAFKA_WIRE_COLUMNS,
         decode_kafka_records,
         encode_kafka_records,
         kafka_wire_shim,

@@ -1,10 +1,65 @@
 """Charset normalization + codec framing (line / json_lines / encode)."""
 
+import struct
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from logstash_spark.operators.charset import decode_charset
-from logstash_spark.operators.codecs import encode_csv, encode_json, json_lines, lines
+from logstash_spark.operators.codecs import (
+    _CD_HOST,
+    _CD_PLUGIN,
+    _CD_TIME,
+    _CD_TYPE,
+    _CD_TYPE_INST,
+    _CD_VALUES,
+    encode_csv,
+    encode_json,
+    json_lines,
+    lines,
+)
+
+
+def encode_netflow5(records: list[tuple]) -> bytes:
+    """Build one netflow v5 packet from (src_ip, dst_ip, sport, dport,
+    proto, pkts, bytes) tuples — the test-side fixture builder (there is no
+    netflow SINK in the reference's manifest; export is collector-side)."""
+    def ip2n(s: str) -> int:
+        a, b, c, d = (int(x) for x in s.split("."))
+        return (a << 24) | (b << 16) | (c << 8) | d
+
+    hdr = struct.pack(">HHIIIIBBH", 5, len(records), 0, 1700000000, 0, 7, 0, 0, 0)
+    body = b""
+    for src, dst, sport, dport, proto, pkts, nbytes in records:
+        body += struct.pack(
+            ">IIIHHIIIIHHBBBBHHBBH",
+            ip2n(src), ip2n(dst), 0,  # nexthop
+            0, 0,  # input/output iface
+            pkts, nbytes, 0, 0,  # first/last switched
+            sport, dport,
+            0, 2, proto, 0,  # pad, tcp_flags, proto, tos
+            0, 0, 0, 0, 0,  # AS/masks/pad
+        )
+    return hdr + body
+
+
+def encode_collectd_packet(host: str, time_s: int, metrics: list[tuple]) -> bytes:
+    """Test-side fixture builder: (plugin, type, type_instance, [values])
+    tuples -> one collectd packet."""
+    def spart(ptype: int, s: str) -> bytes:
+        b = s.encode() + b"\x00"
+        return struct.pack(">HH", ptype, 4 + len(b)) + b
+
+    out = spart(_CD_HOST, host) + struct.pack(">HHQ", _CD_TIME, 12, time_s)
+    for plugin, typ, tinst, vals in metrics:
+        out += spart(_CD_PLUGIN, plugin) + spart(_CD_TYPE, typ)
+        if tinst:
+            out += spart(_CD_TYPE_INST, tinst)
+        payload = struct.pack(">H", len(vals)) + bytes([1] * len(vals))
+        for v in vals:
+            payload += struct.pack("<d", float(v))
+        out += struct.pack(">HH", _CD_VALUES, 4 + len(payload)) + payload
+    return out
 
 
 def test_decode_utf8_with_replacement(spark):
@@ -290,7 +345,7 @@ def test_es_bulk_roundtrip_self(spark):
 def test_netflow5_codec(spark):
     """netflow v5 decode (default_plugins.rb:17): 24-byte header + 48-byte
     records, one event per flow."""
-    from logstash_spark.operators.codecs import decode_netflow5, encode_netflow5
+    from logstash_spark.operators.codecs import decode_netflow5
 
     pkt = encode_netflow5([
         ("10.0.0.1", "10.0.0.2", 1234, 80, 6, 10, 5000),
@@ -309,7 +364,7 @@ def test_netflow5_codec(spark):
 def test_collectd_codec(spark):
     """collectd TLV decode (default_plugins.rb:24): string/time parts carry
     context; each VALUES part emits one event."""
-    from logstash_spark.operators.codecs import decode_collectd, encode_collectd_packet
+    from logstash_spark.operators.codecs import decode_collectd
 
     pkt = encode_collectd_packet("web01", 1700000100, [
         ("cpu", "percent", "user", [42.5]),

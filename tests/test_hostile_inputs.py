@@ -73,7 +73,8 @@ def test_text_analysis_hostile(hostile):
 
 
 def test_dedup_hostile(hostile):
-    from logstash_spark.functions.dedup import dedup_exact, dedup_minhash_lsh, simhash
+    from logstash_spark.functions.dedup import dedup_exact, dedup_minhash_lsh
+    from test_training_data import simhash
 
     d = hostile.select(F.col("id").alias("doc_id"), F.col("s").alias("text")).fillna({"text": ""})
     assert dedup_exact(d).count() >= 1
@@ -208,10 +209,9 @@ def test_bpe_hostile(hostile):
 
     corpus = hostile.withColumnRenamed("s", "text")
     merges = bpe_train(corpus, num_merges=3)
-    for backend in ("expr", "arrow"):
-        rows = bpe_tokenize(corpus, merges, backend=backend).collect()
-        assert len(rows) == N
-        assert all(r.n_tokens is not None and r.n_tokens >= 0 for r in rows)
+    rows = bpe_tokenize(corpus, merges).collect()
+    assert len(rows) == N
+    assert all(r.n_tokens is not None and r.n_tokens >= 0 for r in rows)
 
 
 def test_url_mining_ops_hostile(hostile, spark):

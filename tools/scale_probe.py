@@ -172,9 +172,9 @@ def main() -> None:
         # production hash family
         "dsir_select": _dsir,
         # production BPE apply: train on a 10k sample (the documented
-        # sampling path), tokenize ALL docs via the arrow backend
-        "bpe_apply_arrow": lambda: bpe_tokenize(
-            docs, bpe_train(docs.limit(10_000), num_merges=32), backend="arrow"
+        # sampling path), tokenize ALL docs
+        "bpe_apply": lambda: bpe_tokenize(
+            docs, bpe_train(docs.limit(10_000), num_merges=32)
         ),
         # co-located join: pay-once bucketed write of both sides, then the
         # exchange-free join read vs the plain shuffle-join control
