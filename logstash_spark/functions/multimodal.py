@@ -30,15 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_HAVE_PIL = False
-try:  # pragma: no cover - not present in this container
-    import PIL.Image  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    pass
-
-
 def synthetic_media(spark, n: int = 100) -> DataFrame:
     """Deterministic media table: `bytes` = a REAL binary P6 PPM image
     (ASCII header + raster) whose raster bytes derive from md5(media_id) —

@@ -18,9 +18,10 @@ text-file lines), so codecs reduce to column transformations:
 - `encode_json`/`encode_csv` — event -> serialized line for bus sinks.
 - rubydebug/dots — diagnostic sinks: `stdout` compiles to
                  sinks.CollectSink (NullSink for `codec => dots`).
-msgpack/edn/fluent/netflow/collectd need codec libraries not present in
-this runtime; their framing is identical to json_lines (byte column ->
-1..N typed events) and they gate behind ImportError at call time.
+msgpack/edn/fluent/netflow/collectd run on readers written from the public
+specs (msgpack and fluent on the vendored pure-Python reader,
+logstash_spark.vendor_msgpack); their framing is identical to json_lines
+(byte column -> 1..N typed events).
 """
 
 from __future__ import annotations
@@ -87,20 +88,6 @@ def encode_csv(df: DataFrame, columns: list[str], *, target: str = "line", sep: 
     return df.withColumn(target, F.concat_ws(sep, *[F.col(c).cast("string") for c in columns]))
 
 
-def _msgpack_unpackb():
-    """Best unpacker available: the C msgpack package when present, else the
-    vendored pure-Python reader (logstash_spark.vendor_msgpack, written from
-    the public spec — same vendoring approach as the EDN reader below)."""
-    try:  # pragma: no cover - package not in this runtime
-        import msgpack as mp
-
-        return lambda b: mp.unpackb(b, raw=False)
-    except ImportError:
-        from logstash_spark.vendor_msgpack import unpackb
-
-        return unpackb
-
-
 def decode_msgpack(df: DataFrame, source: str, schema: str) -> DataFrame:
     """msgpack codec (default_plugins.rb:16): byte column -> typed events.
     Framing identical to json_lines (one map per row); malformed rows drop
@@ -112,14 +99,15 @@ def decode_msgpack(df: DataFrame, source: str, schema: str) -> DataFrame:
     names = [f.name for f in out_schema.fields]
 
     def batches(it):
-        unpack = _msgpack_unpackb()
+        from logstash_spark.vendor_msgpack import unpackb
+
         for pdf in it:
             rows = []
             for b in pdf[source]:
                 if b is None:
                     continue
                 try:
-                    obj = unpack(bytes(b))
+                    obj = unpackb(bytes(b))
                 except (ValueError, TypeError):  # MsgpackError is a ValueError
                     continue
                 if isinstance(obj, dict):
@@ -205,8 +193,7 @@ def decode_fluent(df: DataFrame, source: str, schema: str) -> DataFrame:
     """fluent codec (default_plugins.rb:19): msgpack-framed
     ``[tag, time, record]`` entries. Framing contract: unpack each binary
     row as the 3-tuple, flatten ``record`` into ``schema`` columns plus
-    fluent_tag/fluent_time. Runs on the vendored msgpack reader when the C
-    package is absent."""
+    fluent_tag/fluent_time. Runs on the vendored msgpack reader."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -216,14 +203,15 @@ def decode_fluent(df: DataFrame, source: str, schema: str) -> DataFrame:
     names = [f_.name for f_ in out_schema.fields]
 
     def batches(it):
-        unpack = _msgpack_unpackb()
+        from logstash_spark.vendor_msgpack import unpackb
+
         for pdf in it:
             rows = []
             for b in pdf[source]:
                 if b is None:
                     continue
                 try:
-                    tag, ts, record = unpack(bytes(b))
+                    tag, ts, record = unpackb(bytes(b))
                 except (ValueError, TypeError):
                     continue
                 rows.append([tag, int(ts)] + [record.get(n) for n in names[2:]])

@@ -16,20 +16,25 @@ Spark design (NOT the reference's per-event Ruby regex loop):
 1. The pattern tree is expanded ONCE at plan-build time into a single flat
    regex with numbered groups (named groups are tracked positionally so the
    same compiled text works in Python `re`, Java regex, and RE2/DuckDB).
-2. Two physical backends (``backend='auto'`` picks by capture count):
-   - ``expr``  — pure JVM: one ``regexp_extract`` per capture group inside
-     whole-stage codegen. Zero Python in the hot path; Catalyst CSE shares
-     the match work. Best when capture count is small.
-   - ``arrow`` — one ``arrow_udf`` running RE2 (``pyarrow.compute``)
+2. Each compiled pattern runs on one engine, picked at plan time from one
+   fact: does RE2 compile its regex (``re2_compiles``)?
+   - yes -> ``arrow``: one ``arrow_udf`` running RE2 (``pyarrow.compute``)
      over the whole Arrow batch, returning a struct of string captures
-     (Arrow in and out, no pandas). Best from 2 captures up
+     (Arrow in and out, no pandas). Every capture comes out of one pass
      (COMBINEDAPACHELOG: 12 captures = 1 pass instead of 12 regex scans).
      When ``compile_grok`` can prove it safe, the pass extracts with a
      reduced *capture skeleton* and verifies it (``arrow_extract``).
+     RE2 does not recurse, so a long line costs time linear in its length.
      Never row-at-a-time Python.
-   Both backends cast ``:int``/``:float`` captures with the same Spark
-   cast in ``grok()``.
-At 100 TB both backends scale linearly with input partitions; there is no
+   - no (lookaround, back-references, atomic groups, possessive
+     quantifiers) -> ``expr``: pure JVM, one ``regexp_extract`` per
+     capture inside whole-stage codegen, the only engine that runs those
+     constructs. Residual risk: Java regex recurses once per iteration of
+     a repeated group, so hostile input of a few KB through such a
+     pattern can still overflow the stack and take the local JVM down.
+   A pattern list may mix engines. Both engines cast ``:int``/``:float``
+   captures with the same Spark cast in ``grok()``.
+At 100 TB both engines scale linearly with input partitions; there is no
 shuffle in a grok stage.
 """
 
@@ -79,7 +84,7 @@ class CompiledGrok:
 
     def python_re(self) -> "re.Pattern[str]":
         # re.ASCII: Python's \w/\b/\d/\s are UNICODE by default, but the
-        # JVM expr backend, RE2 (arrow backend + the DuckDB oracles) and
+        # JVM expr engine, RE2 (arrow engine + the DuckDB oracles) and
         # Ruby's Oniguruma (the reference) all treat them as ASCII — a '¹'
         # matched \w only under Unicode classes (hypothesis-found
         # cross-engine divergence)
@@ -92,7 +97,7 @@ def compile_grok(pattern: str, extra_patterns: dict[str, str] | None = None) -> 
     Capture groups are emitted ONLY for named captures; library expansions
     become non-capturing. Duplicate capture names each get their OWN group —
     the reference's grok keeps every occurrence and the field becomes an
-    array (mirrored by the backends via capture_groups()).
+    array (mirrored by both engines via capture_groups()).
     """
     lib = dict(BASE_PATTERNS)
     if extra_patterns:
@@ -332,7 +337,7 @@ def _cast_type(typ: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# backends
+# engines
 # ---------------------------------------------------------------------------
 
 
@@ -356,7 +361,7 @@ def _capture_columns(cg: CompiledGrok, group: Callable[[int], Column]) -> dict[s
 
 
 def grok_expr_columns(cg: CompiledGrok, source: Column) -> dict[str, Column]:
-    """JVM backend: one regexp_extract per capture (whole-stage codegen).
+    """JVM engine: one regexp_extract per capture (whole-stage codegen).
 
     regexp_extract returns '' on no-match; grok semantics are null -> use a
     matched-guard so non-matching rows yield nulls for every capture.
@@ -411,12 +416,12 @@ def arrow_extract(cg: CompiledGrok, arr):
 
 
 def grok_arrow_udf(cg: CompiledGrok):
-    """RE2 backend: one ``arrow_udf`` over ``arrow_extract`` — vectorized
+    """RE2 engine: one ``arrow_udf`` over ``arrow_extract`` — vectorized
     C++ passes over the Arrow batch, no per-row Python and no pandas hop.
     It returns a non-null struct of every capture group ``cN`` as a
     string ('' from an optional group that did not take part -> null) and
     ``_grok_matched``; ``grok()`` types and names the captures with the
-    same Spark expressions as the expr backend (``_capture_columns``).
+    same Spark expressions as the expr engine (``_capture_columns``).
 
     A/B against the pandas UDF this replaced (perfbench flagship_agg,
     local[4], 4-core shared Xeon host, 3 traced pairs, with
@@ -443,12 +448,22 @@ def grok_arrow_udf(cg: CompiledGrok):
     return _grok
 
 
+def re2_compiles(cg: CompiledGrok) -> bool:
+    """True when RE2 (the arrow engine) compiles ``cg.named_regex``.
+    Lookaround, back-references, atomic groups and possessive quantifiers
+    do not compile, and those patterns run on the JVM expr engine."""
+    try:
+        pc.extract_regex(pa.array([], pa.string()), cg.named_regex)
+    except pa.ArrowInvalid:
+        return False
+    return True
+
+
 def grok(
     df: DataFrame,
     source: str,
     patterns: str | list[str],
     *,
-    backend: str = "auto",
     extra_patterns: dict[str, str] | None = None,
     tag_on_failure: str | list[str] = GROK_FAILURE_TAG,
     overwrite_tags: bool = False,
@@ -474,27 +489,23 @@ def grok(
     1-element array (the engine's documented scalar->array promotion; the
     row engine keeps a scalar there).
 
-    ``backend='auto'`` picks ``expr`` for a pattern with at most 1 capture
-    and ``arrow`` from 2 up. A pattern using QUOTEDSTRING (``QS``) always
-    goes to ``arrow``: Java regex recurses once per iteration of its loop,
-    so a ~64 KB quoted field overflows the stack and takes the local JVM
-    down; RE2 does not recurse. The JVM expr backend rescans once per
-    capture; the arrow backend extracts every capture in one RE2 pass,
-    through the verified capture skeleton whenever ``compile_grok``
-    derived one (``arrow_extract``). Measured (4-core Xeon host, local[4],
-    400k perfbench rows, warm): 1 capture expr 0.73 s / arrow 0.85 s,
-    2 captures 1.79 / 0.61 s, 3 captures 2.14 / 0.58 s.
+    Each pattern runs on RE2 (``grok_arrow_udf``) when RE2 compiles it,
+    else on Java regex (``grok_expr_columns``); see the module docstring.
+    RE2 extracts every capture in one pass, through the verified capture
+    skeleton whenever ``compile_grok`` derived one (``arrow_extract``);
+    the JVM engine rescans once per capture. Measured (4-core Xeon host,
+    local[4], 400k perfbench rows, warm): 2 captures expr 1.79 s / arrow
+    0.61 s, 3 captures 2.14 / 0.58 s; 1 capture (``%{IPORHOST:clientip}``)
+    expr 0.77-1.17 s / arrow 0.72-0.82 s over 5 reps, where an earlier
+    run read 0.73 / 0.85 s. A 1-capture pattern runs on RE2 even at that
+    possible cost: Java regex recurses once per iteration of a repeated
+    group, and ``%{UNIXPATH:p}`` over a 4,000-char path overflowed its
+    stack and took the local JVM down.
     """
     pats = [patterns] if isinstance(patterns, str) else list(patterns)
     ow = set(overwrite or [])
     pre_cols = set(df.columns)
     compiled = [compile_grok(p, extra_patterns) for p in pats]
-    if backend == "auto":
-        max_caps = max((len(cg.captures) for cg in compiled), default=0)
-        quoted = any(BASE_PATTERNS["QUOTEDSTRING"] in cg.regex for cg in compiled)
-        backend = "expr" if max_caps < 2 and not quoted else "arrow"
-    if backend not in ("expr", "arrow"):
-        raise ValueError(f"grok backend must be 'expr', 'arrow' or 'auto', not {backend!r}")
 
     # (name, type, is_array): a field duplicated inside ANY pattern becomes
     # an array everywhere (the reference's per-event union type is
@@ -515,10 +526,10 @@ def grok(
     per_pattern: list[dict[str, Column]] = []
     # SNAPSHOT the source: a capture named after the source column (e.g.
     # '%{WORD:verb} %{GREEDYDATA:message}' over 'message') overwrites it,
-    # and the expr backend's unanchored Column expressions would re-resolve
+    # and the expr engine's unanchored Column expressions would re-resolve
     # against the overwritten value — corrupting later captures and the
     # failure tag. The temp column pins the original text for every
-    # backend and pattern.
+    # engine and pattern.
     snap = "_grok_src"
     while snap in df.columns:
         snap += "_"
@@ -535,7 +546,7 @@ def grok(
             this_src = F.when(
                 _matched_before(per_pattern, i), F.lit(None)
             ).otherwise(src)
-        if backend == "arrow":
+        if re2_compiles(cg):
             udf = grok_arrow_udf(cg)
             sname = f"_grok_{i}"
             df = df.withColumn(sname, udf(this_src))

@@ -75,9 +75,7 @@ def metrics(
         # only meter[0] silently lost every other metric family
         from logstash_spark.event import sprintf_col
 
-        key_cols = [
-            sprintf_col(m, df) if "%{" in m else F.lit(m) for m in meters
-        ]
+        key_cols = [sprintf_col(m, df) for m in meters]
         df = df.withColumn("_meter_key", F.explode(F.array(*key_cols)))
         key_expr = F.col("_meter_key")
     elif key_template is not None:

@@ -225,7 +225,7 @@ def syslog_decode(
     from logstash_spark.operators.date import date as date_op
     from logstash_spark.operators.grok import grok
 
-    out = grok(df, source, SYSLOG_LINE_PATTERN, backend="arrow")
+    out = grok(df, source, SYSLOG_LINE_PATTERN)
     out = syslog_pri(out, source="syslog_pri")
     if year is not None:
         out = out.withColumn(

@@ -7,7 +7,7 @@ below are written fresh from the publicly documented grok pattern syntax
 (``NAME regex`` lines, ``%{NAME:capture:type}`` composition) covering the
 subset our pipelines and tests use. Regexes are kept in the common subset of
 Python ``re``, Java ``java.util.regex`` and RE2 so the same pattern text
-drives the RE2 arrow backend, the Spark-expression backend and the DuckDB
+drives the RE2 arrow engine, the Spark-expression engine and the DuckDB
 oracle (the property tests add Python ``re`` as a third engine).
 """
 

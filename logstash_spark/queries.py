@@ -745,8 +745,8 @@ def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "token_count",
     """SELECT doc_id,
-       len(string_split_regex(trim(text), '\\s+')) AS n_ws_tokens,
-       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS n_bpe_tokens
+       len(string_split_regex(trim(text), '[\\s\\v]+')) AS n_ws_tokens,
+       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s\\v]')) AS n_bpe_tokens
 FROM documents""",
 )
 def token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -772,19 +772,19 @@ def token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
   FROM documents WHERE text IS NOT NULL
 ), base AS (
   SELECT doc_id, text,
-         string_split_regex(trim(text), '\\s+') AS w,
+         string_split_regex(trim(text), '[\\s\\v]+') AS w,
          string_split(text, chr(10)) AS ln
   FROM salted
 ), f AS (
   SELECT doc_id,
          len(w) AS n_words,
-         length(regexp_replace(text, '\\s+', '', 'g')) AS nonspace,
+         length(regexp_replace(text, '[\\s\\v]+', '', 'g')) AS nonspace,
          (length(text) - length(replace(text, '#', '')))
            + (length(text) - length(replace(text, '...', ''))) / 3
            + (length(text) - length(replace(text, '…', ''))) AS sym,
          len(list_filter(w, x -> regexp_matches(x, '[a-zA-Z]'))) AS alpha_words,
-         len(list_filter(ln, x -> regexp_matches(x, '^\\s*(\\-|\\*|•) '))) AS bullets,
-         len(list_filter(ln, x -> regexp_matches(x, '(\\.\\.\\.|…)\\s*$'))) AS ellends,
+         len(list_filter(ln, x -> regexp_matches(x, '^[\\s\\v]*(\\-|\\*|•) '))) AS bullets,
+         len(list_filter(ln, x -> regexp_matches(x, '(\\.\\.\\.|…)[\\s\\v]*$'))) AS ellends,
          len(ln) AS n_lines,
          len(list_intersect(list_distinct(list_transform(w, x -> lower(x))),
                             ['the','be','to','of','and','that','have','with'])) AS stops
@@ -846,7 +846,7 @@ def gopher_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH f AS (
   SELECT doc_id,
          length(text) AS n_chars,
-         len(string_split_regex(trim(text), '\\s+')) AS n_words,
+         len(string_split_regex(trim(text), '[\\s\\v]+')) AS n_words,
          length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
          len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|that|for|with|was)\\b')) AS stop_hits
   FROM documents
@@ -878,7 +878,7 @@ def quality_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_classifier",
     """WITH toks AS (
   SELECT doc_id, t FROM (
-    SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS t FROM documents
+    SELECT doc_id, unnest(string_split_regex(lower(text), '[\\s\\v]+')) AS t FROM documents
   ) WHERE t <> ''
 ), u AS (
   SELECT doc_id,
@@ -914,7 +914,7 @@ def quality_classifier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "repetition_ratio",
     """WITH w AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words FROM documents
+  SELECT doc_id, string_split_regex(trim(text), '[\\s\\v]+') AS words FROM documents
 ), g AS (
   SELECT doc_id, len(words) - 1 AS k,
          list_transform(range(1, greatest(len(words) - 1, 0) + 1),
@@ -936,7 +936,7 @@ def repetition_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_ratio(d).select("doc_id", "n_ngrams", "rep_ratio")
 
 
-_NORM_SQL = "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))"
+_NORM_SQL = "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s\\v]', '', 'g'), '[\\s\\v]+', ' ', 'g'))"
 
 
 @q(
@@ -1522,7 +1522,7 @@ def html_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
               WHEN c_fr >= c_es THEN 'fr'
               ELSE 'es' END AS lang_pred,
          length(text) AS n_chars,
-         len(string_split_regex(trim(text), '\\s+')) AS n_words,
+         len(string_split_regex(trim(text), '[\\s\\v]+')) AS n_words,
          length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
          len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|that|for|with|was)\\b')) AS stop_hits
   FROM langed
@@ -4184,7 +4184,7 @@ _BM25_TERMS = ("dup", "window", "merge", "customer")
     "bm25_search",
     f"""WITH docs AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+         list_filter(string_split_regex(lower(trim(text)), '[\\s\\v]+'),
                      t -> t <> '') AS toks
   FROM documents WHERE text IS NOT NULL
 ), corpus AS (
@@ -4231,7 +4231,7 @@ def bm25_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""{_PAGES_CTE},
 h AS (
   SELECT lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)) AS host,
-         len(string_split_regex(trim(text), '\\s+')) AS toks
+         len(string_split_regex(trim(text), '[\\s\\v]+')) AS toks
   FROM pages
 ), per AS (
   SELECT host, count(*) AS n_docs, sum(toks) AS n_tokens FROM h GROUP BY host
@@ -4321,7 +4321,7 @@ def deterministic_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sequence_pack",
     """WITH s AS (
   SELECT doc_id,
-         len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+         len(string_split_regex(trim(text), '[\\s\\v]+')) AS n_tokens,
          substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS skey
   FROM documents
 ), o AS (
@@ -4350,7 +4350,7 @@ def sequence_pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "chunk_text",
     """WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
+  SELECT doc_id, string_split_regex(trim(text), '[\\s\\v]+') AS toks
   FROM documents
 ), w AS (
   SELECT doc_id, len(toks) AS n, toks,
@@ -4449,7 +4449,7 @@ def unigram_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "pack_manifest",
     """WITH s AS (
-  SELECT doc_id, len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+  SELECT doc_id, len(string_split_regex(trim(text), '[\\s\\v]+')) AS n_tokens,
          substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS skey
   FROM documents
 ), o AS (
@@ -4483,7 +4483,7 @@ def pack_manifest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "filter_funnel",
     """WITH d AS (
-  SELECT n_chars, len(string_split_regex(trim(text), '\\s+')) AS toks, lang
+  SELECT n_chars, len(string_split_regex(trim(text), '[\\s\\v]+')) AS toks, lang
   FROM documents
 ), a AS (
   SELECT count(*) AS n0,
@@ -4899,7 +4899,7 @@ def _dsir_oracle(n_buckets: int = 4096, tau_e6: int = -60_000_000) -> str:
     bkt = _bloom_pos_sql("md5(gram)", n_buckets)
     u_g = _bloom_pos_sql("md5('dsir|' || CAST(doc_id AS VARCHAR))", 1 << 24)
     return f"""WITH docs AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS l,
+  SELECT doc_id, string_split_regex(lower(trim(text)), '[\\s\\v]+') AS l,
          (doc_id % 17 = 0) AS tgt
   FROM documents WHERE text IS NOT NULL
 ), uni AS (
@@ -5543,7 +5543,7 @@ def _bpe_rounds_sql(n: int, relation: str = "documents", source: str = "text") -
         f"""w1 AS (
   SELECT ' ' || regexp_replace(word, '(.)', '\\1 ', 'g') || '</w> ' AS syms,
          COUNT(*) AS freq
-  FROM (SELECT unnest(string_split_regex({source}, '\\s+')) AS word FROM {relation})
+  FROM (SELECT unnest(string_split_regex({source}, '[\\s\\v]+')) AS word FROM {relation})
   WHERE word <> '' GROUP BY word)"""
     ]
     for r in range(1, n + 1):
@@ -5612,7 +5612,7 @@ def _bpe_apply_sql(n: int) -> str:
 tok AS (
   SELECT d.doc_id,
          array_to_string(list_transform(
-           list_filter(string_split_regex(d.text, '\\s+'), w -> w <> ''),
+           list_filter(string_split_regex(d.text, '[\\s\\v]+'), w -> w <> ''),
            w -> trim({expr})), ' ') AS tokens
   FROM documents d, {froms})
 SELECT doc_id, tokens,
@@ -5680,7 +5680,7 @@ def _bpe_tokens_sql_expr(n: int, text: str = "d.text") -> str:
         expr = f"replace(replace({expr}, {pat}, {rep}), {pat}, {rep})"
     return (
         f"array_to_string(list_transform("
-        f"list_filter(string_split_regex({text}, '\\s+'), w -> w <> ''), "
+        f"list_filter(string_split_regex({text}, '[\\s\\v]+'), w -> w <> ''), "
         f"w -> trim({expr})), ' ')"
     )
 
@@ -5797,7 +5797,7 @@ def bigram_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
   SELECT doc_id,
          CAST(len(ls) AS BIGINT) AS n_lines,
          list_filter(ls, x -> regexp_matches(trim(x), '[.!?"]$')
-           AND len(string_split_regex(trim(x), '\\s+')) >= 5
+           AND len(string_split_regex(trim(x), '[\\s\\v]+')) >= 5
            AND NOT contains(lower(trim(x)), 'javascript')
            AND NOT contains(lower(trim(x)), 'lorem ipsum')
            AND NOT contains(trim(x), '{')
@@ -6819,7 +6819,7 @@ def wet_records_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT url,
        CAST(4 AS BIGINT) AS n_blocks,
        CAST(1 AS BIGINT) AS n_kept,
-       trim(regexp_replace(text, '\\s+', ' ', 'g')) AS main_text
+       trim(regexp_replace(text, '[\\s\\v]+', ' ', 'g')) AS main_text
 FROM pages""",
 )
 def main_content_extract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6964,7 +6964,7 @@ v AS (
               WHEN hnum % 4 = 1 THEN NOT ((eid LIKE '3%' AND eid NOT LIKE '34%') OR eid = '345')
               ELSE TRUE END AS allowed,
          hnum IN (5, 17) AS blocked,
-         CAST(len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS BIGINT) AS n_tokens
+         CAST(len(string_split(trim(regexp_replace(text, '[\\s\\v]+', ' ', 'g')), ' ')) AS BIGINT) AS n_tokens
   FROM v
 ), gated AS (
   SELECT *, allowed AND NOT blocked AND n_tokens >= 5 AS passed_gate
@@ -6977,7 +6977,7 @@ v AS (
 SELECT g.url, g.allowed, g.blocked, g.n_tokens, g.passed_gate,
        c.is_canonical,
        CASE WHEN g.passed_gate
-            THEN md5(trim(regexp_replace(g.text, '\\s+', ' ', 'g'))) END AS main_digest
+            THEN md5(trim(regexp_replace(g.text, '[\\s\\v]+', ' ', 'g'))) END AS main_digest
 FROM gated g LEFT JOIN canon c ON g.url = c.url""",
 )
 def web_corpus_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8063,7 +8063,7 @@ def host_quality_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "inverted_index",
     """WITH base AS (
   SELECT doc_id,
-         unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+         unnest(list_filter(string_split_regex(lower(trim(text)), '[\\s\\v]+'),
                             t -> t <> '')) AS term
   FROM documents WHERE text IS NOT NULL
 ), tf AS (
@@ -8723,7 +8723,7 @@ def winnow_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_threshold_sweep",
     f"""WITH f AS (
   SELECT doc_id,
-         len(string_split_regex(trim(text), '\\s+')) AS n_words,
+         len(string_split_regex(trim(text), '[\\s\\v]+')) AS n_words,
          length(text) AS n_chars,
          length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
          len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|that|for|with|was)\\b')) AS stop_hits
@@ -9351,7 +9351,7 @@ def shared_ip_hosts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token_budget_select",
     f"""WITH f AS (
   SELECT doc_id,
-         len(string_split_regex(trim(text), '\\s+')) AS n_words,
+         len(string_split_regex(trim(text), '[\\s\\v]+')) AS n_words,
          length(text) AS n_chars,
          length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
          len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|that|for|with|was)\\b')) AS stop_hits

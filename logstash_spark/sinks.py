@@ -171,12 +171,10 @@ class GraphiteSink(Sink):
         # metrics keys are metric names)
         pairs = [(self.metric, self.value)] + [tuple(p) for p in self.metrics]
 
-        def name_col(t: str):
-            return sprintf_col(t, d) if "%{" in t else F.lit(t)
 
         if len(pairs) == 1:
             mcol = "_graphite_metric"
-            d = d.withColumn(mcol, name_col(self.metric))
+            d = d.withColumn(mcol, sprintf_col(self.metric, d))
             out = encode_graphite(d, metric=mcol, value=self.value, ts=self.ts, target="line")
         else:
             # one line per (metric, value) pair per event: explode a
@@ -184,7 +182,7 @@ class GraphiteSink(Sink):
             d = d.withColumn(
                 "_g",
                 F.explode(F.array(*[
-                    F.struct(name_col(m).alias("m"), F.col(v).cast("string").alias("v"))
+                    F.struct(sprintf_col(m, d).alias("m"), F.col(v).cast("string").alias("v"))
                     for m, v in pairs
                 ])),
             ).withColumn("_g_m", F.col("_g.m")).withColumn("_g_v", F.col("_g.v"))
@@ -311,12 +309,7 @@ class PipeSink(Sink):
             if self.message_format
             else event_to_json(clean)
         )
-        cmd = (
-            sprintf_col(self.command, df)
-            if "%{" in self.command
-            else F.lit(self.command)
-        )
-        out = df.select(cmd.alias("_cmd"), line.alias("_line"))
+        out = df.select(sprintf_col(self.command, df).alias("_cmd"), line.alias("_line"))
         cap = self.max_commands_per_task
 
         def feed(rows) -> None:
@@ -420,14 +413,12 @@ class OpentsdbSink(Sink):
 
         d = strip_internal(df)
 
-        def name_col(t: str):
-            return sprintf_col(t, d) if "%{" in t else F.lit(t)
 
         pairs = [(self.metric, self.value)] + [tuple(p) for p in self.metrics]
         d = d.withColumn(
             "_t",
             F.explode(F.array(*[
-                F.struct(name_col(m).alias("m"), F.col(v).cast("string").alias("v"))
+                F.struct(sprintf_col(m, d).alias("m"), F.col(v).cast("string").alias("v"))
                 for m, v in pairs
             ])),
         )
@@ -437,8 +428,7 @@ class OpentsdbSink(Sink):
             F.col("_t.v"),
         ]
         for k, v in (self.tags or {}).items():
-            tv = sprintf_col(str(v), d) if "%{" in str(v) else F.lit(str(v))
-            parts.append(F.concat(F.lit(f"{k}="), tv))
+            parts.append(F.concat(F.lit(f"{k}="), sprintf_col(str(v), d)))
         out = d.select(F.concat_ws(" ", *parts).alias("line"))
         out.write.mode("append").text(self.path)
         return self.path
@@ -506,10 +496,9 @@ class HttpSink(Sink):
         from logstash_spark.operators.codecs import encode_json
 
         enc = encode_json(df, target="body", drop_fields=False)
-        u = sprintf_col(self.url, df) if "%{" in self.url else F.lit(self.url)
         out = enc.select(
             F.lit(self.http_method.upper()).alias("method"),
-            u.alias("url"),
+            sprintf_col(self.url, df).alias("url"),
             F.lit(self.content_type).alias("content_type"),
             "body",
         )
@@ -632,15 +621,13 @@ class PagerdutySink(Sink):
 
         d = strip_internal(df)
 
-        def render(t: str):
-            return sprintf_col(t, d) if "%{" in t else F.lit(t)
 
         enc = encode_json(df, target="_details", drop_fields=False)
         payload = F.to_json(F.struct(
             F.lit(self.service_key).alias("service_key"),
             F.lit(self.event_type).alias("event_type"),
-            render(self.incident_key).alias("incident_key"),
-            render(self.description).alias("description"),
+            sprintf_col(self.incident_key, d).alias("incident_key"),
+            sprintf_col(self.description, d).alias("description"),
             F.col("_details").alias("details"),
         ))
         enc.select(payload.alias("line")).write.mode("append").text(self.path)
@@ -665,16 +652,14 @@ class EmailSink(Sink):
 
         d = strip_internal(df)
 
-        def render(t: str):
-            return sprintf_col(t, d) if "%{" in t else F.lit(t)
 
-        body = render(self.body) if self.body else event_to_json(d)
+        body = sprintf_col(self.body, d) if self.body else event_to_json(d)
         # shared encoder: the imap input's decode_rfc822 round-trips this
         rfc822 = encode_rfc822(
             d, to=self.to, from_addr=self.from_addr, subject=self.subject, body=body
         )
-        out = d.select(render(self.to).alias("to"),
-                       render(self.subject).alias("subject"),
+        out = d.select(sprintf_col(self.to, d).alias("to"),
+                       sprintf_col(self.subject, d).alias("subject"),
                        rfc822.alias("rfc822"))
         out.write.mode("append").parquet(self.path)
         return self.path
@@ -693,10 +678,9 @@ class SnsSink(Sink):
         from logstash_spark.event import event_to_json, sprintf_col
 
         d = strip_internal(df)
-        subj = sprintf_col(self.subject, d) if "%{" in self.subject else F.lit(self.subject)
         out = d.select(
             F.lit(self.arn).alias("topic_arn"),
-            subj.alias("subject"),
+            sprintf_col(self.subject, d).alias("subject"),
             event_to_json(d).alias("message"),
         )
         out.write.mode("append").parquet(self.path)
@@ -730,7 +714,7 @@ def irc_frames(
     irc input's round-trip oracle (sources/chat.py)."""
     from logstash_spark.event import sprintf_col
 
-    msg = sprintf_col(format, df) if "%{" in format else F.lit(format)
+    msg = sprintf_col(format, df)
     return df.select(
         F.explode(F.array(*[F.lit(c) for c in channels])).alias("_ch"),
         msg.alias("_m"),
@@ -807,8 +791,8 @@ def hipchat_frames(
     Shuffle-free projection."""
     from logstash_spark.event import sprintf_col
 
-    msg = sprintf_col(format, df) if "%{" in format else F.lit(format)
-    room = sprintf_col(room_id, df) if "%{" in room_id else F.lit(room_id)
+    msg = sprintf_col(format, df)
+    room = sprintf_col(room_id, df)
     body = F.concat(
         F.lit('{"from":"' + from_name + '","color":"' + color + '",'),
         F.lit('"notify":' + ("true" if trigger_notify else "false") + ","),
@@ -859,7 +843,7 @@ def juggernaut_frames(
     whole event JSON when no message_format is set."""
     from logstash_spark.event import event_to_json, sprintf_col
 
-    chans = [sprintf_col(c, df) if "%{" in c else F.lit(c) for c in channels]
+    chans = [sprintf_col(c, df) for c in channels]
     data = (
         json_string_col(sprintf_col(message_format, df))
         if message_format else event_to_json(df)
@@ -923,13 +907,11 @@ class GangliaSink(Sink):
 
         d = strip_internal(df)
 
-        def render(t: str):
-            return sprintf_col(t, d) if "%{" in t else F.lit(t)
 
         host = (F.col(self.host_field).cast("string") if self.host_field in d.columns
                 else F.lit("unknown"))
-        proj = d.select(host.alias("h"), render(self.metric).alias("m"),
-                        render(self.value).cast("string").alias("v"))
+        proj = d.select(host.alias("h"), sprintf_col(self.metric, d).alias("m"),
+                        sprintf_col(self.value, d).cast("string").alias("v"))
         gt, un, sl, tm, dm = (self.ganglia_type, self.units, self.slope,
                               self.max_interval, self.lifetime)
 
@@ -974,16 +956,14 @@ class NagiosNscaSink(Sink):
 
         d = strip_internal(df)
 
-        def render(t: str):
-            return sprintf_col(t, d) if "%{" in t else F.lit(t)
 
         ts = (F.unix_timestamp(F.col("@timestamp")) if "@timestamp" in d.columns
               else F.lit(0)).cast("long")
         proj = d.select(
-            render(self.nagios_host).alias("h"),
-            render(self.nagios_service).alias("s"),
-            render(self.nagios_status).cast("int").alias("c"),
-            render(self.message_format).alias("o"),
+            sprintf_col(self.nagios_host, d).alias("h"),
+            sprintf_col(self.nagios_service, d).alias("s"),
+            sprintf_col(self.nagios_status, d).cast("int").alias("c"),
+            sprintf_col(self.message_format, d).alias("o"),
             ts.alias("t"),
         )
 

@@ -133,8 +133,7 @@ def encode_redis_records(
     clean = strip_internal(df)
     cols = fields or clean.columns
     value = F.to_json(F.struct(*[F.col(c) for c in cols]))
-    k = sprintf_col(key, df) if "%{" in key else F.lit(key)
-    return df.select(k.alias("key"), value.alias("value"))
+    return df.select(sprintf_col(key, df).alias("key"), value.alias("value"))
 
 
 def redis_wire_shim(encoded: DataFrame) -> DataFrame:
@@ -198,7 +197,7 @@ def encode_zeromq_records(
     cols = fields or clean.columns
     value = F.to_json(F.struct(*[F.col(c) for c in cols]))
     if topology == "pubsub":
-        t = sprintf_col(topic, df) if topic and "%{" in topic else F.lit(topic or "")
+        t = sprintf_col(topic or "", df)
     else:
         t = F.lit(None).cast("string")
     return df.select(t.alias("topic"), value.alias("value"))

@@ -107,14 +107,11 @@ def encode_xmpp_stanzas(
     sprintf'd JID (escaped too)."""
     from logstash_spark.event import sprintf_col
 
-    def render(t: str) -> Column:
-        return sprintf_col(t, df) if "%{" in t else F.lit(t)
-
     stanza = F.concat(
         F.lit('<message from="'), _xml_escape(F.lit(from_jid)),
-        F.lit('" to="'), _xml_escape(render(to)),
+        F.lit('" to="'), _xml_escape(sprintf_col(to, df)),
         F.lit(f'" type="{msg_type}"><body>'),
-        _xml_escape(render(body)),
+        _xml_escape(sprintf_col(body, df)),
         F.lit("</body></message>"),
     )
     return df.select(stanza.alias("stanza"))
@@ -159,13 +156,10 @@ def encode_rfc822(
     definition. ``to``/``subject`` are sprintf templates."""
     from logstash_spark.event import sprintf_col
 
-    def render(t: str) -> Column:
-        return sprintf_col(t, df) if "%{" in t else F.lit(t)
-
     return F.concat(
         F.lit(f"From: {from_addr}\r\n"),
-        F.lit("To: "), render(to), F.lit("\r\n"),
-        F.lit("Subject: "), render(subject), F.lit("\r\n\r\n"),
+        F.lit("To: "), sprintf_col(to, df), F.lit("\r\n"),
+        F.lit("Subject: "), sprintf_col(subject, df), F.lit("\r\n\r\n"),
         body,
     )
 

@@ -4,9 +4,8 @@ Written from the public MessagePack format specification
 (https://github.com/msgpack/msgpack/blob/master/spec.md) so the msgpack and
 fluent codecs (reference manifest rakelib/default_plugins.rb:12,19) work in
 runtimes without the C `msgpack` package — the same vendoring approach as
-the EDN reader in operators/codecs.py. The real package, when present, is
-preferred by the codecs (it is faster); this module is the correctness
-fallback and the round-trip oracle's engine.
+the EDN reader in operators/codecs.py. It is the codecs' only msgpack
+engine and the round-trip oracle's.
 
 Scale note: both functions are called inside Arrow-batched `mapInPandas`
 kernels — per-row Python is unavoidable for a variable-length binary format

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -17,3 +18,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def grok_engine():
+    """``with grok_engine("expr"):`` builds every grok pattern on Java
+    regex, ``grok_engine("arrow")`` on RE2, by faking grok's RE2 check:
+    the engine-agreement tests pin both engines to each other on the
+    patterns both can run."""
+
+    @contextlib.contextmanager
+    def force(engine: str):
+        from logstash_spark.operators import grok
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(grok, "re2_compiles", lambda cg: engine == "arrow")
+            yield
+
+    return force

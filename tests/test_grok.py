@@ -6,8 +6,15 @@ step-5-output.txt). Every asserted value below is copied from
 step-5-output.txt — this is the reference's de-facto oracle.
 """
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import Row
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 GOLDEN_LINE = (
     '129.92.249.70 - - [18/Aug/2011:06:00:14 -0700] "GET /style2.css HTTP/1.1" '
@@ -30,26 +37,28 @@ EXPECTED = {
 }
 
 
-@pytest.mark.parametrize("backend", ["expr", "arrow"])
-def test_combined_apache_golden(spark, backend):
+@pytest.mark.parametrize("engine", ["expr", "arrow"])
+def test_combined_apache_golden(spark, grok_engine, engine):
     from logstash_spark.operators.grok import grok
 
     df = spark.createDataFrame([Row(message=GOLDEN_LINE)])
-    out = grok(df, "message", "%{COMBINEDAPACHELOG}", backend=backend)
+    with grok_engine(engine):
+        out = grok(df, "message", "%{COMBINEDAPACHELOG}")
     row = out.collect()[0].asDict()
     for k, v in EXPECTED.items():
-        assert row[k] == v, f"{backend}: {k}: {row[k]!r} != {v!r}"
+        assert row[k] == v, f"{engine}: {k}: {row[k]!r} != {v!r}"
     # agent keeps surrounding quotes in the reference output
     assert row["agent"].startswith('"Mozilla/5.0 (iPad;')
     assert row["tags"] is None or "_grokparsefailure" not in row["tags"]
 
 
-@pytest.mark.parametrize("backend", ["expr", "arrow"])
-def test_grok_failure_tag(spark, backend):
+@pytest.mark.parametrize("engine", ["expr", "arrow"])
+def test_grok_failure_tag(spark, grok_engine, engine):
     from logstash_spark.operators.grok import grok
 
     df = spark.createDataFrame([Row(message="not an apache line")])
-    out = grok(df, "message", "%{COMBINEDAPACHELOG}", backend=backend)
+    with grok_engine(engine):
+        out = grok(df, "message", "%{COMBINEDAPACHELOG}")
     row = out.collect()[0]
     assert "_grokparsefailure" in row["tags"]
     assert row["clientip"] is None
@@ -65,10 +74,10 @@ def test_typed_captures(spark):
     assert row["load"] == 0.75
 
 
-def test_typed_captures_agree_across_backends(spark):
+def test_typed_captures_agree_across_backends(spark, grok_engine):
     """``:int``/``:float`` captures go through the same Spark cast on both
-    backends: text that is no clean number ('0.25' as int, '1e3', a value
-    past bigint) casts as the expr backend casts it instead of failing the
+    engines: text that is no clean number ('0.25' as int, '1e3', a value
+    past bigint) casts as the expr engine casts it instead of failing the
     job, and an optional capture that did not take part stays null."""
     from logstash_spark.operators.grok import grok
     from logstash_spark.plans.checks import physical_plan
@@ -77,11 +86,14 @@ def test_typed_captures_agree_across_backends(spark):
     df = spark.createDataFrame([(f"{v} {v}",) for v in vals] + [("7 7 5",)], "m string")
     pat = r"^%{NOTSPACE:i:int} %{NOTSPACE:f:float}(?: %{INT:o:int})?$"
     rows = {}
-    for backend in ("expr", "arrow", "auto"):
-        out = grok(df, "m", pat, backend=backend)
-        rows[backend] = sorted(map(tuple, out.select("m", "i", "f", "o", "tags").collect()))
-    assert "ArrowEvalPython" in physical_plan(grok(df, "m", pat))  # 3 captures -> arrow
-    assert rows["arrow"] == rows["expr"] == rows["auto"]
+    for engine in ("expr", "arrow"):
+        with grok_engine(engine):
+            out = grok(df, "m", pat)
+        rows[engine] = sorted(map(tuple, out.select("m", "i", "f", "o", "tags").collect()))
+    out = grok(df, "m", pat)
+    assert "ArrowEvalPython" in physical_plan(out)  # RE2 compiles it -> arrow
+    rows["default"] = sorted(map(tuple, out.select("m", "i", "f", "o", "tags").collect()))
+    assert rows["arrow"] == rows["expr"] == rows["default"]
     got = {r[0]: r[1:4] for r in rows["arrow"]}
     assert got["0.25 0.25"] == (0, 0.25, None)
     assert got["-3 -3"] == (-3, -3.0, None)
@@ -146,27 +158,30 @@ def test_custom_pattern_library(spark):
     assert out.collect()[0]["the_id"] == "ABC-123"
 
 
-def test_backends_agree_on_corpus(spark):
-    """expr and arrow backends must produce identical captures over the
+def test_backends_agree_on_corpus(spark, grok_engine):
+    """expr and arrow engines must produce identical captures over the
     mixed synthetic corpus (70% apache / 30% other)."""
     from logstash_spark.operators.grok import grok
     from logstash_spark.sources.pages import synthetic_pages
 
     p = synthetic_pages(spark, 500).select("url", "text")
     cols = ["url", "clientip", "verb", "response", "bytes", "_grok_matched"]
-    a = grok(p, "text", "%{COMBINEDAPACHELOG}", backend="expr").select(cols)
-    b = grok(p, "text", "%{COMBINEDAPACHELOG}", backend="arrow").select(cols)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    outs = []
+    for engine in ("expr", "arrow"):
+        with grok_engine(engine):
+            outs.append(sorted(map(tuple, grok(p, "text", "%{COMBINEDAPACHELOG}").select(cols).collect())))
+    assert outs[0] == outs[1]
 
 
-def test_no_row_python_in_plan(spark):
+def test_no_row_python_in_plan(spark, grok_engine):
     from logstash_spark.operators.grok import grok
     from logstash_spark.plans.checks import assert_no_python_udf
     from logstash_spark.sources.pages import synthetic_pages
 
     p = synthetic_pages(spark, 10)
-    for backend in ("expr", "arrow"):
-        assert_no_python_udf(grok(p, "text", "%{COMBINEDAPACHELOG}", backend=backend))
+    for engine in ("expr", "arrow"):
+        with grok_engine(engine):
+            assert_no_python_udf(grok(p, "text", "%{COMBINEDAPACHELOG}"))
 
 
 @pytest.mark.parametrize("pattern", [
@@ -175,8 +190,8 @@ def test_no_row_python_in_plan(spark):
     [r"^ERROR %{GREEDYDATA:m}", r"^%{LOGLEVEL:lvl} %{GREEDYDATA:m}"],
     "%{TIMESTAMP_ISO8601:ts} %{NOTSPACE:tok}",
 ])
-def test_backends_agree_on_mixed_patterns(spark, pattern):
-    """Both backends must produce identical captures for every pattern
+def test_backends_agree_on_mixed_patterns(spark, grok_engine, pattern):
+    """Both engines must produce identical captures for every pattern
     shape (optional groups, typed captures, multi-pattern lists) over the
     mixed corpus (70% apache / 15% kv / 10% json / 5% junk)."""
     from logstash_spark.operators.grok import compile_grok, grok
@@ -186,27 +201,26 @@ def test_backends_agree_on_mixed_patterns(spark, pattern):
     pats = pattern if isinstance(pattern, list) else [pattern]
     fields = [n for pat in pats for n, _, _ in compile_grok(pat).captures]
     cols = ["url", *dict.fromkeys(fields), "_grok_matched"]
-    outs = [
-        sorted(map(tuple, grok(p, "text", pattern, backend=b).select(cols).collect()))
-        for b in ("expr", "arrow")
-    ]
+    outs = []
+    for engine in ("expr", "arrow"):
+        with grok_engine(engine):
+            outs.append(sorted(map(tuple, grok(p, "text", pattern).select(cols).collect())))
     assert outs[0] == outs[1]
 
 
-def test_duplicate_capture_names_collect_arrays(spark):
+def test_duplicate_capture_names_collect_arrays(spark, grok_engine):
     """Reference grok keeps EVERY occurrence of a duplicated capture name —
-    the field becomes an array (on both backends)."""
+    the field becomes an array (on both engines)."""
     from logstash_spark.operators.grok import grok
 
-    import pytest
-
     df = spark.createDataFrame([("alpha beta gamma",), ("nomatch!!!",)], "text string")
-    for backend in ("expr", "arrow"):
-        out = {r["text"]: r for r in grok(
-            df, "text", r"%{WORD:w} %{WORD:w} %{WORD:last}", backend=backend
-        ).collect()}
+    for engine in ("expr", "arrow"):
+        with grok_engine(engine):
+            out = {r["text"]: r for r in grok(
+                df, "text", r"%{WORD:w} %{WORD:w} %{WORD:last}"
+            ).collect()}
         row = out["alpha beta gamma"]
-        assert row["w"] == ["alpha", "beta"], (backend, row["w"])
+        assert row["w"] == ["alpha", "beta"], (engine, row["w"])
         assert row["last"] == "gamma"
         miss = out["nomatch!!!"]
         assert miss["w"] is None and "_grokparsefailure" in miss["tags"]
@@ -221,27 +235,27 @@ def test_duplicate_captures_typed_and_multi_pattern(spark):
     out = {r["text"]: r for r in grok(
         df, "text",
         [r"^%{INT:n:int} %{INT:n:int}$", r"^%{WORD:word} %{INT:n:int}$"],
-        backend="expr",
     ).collect()}
     assert out["1 2"]["n"] == [1, 2]
     assert out["solo 7"]["n"] == [7] and out["solo 7"]["word"] == "solo"
 
 
-def test_inline_named_captures(spark):
+def test_inline_named_captures(spark, grok_engine):
     """Oniguruma-style (?<name>...) inline captures — the reference grok's
     second capture syntax (e.g. (?<queue_id>[0-9A-F]{10,11}))."""
     from logstash_spark.operators.grok import grok
 
     df = spark.createDataFrame([("queue 4F2A9BC01D five",), ("nope",)], "text string")
-    for backend in ("expr", "arrow"):
-        out = {r["text"]: r for r in grok(
-            df, "text", r"queue (?<queue_id>[0-9A-F]{10,11}) %{WORD:w}", backend=backend
-        ).collect()}
-        assert out["queue 4F2A9BC01D five"]["queue_id"] == "4F2A9BC01D", backend
+    for engine in ("expr", "arrow"):
+        with grok_engine(engine):
+            out = {r["text"]: r for r in grok(
+                df, "text", r"queue (?<queue_id>[0-9A-F]{10,11}) %{WORD:w}"
+            ).collect()}
+        assert out["queue 4F2A9BC01D five"]["queue_id"] == "4F2A9BC01D", engine
         assert out["queue 4F2A9BC01D five"]["w"] == "five"
         assert out["nope"]["queue_id"] is None
     # lookbehind syntax must NOT be mistaken for a named group
-    out2 = grok(df, "text", r"(?<=queue )%{WORD:qword}", backend="expr").collect()
+    out2 = grok(df, "text", r"(?<=queue )%{WORD:qword}").collect()
     got = {r["text"]: r["qword"] for r in out2}
     assert got["queue 4F2A9BC01D five"] == "4F2A9BC01D"
 
@@ -252,10 +266,10 @@ def test_break_on_match_false_merges_patterns(spark):
     df = spark.createDataFrame([("a=1 b=2",), ("a=9 only",)], "text string")
     pats = [r"a=%{INT:a:int}", r"b=%{INT:b:int}"]
     # default: first-match-wins — pattern 2 never fires on row 1
-    first = {r["text"]: r for r in grok(df, "text", pats, backend="expr").collect()}
+    first = {r["text"]: r for r in grok(df, "text", pats).collect()}
     assert first["a=1 b=2"]["a"] == 1 and first["a=1 b=2"]["b"] is None
     # break_on_match false: every pattern contributes its fields
-    both = {r["text"]: r for r in grok(df, "text", pats, backend="expr", break_on_match=False).collect()}
+    both = {r["text"]: r for r in grok(df, "text", pats, break_on_match=False).collect()}
     assert both["a=1 b=2"]["a"] == 1 and both["a=1 b=2"]["b"] == 2
     assert both["a=9 only"]["a"] == 9 and both["a=9 only"]["b"] is None
     assert "_grokparsefailure" not in (both["a=9 only"]["tags"] or [])
@@ -267,7 +281,7 @@ def test_nested_capture_targets(spark):
     from logstash_spark.operators.grok import grok
 
     df = spark.createDataFrame([("GET 200",)], "text string")
-    out = grok(df, "text", r"%{WORD:[http][verb]} %{INT:[http][code]:int}", backend="expr")
+    out = grok(df, "text", r"%{WORD:[http][verb]} %{INT:[http][code]:int}")
     row = out.collect()[0]
     assert row["http"]["verb"] == "GET" and row["http"]["code"] == 200
 
@@ -278,35 +292,34 @@ def test_tag_on_failure_list(spark):
     from logstash_spark.operators.grok import grok
 
     df = spark.createDataFrame([("no match here!!!",)], "text string")
-    out = grok(df, "text", r"^%{INT:n:int}$", backend="expr",
-               tag_on_failure=["_grokparsefailure", "bad_event"])
+    out = grok(df, "text", r"^%{INT:n:int}$", tag_on_failure=["_grokparsefailure", "bad_event"])
     tags = out.collect()[0]["tags"]
     assert tags == ["_grokparsefailure", "bad_event"]
 
 
-def test_capture_named_after_source_column(spark):
+def test_capture_named_after_source_column(spark, grok_engine):
     """'%{WORD:verb} %{GREEDYDATA:message}' over 'message' with
     overwrite => ["message"]: replacing the source must not corrupt later
-    captures or the failure tag (the expr backend's unanchored expressions
+    captures or the failure tag (the expr engine's unanchored expressions
     once re-resolved the overwritten column — fixed via a source
     snapshot)."""
     from logstash_spark.operators.grok import grok
 
     df = spark.createDataFrame([("GET /x",), ("###",)], "message string")
-    for backend in ("expr", "arrow"):
-        rows = grok(df, "message", r"%{WORD:verb} %{GREEDYDATA:message}",
-                    backend=backend, overwrite=["message"]).collect()
+    for engine in ("expr", "arrow"):
+        with grok_engine(engine):
+            rows = grok(df, "message", r"%{WORD:verb} %{GREEDYDATA:message}",
+                        overwrite=["message"]).collect()
         ok = [r for r in rows if r["verb"] == "GET"][0]
-        assert ok["message"] == "/x" and not ok["tags"], backend
+        assert ok["message"] == "/x" and not ok["tags"], engine
         bad = [r for r in rows if r["verb"] is None][0]
-        assert "_grokparsefailure" in bad["tags"], backend
+        assert "_grokparsefailure" in bad["tags"], engine
 
 
 def test_auto_backend_sends_quotedstring_to_arrow(spark):
-    """A 1-capture pattern would pick the JVM expr backend, but Java regex
-    overflows its stack on QUOTEDSTRING's loop over a 64 KB quoted field
-    (and takes the local JVM down with it). Under 'auto' any pattern using
-    QUOTEDSTRING runs on RE2 instead."""
+    """Java regex overflows its stack on QUOTEDSTRING's loop over a 64 KB
+    quoted field (and takes the local JVM down with it). RE2 compiles
+    QUOTEDSTRING, so the default runs it there, 1 capture or many."""
     from logstash_spark.operators.grok import grok
     from logstash_spark.plans.checks import physical_plan
 
@@ -319,7 +332,7 @@ def test_auto_backend_sends_quotedstring_to_arrow(spark):
     assert len(row["q"]) == 65538
 
 
-def test_grok_append_to_existing_field_default(spark):
+def test_grok_append_to_existing_field_default(spark, grok_engine):
     """Reference default (filters/base.rb:182-196): a capture landing on an
     EXISTING field appends into an array [existing, captured]; overwrite
     opts out per field; failed rows keep the existing value (1-wrapped
@@ -328,27 +341,28 @@ def test_grok_append_to_existing_field_default(spark):
 
     df = spark.createDataFrame([("GET /x", "orig"), ("###", "keep")],
                                "message string, verb string")
-    for backend in ("expr", "arrow"):
+    for engine in ("expr", "arrow"):
+        with grok_engine(engine):
+            out = grok(df, "message", r"%{WORD:verb} %{GREEDYDATA:message}")
         rows = {r["message"][0] if isinstance(r["message"], list) else r["message"]: r
-                for r in grok(df, "message", r"%{WORD:verb} %{GREEDYDATA:message}",
-                              backend=backend).collect()}
+                for r in out.collect()}
         ok = rows["GET /x"]
         # both verb (existing 'orig') and message (the source) append
-        assert ok["verb"] == ["orig", "GET"], backend
-        assert ok["message"] == ["GET /x", "/x"], backend
+        assert ok["verb"] == ["orig", "GET"], engine
+        assert ok["message"] == ["GET /x", "/x"], engine
         bad = rows["###"]
-        assert bad["verb"] == ["keep"] and bad["message"] == ["###"], backend
-        assert "_grokparsefailure" in bad["tags"], backend
+        assert bad["verb"] == ["keep"] and bad["message"] == ["###"], engine
+        assert "_grokparsefailure" in bad["tags"], engine
 
     # typed append unifies numerically when types agree, else string space
     df2 = spark.createDataFrame([(7, "n=9")], "n long, text string")
-    r = grok(df2, "text", r"n=%{INT:n:int}", backend="expr").collect()[0]
+    r = grok(df2, "text", r"n=%{INT:n:int}").collect()[0]
     assert r["n"] == [7, 9]
 
 
 # Extended base-set patterns (the public grok base file beyond the apache
 # subset): each sample must match — and extract identically — on BOTH
-# backends (Java regex / RE2 share the pattern text).
+# engines (Java regex / RE2 share the pattern text).
 _EXTENDED = [
     ("EMAILADDRESS", "john.doe+tag@mail.example.com"),
     ("HTTPDUSER", "bob@example.com"),
@@ -368,8 +382,8 @@ _EXTENDED = [
 ]
 
 
-@pytest.mark.parametrize("backend", ["expr", "arrow"])
-def test_extended_base_patterns_all_backends(spark, backend):
+@pytest.mark.parametrize("engine", ["expr", "arrow"])
+def test_extended_base_patterns_all_backends(spark, grok_engine, engine):
     from pyspark.sql import functions as F
 
     from logstash_spark.operators.grok import grok
@@ -381,14 +395,14 @@ def test_extended_base_patterns_all_backends(spark, backend):
     rows = [(i, f"### {s}") for i, (_, s) in enumerate(_EXTENDED)]
     df = spark.createDataFrame(rows, "id long, message string")
     for i, (name, s) in enumerate(_EXTENDED):
-        out = grok(
-            df.filter(F.col("id") == i), "message", "%{" + name + ":x}", backend=backend
-        ).collect()[0]
-        assert out["x"] == s, f"{backend}/{name}: {out['x']!r} != {s!r}"
+        with grok_engine(engine):
+            out = grok(df.filter(F.col("id") == i), "message", "%{" + name + ":x}")
+        out = out.collect()[0]
+        assert out["x"] == s, f"{engine}/{name}: {out['x']!r} != {s!r}"
 
 
-@pytest.mark.parametrize("backend", ["expr", "arrow"])
-def test_syslogbase_and_errorlog_captures(spark, backend):
+@pytest.mark.parametrize("engine", ["expr", "arrow"])
+def test_syslogbase_and_errorlog_captures(spark, grok_engine, engine):
     from logstash_spark.operators.grok import grok
 
     df = spark.createDataFrame(
@@ -398,10 +412,82 @@ def test_syslogbase_and_errorlog_captures(spark, backend):
         ],
         "id long, message string",
     )
-    base = grok(df.filter("id = 0"), "message", "%{SYSLOGBASE} %{GREEDYDATA:msg}", backend=backend).collect()[0]
+    with grok_engine(engine):
+        base = grok(df.filter("id = 0"), "message", "%{SYSLOGBASE} %{GREEDYDATA:msg}")
+        err = grok(df.filter("id = 1"), "message", "%{HTTPD24_ERRORLOG}")
+    base = base.collect()[0]
     assert base["logsource"] == "host1" and base["program"] == "sshd" and base["pid"] == "4123"
     assert base["msg"] == "Accepted publickey"
-    err = grok(df.filter("id = 1"), "message", "%{HTTPD24_ERRORLOG}", backend=backend).collect()[0]
+    err = err.collect()[0]
     assert err["module"] == "core" and err["loglevel"] == "error"
     assert err["clientip"] == "1.2.3.4" and err["clientport"] == "5555"
     assert err["message_1"] if "message_1" in err.asDict() else err["message"]
+
+
+_LONG_CAPTURES = """
+import json
+from logstash_spark.operators.grok import grok
+from logstash_spark.session import get_spark
+
+spark = get_spark("grok-long", cores=1)
+out = {}
+for f, pat, text in [("p", "%{UNIXPATH:p}", "/a" * 5000), ("h", "%{HOSTNAME:h}", "a." * 3000)]:
+    row = grok(spark.createDataFrame([(text,)], "s string"), "s", pat).collect()[0]
+    out[pat] = len(row[f]) if row[f] == text else row[f]
+out["alive"] = spark.range(10).count()
+print(json.dumps(out))
+"""
+
+
+def test_long_repeated_group_captures_survive():
+    """The default engine for a 1-capture pattern RE2 compiles is RE2, so a
+    10,000-char UNIXPATH and a 6,000-char HOSTNAME come back whole. On
+    Java regex, which recurses once per iteration of a repeated group,
+    ``/a`` x 2,000 overflowed the stack and took the local JVM down, so
+    this runs in its own process and session."""
+    r = subprocess.run([sys.executable, "-c", _LONG_CAPTURES], cwd=REPO, capture_output=True,
+                       text=True, timeout=300, env={**os.environ, "PYTHONPATH": REPO})
+    assert r.returncode == 0, r.stderr[-4000:]
+    got = json.loads(r.stdout.strip().splitlines()[-1])
+    assert got == {"%{UNIXPATH:p}": 10000, "%{HOSTNAME:h}": 6000, "alive": 10}
+
+
+def test_pattern_re2_rejects_runs_on_jvm(spark):
+    """A lookbehind does not compile in RE2; the pattern runs on Java
+    regex whatever its capture count, with no Python in the plan."""
+    from logstash_spark.operators.grok import grok
+    from logstash_spark.plans.checks import physical_plan
+
+    df = spark.createDataFrame([("queue AB five",), ("AB five",)], "text string")
+    out = grok(df, "text", r"(?<=queue )%{WORD:a} %{WORD:b}")
+    plan = physical_plan(out)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    got = {r["text"]: (r["a"], r["b"], r["tags"]) for r in out.collect()}
+    assert got["queue AB five"] == ("AB", "five", None)
+    assert got["AB five"] == (None, None, ["_grokparsefailure"])
+
+
+def test_mixed_engine_pattern_list_first_match_wins(spark):
+    """A list may mix engines: the lookbehind pattern runs on Java regex,
+    the second on RE2, and the first pattern that matches a row wins."""
+    from logstash_spark.operators.grok import grok
+    from logstash_spark.plans.checks import physical_plan
+
+    df = spark.createDataFrame([("queue AB five",), ("hello big world",), ("!!",)], "text string")
+    out = grok(df, "text", [r"(?<=queue )%{WORD:a} %{WORD:b}", r"^%{WORD:a} %{GREEDYDATA:rest}"])
+    assert "ArrowEvalPython" in physical_plan(out)
+    got = {r["text"]: (r["a"], r["b"], r["rest"], r["tags"]) for r in out.collect()}
+    # the second pattern also matches row 1 (a='queue'), but the first won
+    assert got["queue AB five"] == ("AB", "five", None, None)
+    assert got["hello big world"] == ("hello", None, "big world", None)
+    assert got["!!"] == (None, None, None, ["_grokparsefailure"])
+
+
+def test_dollar_does_not_match_before_final_newline(spark):
+    """RE2's ``$`` is the end of the text only (Java's also matches before
+    a final newline); every pattern RE2 compiles gets RE2's reading."""
+    from logstash_spark.operators.grok import grok
+
+    df = spark.createDataFrame([("abc\n",), ("abc",)], "text string")
+    got = {r["text"]: r["w"] for r in grok(df, "text", r"^%{WORD:w}$").collect()}
+    assert got == {"abc\n": None, "abc": "abc"}

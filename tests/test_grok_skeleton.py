@@ -165,19 +165,20 @@ def test_skeleton_differential(lines, pattern):
     assert_same_as_full(compile_grok(pattern), lines)
 
 
-def test_mixed_spark_batch_matches_full_regex(spark):
+def test_mixed_spark_batch_matches_full_regex(spark, grok_engine):
     """One Arrow batch mixing verified rows, rows whose check fails and
-    rows that do not match: per row, the arrow backend (skeleton +
-    fallback) equals the expr backend (the full regex on the JVM)."""
+    rows that do not match: per row, the arrow engine (skeleton +
+    fallback) equals the expr engine (the full regex on the JVM)."""
     from logstash_spark.operators.grok import grok
 
     # not the 64 KB quoted agent: Java regex overflows its stack on QS there
     lines = [apache(), *HAND[1:11], apache(nbytes="-"), "nope", None, apache(ip="::1")]
     df = spark.createDataFrame(list(enumerate(lines)), "id long, text string").coalesce(1)
     rows = {}
-    for backend in ("expr", "arrow"):
-        rows[backend] = {r["id"]: r.asDict() for r in
-                         grok(df, "text", "%{COMBINEDAPACHELOG}", backend=backend).collect()}
+    for engine in ("expr", "arrow"):
+        with grok_engine(engine):
+            out = grok(df, "text", "%{COMBINEDAPACHELOG}")
+        rows[engine] = {r["id"]: r.asDict() for r in out.collect()}
     assert rows["arrow"] == rows["expr"]
     assert rows["arrow"][2]["rawrequest"] == "G-T /x HTTP/1.1"
     assert rows["arrow"][1]["clientip"] == "b"

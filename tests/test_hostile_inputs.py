@@ -30,11 +30,12 @@ def hostile(spark):
 N = len(HOSTILE)
 
 
-@pytest.mark.parametrize("backend", ["expr", "arrow"])
-def test_grok_hostile(hostile, backend):
+@pytest.mark.parametrize("engine", ["expr", "arrow"])
+def test_grok_hostile(hostile, grok_engine, engine):
     from logstash_spark.operators.grok import grok
 
-    out = grok(hostile, "s", "%{COMBINEDAPACHELOG}", backend=backend)
+    with grok_engine(engine):
+        out = grok(hostile, "s", "%{COMBINEDAPACHELOG}")
     rows = out.collect()
     assert len(rows) == N
     assert all(r["clientip"] is None for r in rows)  # nothing matches

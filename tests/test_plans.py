@@ -38,13 +38,15 @@ def test_e2e_plan_shape(spark):
     plan = physical_plan(_flagship(spark))
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan  # arrow backend => ArrowEvalPython only
+    assert "BatchEvalPython" not in plan  # RE2 engine => ArrowEvalPython only
     assert "ArrowEvalPython" in plan
     assert "CartesianProduct" not in plan
 
 
 def test_e2e_expr_backend_fully_jvm(spark):
-    plan = physical_plan(_flagship(spark, {"backend": "expr"}))
+    """A pattern RE2 rejects (here a lookbehind) runs on Java regex, and
+    the whole flagship chain stays in the JVM."""
+    plan = physical_plan(_flagship(spark, {"patterns": r"(?<!\S)%{COMBINEDAPACHELOG}"}))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 

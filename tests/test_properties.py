@@ -318,7 +318,7 @@ def test_edn_reader_roundtrip(value):
     ]),
 )
 @settings(max_examples=40, deadline=None)
-def test_grok_backends_agree(spark, lines, pattern):
+def test_grok_backends_agree(spark, grok_engine, lines, pattern):
     """expr (JVM regex), arrow (RE2) and a test-side Python ``re`` oracle
     are three INDEPENDENT regex engines running the same compiled pattern
     — they must produce identical captures, match flags and failure tags
@@ -329,9 +329,10 @@ def test_grok_backends_agree(spark, lines, pattern):
         [(i, s) for i, s in enumerate(lines)], "id long, text string"
     ).cache()
     results = {}
-    for backend in ("expr", "arrow"):
-        rows = grok(df, "text", pattern, backend=backend).collect()
-        results[backend] = {
+    for engine in ("expr", "arrow"):
+        with grok_engine(engine):
+            rows = grok(df, "text", pattern).collect()
+        results[engine] = {
             r["id"]: {k: (tuple(v) if isinstance(v, list) else v)
                       for k, v in r.asDict().items() if k != "_grok_matched"}
             for r in rows

@@ -4,7 +4,8 @@ The rule: a registry query or the production job runs it, or it goes.
 This test scans identifiers transitively, without importing anything:
 
 - defs are top-level functions, classes and module-level `NAME = ...`
-  assignments of the package;
+  assignments of the package, also those inside a module-level
+  `try`/`if`/`with` block (a flag set there is a def like any other);
 - roots are the entry points (`jobs/`, `bench.py`, `tools/`,
   `perfbench/*.py`, `__spark_entry__.py`), all of `queries.py` (its
   builders register through `@q`), and every other module-level
@@ -30,6 +31,7 @@ import os
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "logstash_spark")
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_BLOCKS = (ast.If, ast.Try, getattr(ast, "TryStar", ast.Try), ast.With)
 
 
 def _parse(path: str) -> ast.Module:
@@ -65,6 +67,22 @@ def _def_names(stmt: ast.stmt) -> list[str]:
     return names
 
 
+def _module_level(body: list[ast.stmt]):
+    """The module's statements with every `try`/`if`/`with` block opened:
+    its nested statements, then its test, context managers and handler
+    types as bare nodes (roots, since they define nothing)."""
+    for stmt in body:
+        if not isinstance(stmt, _BLOCKS):
+            yield stmt
+            continue
+        handlers = getattr(stmt, "handlers", [])
+        yield from _module_level([*stmt.body, *getattr(stmt, "orelse", []),
+                                  *(s for h in handlers for s in h.body),
+                                  *getattr(stmt, "finalbody", [])])
+        yield from [stmt.test] if isinstance(stmt, ast.If) else getattr(stmt, "items", [])
+        yield from (h.type for h in handlers if h.type is not None)
+
+
 def _is_dunder(name: str) -> bool:
     return name.startswith("__") and name.endswith("__")
 
@@ -83,7 +101,7 @@ def unreached_defs() -> list[str]:
     for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
         tree = _parse(path)
         rel = os.path.relpath(path, ROOT)
-        for stmt in tree.body:
+        for stmt in _module_level(tree.body):
             names = _def_names(stmt)
             if not names:
                 roots |= _idents([stmt])
@@ -103,9 +121,9 @@ def unreached_defs() -> list[str]:
         reached.add(name)
         for _, body in defs.get(name, ()):
             todo.extend(body - reached)
-    return sorted(f"{rel}:{name}" for name, found in defs.items()
+    return sorted({f"{rel}:{name}" for name, found in defs.items()
                   if name not in reached and not _is_dunder(name)
-                  for rel, _ in found)
+                  for rel, _ in found})
 
 
 def test_every_package_def_is_reached_from_an_entry_point():
