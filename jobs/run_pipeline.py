@@ -7,29 +7,32 @@ The north-rule production invocation:
     spark-submit --py-files dist/logstash_spark.zip jobs/run_pipeline.py \\
         --input /path/to/pages_parquet_or_iceberg_table \\
         --out /path/to/outdir \\
-        --manifest /path/to/outdir/lineage.jsonl
+        --manifest /path/to/outdir/lineage.jsonl --by-day
 
-Resumability: with --manifest and --by-day, the input is processed one
-warc_ts day at a time; completed days are recorded atomically and skipped
-on restart (per-partition lineage — logstash_spark.lineage). Day predicates
-prune the scan (partition pruning on a date-partitioned table), so a
-restart only pays for unfinished days.
+Resumability: ``--by-day --manifest`` (one switch) keys the input by its
+``warc_ts`` day, rows without one under the day ``null``. The job runs
+every day the manifest does not list as done in ONE pass, then commits one
+entry per day (its ``rows_in`` and ``rows_out``, the pass's ``wall_s``)
+with one atomic rename (per-partition lineage — logstash_spark.lineage).
+With no day pending it writes nothing. The day filter is not pushed into
+the scan: a restart reads the whole input and drops the finished days.
 
 Delivery: the built-in pipeline adds ``day = to_date(warc_ts)`` to its
 input, and its sinks and ``<out>/agg`` are partitioned by ``day`` and
-written with dynamic partition overwrite. A day that re-runs (a resume
-after a failure between its writes and its manifest record) replaces its
-own partitions, so each input row is written once. ``--conf`` / ``--spec``
-outputs keep their configured modes: an append sink among them is
-at-least-once on resume.
+written with dynamic partition overwrite. A crash before the commit
+re-runs every pending day, not only the last one; the overwrite replaces
+those days' own partitions, so each input row is still written once.
+``--conf`` / ``--spec`` outputs keep their configured modes: an append
+sink among them is at-least-once on resume, with every pending day in its
+duplicate window.
 
-Routing happens once per slice: ``write_outputs`` evaluates the ``Output``
+Routing happens once per pass: ``write_outputs`` evaluates the ``Output``
 predicates over the persisted transformed frame and writes every sink. The
 built-in outputs carry ``agg_by=["day", "lang"]``, so the per-sink
 aggregate is grouped off that same cached frame; its rows ``(sink, day,
-lang, n)`` are written to ``<out>/agg`` and their per-sink sums are the
-``rows_out`` of the slice. ``rows_in`` is the row count the parse
-Observation saw. Outputs without ``agg_by`` (``--conf`` / ``--spec``
+lang, n)`` are written to ``<out>/agg`` and their per-day sums are each
+day's ``rows_out``. A day's ``rows_in`` is a ``count_if`` in the parse
+Observation. Outputs without ``agg_by`` (``--conf`` / ``--spec``
 pipelines) add no aggregate and no ``rows_out`` entry.
 
 `--input synthetic:N` generates the deterministic page table in-place
@@ -42,6 +45,7 @@ import argparse
 import json
 import os
 import sys
+import time
 
 # spark-submit ships the package via --py-files; when run as plain
 # `python jobs/run_pipeline.py` the repo root must be on sys.path too
@@ -53,13 +57,16 @@ def build_args():
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="pages parquet path, Iceberg table, or synthetic:N")
     p.add_argument("--out", required=True, help="output directory (sinks + aggregates)")
-    p.add_argument("--manifest", default=None, help="lineage manifest path (enables resume)")
-    p.add_argument("--by-day", action="store_true", help="process per warc_ts day with lineage")
+    p.add_argument("--manifest", default=None, help="lineage manifest path (enables resume; needs --by-day)")
+    p.add_argument("--by-day", action="store_true", help="key the manifest by warc_ts day (needs --manifest)")
     p.add_argument("--spec", default=None,
                    help="JSON pipeline spec (logstash_spark.spec) overriding the built-in pipeline")
     p.add_argument("--conf", default=None,
                    help="Logstash .conf file compiled via logstash_spark.conf (filter+output sections)")
-    return p.parse_args()
+    args = p.parse_args()
+    if args.by_day != (args.manifest is not None):
+        p.error("--by-day and --manifest go together")
+    return args
 
 
 def build_pipeline(out_dir: str):
@@ -105,7 +112,9 @@ def main() -> None:
     else:
         pages = read_pages(spark, args.input)
 
-    day = F.to_date("warc_ts")
+    # the one day column: it keys --by-day and partitions the built-in sinks;
+    # under --conf / --spec it is @metadata, which every sink strips
+    day = "_meta_warc_day"
     if args.conf:
         from logstash_spark.conf import compile_file
 
@@ -116,41 +125,48 @@ def main() -> None:
         pipe = from_file(args.spec)
     else:
         pipe = build_pipeline(args.out)
-        # the one day column: it slices --by-day and partitions the sinks
-        pages = pages.withColumn("day", day)
-        day = F.col("day")
+        day = "day"
+    pages = pages.withColumn(day, F.to_date("warc_ts"))
     if not pipe.outputs:
         sys.exit("run_pipeline: the pipeline has no outputs")
     pm = PipelineMetrics()
+    key = F.coalesce(F.col(day).cast("string"), F.lit("null"))  # the manifest entry of a row's day
+    pending = []
+    if args.manifest:
+        from logstash_spark.lineage import LineageManifest
 
-    def run_slice(df, name: str) -> tuple[int, dict[str, int]]:
-        """Route and write one slice in a single pass; returns (rows_in,
-        {sink: rows}) for every output with an ``agg_by`` aggregate."""
-        stage = f"parse@{name}"
-        observed = pm.observe(pipe.transform(df), stage,
-                              failure_tags=["_grokparsefailure", "_dateparsefailure"])
+        manifest = LineageManifest.load(args.manifest)
+        pending = sorted(r[0] for r in pages.select(key).distinct().collect() if not manifest.is_done(r[0]))
+        if not pending:
+            print(json.dumps({"days": []}))
+            return
+        pages = pages.filter(key.isin(pending))
+
+    def run_slice(df) -> dict[str, dict]:
+        """Route and write ``df`` in a single pass; returns {sink: {(day,
+        lang): rows}} for every output with an ``agg_by`` aggregate."""
+        observed = pm.observe(pipe.transform(df), "parse",
+                              failure_tags=["_grokparsefailure", "_dateparsefailure"],
+                              counts={f"rows@{k}": key == k for k in pending})
         results = write_outputs(observed, pipe.outputs)
         aggs = {o.name: results[f"{o.name}__agg"] for o in pipe.outputs if o.agg_by}
         rows = [(sink, d, lang, n) for sink, agg in aggs.items() for (d, lang), n in agg.items()]
         if rows:
             spark.createDataFrame(rows, "sink string, day date, lang string, n long").write \
                 .mode("overwrite").partitionBy("day").parquet(os.path.join(args.out, "agg"))
-        return pm.observations[stage].get["rows"], {s: sum(a.values()) for s, a in aggs.items()}
+        return aggs
 
-    if args.by_day and args.manifest:
-        from logstash_spark.lineage import run_partitioned
-
-        days = [r["d"] for r in pages.select(day.alias("d")).distinct().orderBy("d").collect()]
-
-        def job(d: str):
-            return run_slice(pages.filter(day == d), d)
-
-        manifest = run_partitioned(spark, [str(d) for d in days], job, args.manifest)
-        print(json.dumps({"days": len(manifest.entries), "metrics": pm.report()}))
-    else:
-        _rows_in, counts = run_slice(pages, "all")
-        print(json.dumps({"sinks": counts, "metrics": pm.report()}))
-
+    t0 = time.time()
+    aggs = run_slice(pages)
+    if pending:
+        rows_in = pm.observations["parse"].get
+        rows_out = {k: dict.fromkeys(aggs, 0) for k in pending}
+        for sink, agg in aggs.items():
+            for (d, _lang), n in agg.items():
+                rows_out[str(d or "null")][sink] += n
+        manifest.commit({k: (rows_in[f"rows@{k}"], rows_out[k]) for k in pending}, wall_s=time.time() - t0)
+    print(json.dumps({"days": pending, "sinks": {s: sum(a.values()) for s, a in aggs.items()},
+                      "metrics": pm.report()}))
 
 if __name__ == "__main__":
     sys.exit(main())

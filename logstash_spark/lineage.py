@@ -3,8 +3,8 @@
 North rule: "resumable from checkpoint with per-partition lineage". In
 streaming, Structured Streaming's checkpointLocation covers it. For batch
 backfills over a 100 TB table the equivalent is a PROCESSED-PARTITION
-MANIFEST: the input is processed one coarse partition at a time (e.g. one
-warc_ts day), each completed partition is recorded atomically, and a
+MANIFEST: the input is keyed by a coarse partition (e.g. one warc_ts day),
+a pass records every partition it completed in one atomic commit, and a
 restarted job skips completed partitions — per-partition lineage records
 what input produced what output.
 
@@ -52,18 +52,14 @@ class LineageManifest:
     def is_done(self, partition: str) -> bool:
         return self.entries.get(partition, {}).get("status") == "done"
 
-    def record(self, partition: str, *, rows_in: int, rows_out: dict[str, int], wall_s: float, extra: dict | None = None) -> None:
-        """Append-atomic record of a completed partition (rename-commit)."""
-        e = {
-            "partition": partition,
-            "status": "done",
-            "rows_in": rows_in,
-            "rows_out": rows_out,
-            "wall_s": round(wall_s, 3),
-            "ts": time.time(),
-            **(extra or {}),
-        }
-        self.entries[partition] = e
+    def commit(self, done: dict[str, tuple[int, dict[str, int]]], *, wall_s: float) -> None:
+        """Record every partition one pass completed, ``{partition:
+        (rows_in, {sink: rows_out})}``, with one fsync + rename: a crash
+        leaves all of them recorded or none."""
+        ts = time.time()
+        for p, (rows_in, rows_out) in done.items():
+            self.entries[p] = {"partition": p, "status": "done", "rows_in": rows_in,
+                               "rows_out": rows_out, "wall_s": round(wall_s, 3), "ts": ts}
         d = os.path.dirname(self.path) or "."
         os.makedirs(d, exist_ok=True)
         fd, tmp = tempfile.mkstemp(dir=d)
@@ -85,25 +81,3 @@ class LineageManifest:
                 os.close(dfd)
         except OSError:  # not all mounts support dir fsync
             pass
-
-
-def run_partitioned(
-    spark,
-    partitions: list[str],
-    job,  # Callable[[str], tuple[int, dict[str, int]]] -> (rows_in, rows_out)
-    manifest_path: str,
-) -> LineageManifest:
-    """Drive a batch backfill partition-by-partition with resume.
-
-    ``job(partition)`` processes exactly one input partition (its WHERE
-    clause prunes the scan — partition pruning makes the restart cheap) and
-    returns (rows_in, {sink: rows_out}).
-    """
-    manifest = LineageManifest.load(manifest_path)
-    for p in partitions:
-        if manifest.is_done(p):
-            continue
-        t0 = time.time()
-        rows_in, rows_out = job(p)
-        manifest.record(p, rows_in=rows_in, rows_out=rows_out, wall_s=time.time() - t0)
-    return manifest

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -21,10 +21,13 @@ from pyspark.sql import functions as F
 class PipelineMetrics:
     observations: dict[str, Observation] = field(default_factory=dict)
 
-    def observe(self, df: DataFrame, stage: str, *, failure_tags: list[str] | None = None) -> DataFrame:
-        """Attach counters to the plan at this stage."""
+    def observe(self, df: DataFrame, stage: str, *, failure_tags: list[str] | None = None,
+                counts: dict[str, Column] | None = None) -> DataFrame:
+        """Attach counters to the plan at this stage: ``rows``, one count
+        per failure tag, and one ``count_if`` per named predicate."""
         obs = Observation(stage)
         metrics = [F.count(F.lit(1)).alias("rows")]
+        metrics += [F.count_if(c).alias(name) for name, c in (counts or {}).items()]
         if failure_tags and "tags" in df.columns:
             for t in failure_tags:
                 metrics.append(

@@ -1,34 +1,31 @@
 """Checkpoint/resume (per-partition lineage manifest) + pipeline metrics."""
 
-from pyspark.sql import functions as F
 
-
-def test_lineage_resume(spark, tmp_path):
-    """run_partitioned skips completed partitions on restart — the batch
+def test_lineage_resume(tmp_path):
+    """A restart skips the partitions the manifest lists as done, a new
+    partition runs, and the manifest survives reload — the batch
     checkpoint/resume contract of the north rule."""
-    from logstash_spark.lineage import LineageManifest, run_partitioned
+    from logstash_spark.lineage import LineageManifest
 
     manifest_path = str(tmp_path / "manifest.jsonl")
-    processed = []
-
-    def job(p):
-        processed.append(p)
-        return 10, {"sink": 10}
-
     parts = ["2013-01-01", "2013-01-02", "2013-01-03"]
-    m = run_partitioned(spark, parts, job, manifest_path)
-    assert processed == parts
+    m = LineageManifest.load(manifest_path)
+    assert not any(m.is_done(p) for p in parts)
+    m.commit({p: (10, {"sink": 10}) for p in parts}, wall_s=1.0)
     assert all(m.is_done(p) for p in parts)
 
-    # restart: nothing reruns; a new partition runs
-    processed.clear()
-    m2 = run_partitioned(spark, parts + ["2013-01-04"], job, manifest_path)
-    assert processed == ["2013-01-04"]
+    # restart: done partitions are skipped; a new one runs
+    m2 = LineageManifest.load(manifest_path)
+    pending = [p for p in parts + ["2013-01-04"] if not m2.is_done(p)]
+    assert pending == ["2013-01-04"]
+    m2.commit({"2013-01-04": (5, {"sink": 5})}, wall_s=1.0)
     assert m2.entries["2013-01-01"]["rows_out"] == {"sink": 10}
+    assert m2.entries["2013-01-04"]["rows_in"] == 5
 
     # manifest survives reload
     m3 = LineageManifest.load(manifest_path)
     assert len(m3.entries) == 4
+    assert m3.entries == m2.entries
 
 
 def test_metrics_observe_single_pass(spark):
@@ -55,9 +52,8 @@ def test_lineage_manifest_tolerates_truncated_tail(tmp_path):
     from logstash_spark.lineage import LineageManifest
 
     p = str(tmp_path / "m.jsonl")
-    m = LineageManifest.load(p)
-    m.record("2024-01-01", rows_in=10, rows_out={"ok": 10}, wall_s=1.0)
-    m.record("2024-01-02", rows_in=20, rows_out={"ok": 20}, wall_s=1.0)
+    LineageManifest.load(p).commit({"2024-01-01": (10, {"ok": 10}), "2024-01-02": (20, {"ok": 20})},
+                                   wall_s=1.0)
     with open(p, "a") as f:
         f.write('{"partition": "2024-01-03", "status": "do')  # torn write
     m2 = LineageManifest.load(p)

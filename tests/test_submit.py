@@ -182,3 +182,131 @@ def test_run_pipeline_rejects_pipeline_without_outputs(tmp_path):
     r = subprocess.run(cmd, capture_output=True, text=True, timeout=420, env=env)
     assert r.returncode == 1
     assert "the pipeline has no outputs" in r.stderr
+
+
+JOB = os.path.join(REPO, "jobs", "run_pipeline.py")
+
+
+def _run_job_here(spark, monkeypatch, *argv: str) -> None:
+    """The job in this process through ``runpy``, as perfbench's
+    ``job_invoke`` runs it; its ``getOrCreate`` attaches to ``spark``."""
+    import runpy
+
+    monkeypatch.setattr(sys, "argv", [JOB, *argv])
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    try:
+        with pytest.raises(SystemExit) as e:
+            runpy.run_path(JOB, run_name="__main__")
+        assert e.value.code in (None, 0)
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", mode)
+
+
+def test_run_pipeline_by_day_one_pass_writes_each_sink_once(spark, tmp_path, monkeypatch):
+    """A 3-day invocation writes ``errors``, ``ok`` and ``<out>/agg`` once
+    each and commits its three manifest entries with one rename."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    inp = _multi_day_pages(spark, str(tmp_path / "pages"))
+    out_dir = str(tmp_path / "out")
+    manifest = str(tmp_path / "lineage.jsonl")
+    writes, renames = [], []
+    parquet, replace = DataFrameWriter.parquet, os.replace
+
+    def counting_parquet(self, path, *a, **kw):
+        writes.append(os.path.relpath(path, out_dir))
+        return parquet(self, path, *a, **kw)
+
+    def counting_replace(src, dst):
+        renames.append(dst)
+        return replace(src, dst)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    monkeypatch.setattr(os, "replace", counting_replace)
+    _run_job_here(spark, monkeypatch, "--input", inp, "--out", out_dir,
+                  "--manifest", manifest, "--by-day")
+    assert sorted(writes) == ["agg", "errors", "ok"]
+    assert renames.count(manifest) == 1
+    entries = [json.loads(l) for l in open(manifest)]
+    assert len(entries) == 3
+    assert len({(e["ts"], e["wall_s"]) for e in entries}) == 1  # one pass, one commit
+    assert sum(e["rows_in"] for e in entries) == 3000
+    for e in entries:
+        assert e["rows_in"] == e["rows_out"]["errors"] + e["rows_out"]["ok"]
+
+
+def test_run_pipeline_by_day_null_warc_ts(spark, tmp_path, monkeypatch):
+    """Rows without a ``warc_ts`` run under one ``null`` manifest entry and
+    land in the sinks' default partition: each row is written once, a
+    resume after losing that entry replaces it, and a resume with every
+    entry done skips it."""
+    from logstash_spark.sources.pages import synthetic_pages
+
+    inp = str(tmp_path / "pages")
+    synthetic_pages(spark, 300).withColumn(
+        "warc_ts", F.when(F.second("warc_ts") % 10 != 0, F.col("warc_ts"))
+    ).write.parquet(inp)
+    out_dir = str(tmp_path / "out")
+    manifest = str(tmp_path / "lineage.jsonl")
+    argv = ("--input", inp, "--out", out_dir, "--manifest", manifest, "--by-day")
+
+    def sink_days():
+        df = spark.read.parquet(os.path.join(out_dir, "errors")).unionByName(
+            spark.read.parquet(os.path.join(out_dir, "ok")))
+        return {str(r["day"]) if r["day"] else "null": r["n"]
+                for r in df.groupBy("day").agg(F.count(F.lit(1)).alias("n")).collect()}
+
+    _run_job_here(spark, monkeypatch, *argv)
+    entries = {e["partition"]: e for e in map(json.loads, open(manifest))}
+    assert entries["null"]["rows_in"] == 30
+    assert {p: e["rows_in"] for p, e in entries.items()} == sink_days()
+    assert sum(sink_days().values()) == 300
+
+    # a crash before the null entry's commit: the resume replaces its rows
+    lines = open(manifest).read().splitlines()
+    with open(manifest, "w") as f:
+        f.write("".join(l + "\n" for l in lines if json.loads(l)["partition"] != "null"))
+    _run_job_here(spark, monkeypatch, *argv)
+    assert sum(sink_days().values()) == 300
+    committed = open(manifest, "rb").read()
+    assert {json.loads(l)["partition"] for l in committed.splitlines()} == set(entries)
+
+    # nothing pending: no write, the manifest is left byte-identical
+    _run_job_here(spark, monkeypatch, *argv)
+    assert open(manifest, "rb").read() == committed
+    assert sum(sink_days().values()) == 300
+
+
+def test_run_pipeline_conf_removing_warc_ts_by_day(spark, tmp_path, monkeypatch):
+    """The day is keyed before the filters run, so a --conf pipeline that
+    removes ``warc_ts`` still resumes by day, and its outputs carry no
+    day column of the job's."""
+    import pyarrow.parquet as pq
+
+    conf = tmp_path / "rm.conf"
+    conf.write_text('filter { mutate { remove_field => ["warc_ts"] } }\n'
+                    'output { file { path => "seen" } }\n')
+    out_dir = str(tmp_path / "out")
+    manifest = str(tmp_path / "lineage.jsonl")
+    _run_job_here(spark, monkeypatch, "--input", "synthetic:200", "--out", out_dir, "--conf", str(conf),
+                  "--manifest", manifest, "--by-day")
+    assert [(e["partition"], e["rows_in"]) for e in map(json.loads, open(manifest))] == [("2013-01-01", 200)]
+    seen = pq.read_table(os.path.join(out_dir, "seen"))
+    assert seen.num_rows == 200
+    assert sorted(seen.column_names) == ["html", "lang", "text", "url"]
+
+
+@pytest.mark.parametrize("flag", [("--by-day",), ("--manifest", "lineage.jsonl")],
+                         ids=["by_day_without_manifest", "manifest_without_by_day"])
+def test_run_pipeline_by_day_flags_go_together(tmp_path, monkeypatch, capsys, flag):
+    """``--by-day`` and ``--manifest`` are one switch: either alone is a
+    usage error (exit 2), not a run that records nothing."""
+    import runpy
+
+    monkeypatch.setattr(sys, "argv", [JOB, "--input", "synthetic:10", "--out", str(tmp_path), *flag])
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    with pytest.raises(SystemExit) as e:
+        runpy.run_path(JOB, run_name="__main__")
+    assert e.value.code == 2
+    assert "--by-day and --manifest go together" in capsys.readouterr().err

@@ -312,3 +312,22 @@ def test_useragent_rejects_bad_regex_at_plan_time(spark):
     df = spark.createDataFrame([Row(agent="x")])
     with pytest.raises(re.error):
         useragent(df, "agent", tables={"ua": [{"family": "X", "regex": "(?<n>x)"}]})
+
+
+def test_useragent_compiles_default_tables_once(spark, monkeypatch):
+    """The vendored tables compile once per process; tables passed as
+    ``tables=`` compile on every call."""
+    from logstash_spark.operators import enrich
+
+    df = spark.createDataFrame([Row(agent="x")])
+    useragent(df, "agent")  # the cached compile, if no earlier plan made it
+    compiled = []
+    compile_ = enrich._uap_compile
+    monkeypatch.setattr(enrich, "_uap_compile", lambda parsers: compiled.append(parsers) or compile_(parsers))
+    useragent(df, "agent")
+    useragent(df, "agent")
+    assert compiled == []
+    custom = [{"family": "X", "regex": "x"}]
+    useragent(df, "agent", tables={"ua": custom})
+    useragent(df, "agent", tables={"ua": custom})
+    assert compiled == [custom, custom]

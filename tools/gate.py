@@ -8,7 +8,7 @@ any operator change so every round's driver sample is drawn from a
 fully-green pool (VERDICT r3 "Next round" #7).
 
 Usage:
-    python tools/gate.py            # oracles @ sf0.01 + sf0.1, plan audit
+    python tools/gate.py            # oracles @ sf0.01 + sf0.1, plan audit, job resume
     python tools/gate.py --full     # also the full pytest suite
     python tools/gate.py --quick    # oracles @ sf0.01 only
 
@@ -30,6 +30,8 @@ STAGES_DEFAULT = [
     ("oracles sf0.01", [sys.executable, "tools/check_oracles.py", "/root/testdata/sf0.01"]),
     ("oracles sf0.1", [sys.executable, "tools/check_oracles.py", "/root/testdata/sf0.1"]),
     ("plan audit", [sys.executable, "tools/audit_plans.py", "/root/testdata/sf0.001"]),
+    # the shipped job's exactly-once resume contract (about two minutes)
+    ("job resume", [sys.executable, "-m", "pytest", "tests/test_submit.py", "-q", "-k", "by_day or resume"]),
 ]
 
 
